@@ -285,8 +285,10 @@ class TDigest:
             # centroids (side='left' against the centroid array), which
             # reproduces exactly what the stable argsort of
             # [temp, centroids] yields (temp first among equals —
-            # README.md:35-42; Sort.java:37-43).
-            buf = np.sort(self._tmean[:self._tcount])
+            # README.md:35-42; Sort.java:37-43).  The one tie introsort
+            # could reorder visibly, 0.0 vs -0.0, is put back in input
+            # order.
+            buf = _sort_ties_stable(self._tmean[:self._tcount])
             if nc == 0:
                 m = buf
                 w = np.ones(n, dtype=np.float64)
@@ -922,6 +924,17 @@ class TDigest:
                 f"centroids={self._ncentroids})")
 
 
+def _sort_ties_stable(x: np.ndarray) -> np.ndarray:
+    """``np.sort(x, kind="stable")`` for NaN-free floats at introsort
+    speed: 0.0 and -0.0 are the only equal values with different bits,
+    so only the run of zeros needs its input order restored."""
+    s = np.sort(x)
+    lo, hi = s.searchsorted(0.0, "left"), s.searchsorted(0.0, "right")
+    if hi - lo > 1:
+        s[lo:hi] = x[x == 0]
+    return s
+
+
 # probe digests for try_singleton_blob, one per (compression,
 # buffer_size, scale-name): only read for their derived working
 # compression / flag set, never mutated; paired with a per-n
@@ -989,9 +1002,17 @@ def try_singleton_blob(values: np.ndarray, compression: float = 100.0,
         elig_cache[n] = ok
     if not ok:
         return None
-    s = np.sort(values)
-    head = struct.pack(">iddd i", _VERBOSE_ENCODING, float(s[0]),
-                       float(s[-1]), probe.public_compression, n)
+    # stable, like the full path: 0.0 and -0.0 tie but differ in their
+    # bytes — so a zero at either end is re-read the way add_batch
+    # takes its min/max
+    s = np.sort(values, kind="stable")
+    mn, mx = float(s[0]), float(s[-1])
+    if mn == 0:
+        mn = float(values.min())
+    if mx == 0:
+        mx = float(values.max())
+    head = struct.pack(">iddd i", _VERBOSE_ENCODING, mn, mx,
+                       probe.public_compression, n)
     pairs = np.empty((n, 2), dtype=">f8")
     pairs[:, 0] = 1.0
     pairs[:, 1] = s

@@ -15,8 +15,8 @@ Semantics preserved:
   (FloatHistogram.java:139-152).
 
 Mergeability means the Spark aggregation is the same two-stage
-partial/merge pattern as every other sketch here; see
-``histogram_aggregate`` in operators/sketch_agg-style form below.
+partial/merge engine as every other sketch here: ``histogram_aggregate``
+below plugs a histogram codec into operators/aggregate.py.
 
 ``Simple64`` bitpacking (Simple64.java:49-971) is intentionally not
 ported: parquet/ZSTD already compresses the counts (SURVEY.md §2.A14).
@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import math
 import struct
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 
@@ -226,21 +226,13 @@ def histogram_aggregate(df, value_col: str, group_cols: Sequence[str] = (),
     the bucket function is a pure expression of the float bits of
     value/min.  Returns group_cols..., histogram binary, rows long.
     """
-    import pandas as pd
-    import pyarrow as pa
-
     from pyspark.sql import functions as F
-    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+
+    from ..operators.aggregate import aggregate_sketches, object_codec
 
     group_cols = list(group_cols)
     narrow = df.where(F.col(value_col).isNotNull()) \
-        .select(*(list(group_cols) + [value_col]))
-    n_keys = len(group_cols)
-    out_schema = StructType(
-        [narrow.schema[c] for c in group_cols]
-        + [StructField("histogram", BinaryType(), False),
-           StructField("rows", LongType(), False)]
-    )
+        .select(*(group_cols + [value_col]))
 
     def make():
         if kind == "float":
@@ -249,85 +241,6 @@ def histogram_aggregate(df, value_col: str, group_cols: Sequence[str] = (),
         return LogHistogram(min_, max_,
                             params.get("epsilon_factor", 0.1))
 
-    def build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow.compute as pc
-
-        acc, counts = {}, {}
-        key_types = [None] * n_keys
-        for batch in batches:
-            v = batch.column(n_keys).to_numpy(zero_copy_only=False)
-            ok = ~np.isnan(v)
-            if n_keys == 0:
-                vv = v[ok]
-                if vv.size:
-                    h = acc.setdefault((), make())
-                    counts[()] = counts.get((), 0) + vv.size
-                    h.add(vv)
-                continue
-            combined = None
-            for i in range(n_keys):
-                key_types[i] = batch.schema.field(i).type
-                enc = pc.dictionary_encode(batch.column(i))
-                codes = pc.fill_null(enc.indices, -1).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                combined = codes + 1 if combined is None \
-                    else combined * (len(enc.dictionary) + 1) + (codes + 1)
-            combined = np.where(ok, combined, -1)
-            order = np.argsort(combined, kind="stable")
-            sc = combined[order]
-            bounds = np.flatnonzero(np.diff(sc)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [sc.size]))
-            sv = v[order]
-            for s, e in zip(starts, ends):
-                if sc[s] < 0:
-                    continue
-                row0 = order[s]
-                key = tuple(batch.column(i)[row0].as_py()
-                            for i in range(n_keys))
-                h = acc.get(key)
-                if h is None:
-                    h = make()
-                    acc[key] = h
-                    counts[key] = 0
-                h.add(sv[s:e])
-                counts[key] += e - s
-        if acc:
-            keys = list(acc.keys())
-            arrays = [pa.array([k[i] for k in keys], type=key_types[i])
-                      for i in range(n_keys)]
-            arrays.append(pa.array([acc[k].to_bytes() for k in keys],
-                                   type=pa.binary()))
-            arrays.append(pa.array([counts[k] for k in keys],
-                                   type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=group_cols + ["histogram", "rows"])
-
-    partials = narrow.mapInArrow(build, schema=out_schema)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        hs = [histogram_from_bytes(bytes(b)) for b in pdf["histogram"]]
-        out = hs[0]
-        for h in hs[1:]:
-            out.merge(h)
-        head = {c: [pdf[c].iloc[0]] for c in group_cols}
-        head["histogram"] = [out.to_bytes()]
-        head["rows"] = [int(pdf["rows"].sum())]
-        return pd.DataFrame(head)
-
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(
-            merge, schema=out_schema)
-
-    def merge_gen(batches):
-        out, rows = None, 0
-        for pdf in batches:
-            for b in pdf["histogram"]:
-                h = histogram_from_bytes(bytes(b))
-                out = h if out is None else out.merge(h)
-            rows += int(pdf["rows"].sum())
-        if out is None:
-            out = make()
-        yield pd.DataFrame({"histogram": [out.to_bytes()], "rows": [rows]})
-
-    return partials.repartition(1).mapInPandas(merge_gen, schema=out_schema)
+    codec = object_codec("histogram", make, lambda h, v, w: h.add(v),
+                         histogram_from_bytes)
+    return aggregate_sketches(narrow, group_cols, codec)

@@ -23,7 +23,7 @@ import zlib
 import numpy as np
 import pandas as pd
 
-from ..operators._arrow_agg import grouped_sketch_aggregate
+from ..operators.aggregate import aggregate_sketches, object_codec
 
 __all__ = ["KLLSketch", "kll_aggregate", "kll_quantiles_of"]
 
@@ -203,13 +203,9 @@ def kll_aggregate(df, value_col: str, group_cols=(), k: int = 200,
     analysis requires that; perfectly correlated flips make errors add
     coherently.  Pass an int to force one shared seed (reproducibility
     experiments only)."""
-    def merge_blobs(blobs: list[bytes]) -> bytes:
-        sks = [KLLSketch.from_bytes(b) for b in blobs]
-        out = sks[0]
-        for s in sks[1:]:
-            out.merge(s)
-        return out.to_bytes()
+    from pyspark.sql import functions as F
 
+    group_cols = list(group_cols)
     counter = [0]
 
     def make() -> KLLSketch:
@@ -222,14 +218,11 @@ def kll_aggregate(df, value_col: str, group_cols=(), k: int = 200,
         return KLLSketch(k, seed=zlib.crc32(
             b"kll:%d:%d" % (pid, counter[0])))
 
-    return grouped_sketch_aggregate(
-        df, value_col, list(group_cols),
-        make=make,
-        update=lambda sk, v: sk.update(v),
-        to_bytes=lambda sk: sk.to_bytes(),
-        merge_blobs=merge_blobs,
-        out_field="kll",
-    )
+    narrow = df.where(F.col(value_col).isNotNull()) \
+        .select(*(group_cols + [value_col]))
+    codec = object_codec("kll", make, lambda sk, v, w: sk.update(v),
+                         KLLSketch.from_bytes)
+    return aggregate_sketches(narrow, group_cols, codec)
 
 
 def kll_quantiles_of(kll_col, qs):

@@ -1,17 +1,20 @@
-"""Distributed t-digest aggregation over Spark DataFrames.
+"""Distributed sketch aggregation over Spark DataFrames — the one
+two-stage engine every mergeable sketch in this library runs through
+(t-digest, KLL, histogram, count-min, Bloom, HLL).
 
 Execution model (SURVEY.md §3.2, designed for 100 TB inputs):
 
-  stage 1  ``partial_digests``  — mapInPandas over the *unshuffled* scan:
-           each input partition builds one digest per group key from
+  stage 1  ``_sketch_partials`` — mapInArrow over the *unshuffled* scan:
+           each input partition builds one sketch per group key from
            Arrow batches (NumPy-vectorized, zero per-row Python).  Output
-           is (group keys..., digest binary) — ~1 KB per (partition, key).
-           This is map-side partial aggregation: the 100 TB of raw rows
-           never shuffle; only sketches do.
+           is (group keys..., sketch binary, rows) — ~1 KB per
+           (partition, key).  This is map-side partial aggregation: the
+           100 TB of raw rows never shuffle; only sketches do.
 
-  stage 2  ``merge_digests_df``  — groupBy(keys) over the tiny digest
-           table + applyInPandas merge (MergingDigest.add(List) semantics,
-           one concatenated merge pass per group).
+  stage 2  ``_merge_sketches`` — repartition(keys) over the tiny sketch
+           table + a whole-partition mapInArrow merge (for digests,
+           MergingDigest.add(List) semantics: one concatenated merge
+           pass per group).
 
   optional ``tree_merge`` — for extreme partition counts (10^5+ partials
            per key) an intermediate salt level bounds any single reduce
@@ -20,8 +23,12 @@ Execution model (SURVEY.md §3.2, designed for 100 TB inputs):
            hold for arbitrary splits), so salting/skew handling costs
            nothing in correctness.
 
+A sketch family plugs in through a ``SketchCodec``; the engine owns
+the group keys (canonical NaN / -0.0 / nested keys), chunk parking,
+the NULL/NaN value and weight filter, and the exchange.
+
 Skewed group keys (e.g. hot conv_id / role values) are a non-issue in
-stage 1 — each partition emits at most one digest per key regardless of
+stage 1 — each partition emits at most one sketch per key regardless of
 row skew — and bounded in stage 2 by ``tree_merge``.
 
 Digests travel as the reference-compatible VERBOSE byte encoding
@@ -31,15 +38,12 @@ per centroid, see core.to_small_bytes).
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Sequence
+from typing import Callable, NamedTuple, Sequence
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    BinaryType, DoubleType, LongType, StructField, StructType,
-)
+from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
 from ..core import TDigest, merge_blobs, merge_digests, try_singleton_blob
 
@@ -49,7 +53,11 @@ __all__ = [
     "tree_merge",
     "tdigest_aggregate",
     "tdigest_collect",
-    "DigestAccumulator",
+    "SketchCodec",
+    "SketchAccumulator",
+    "aggregate_sketches",
+    "digest_codec",
+    "object_codec",
     "DIGEST_FIELD",
 ]
 
@@ -119,15 +127,167 @@ def _shuffle_partitions(df: DataFrame) -> int:
 DEFAULT_BUFFER = 1 << 16
 
 
-def _digest_schema(df: DataFrame, group_cols: Sequence[str]) -> StructType:
-    fields = [df.schema[c] for c in group_cols]
+class SketchCodec(NamedTuple):
+    """How the engine builds, serializes and merges one sketch family.
+
+    ``new() -> sketch``; ``update(sketch, values, weights)`` takes NumPy
+    slices of one group's rows (``weights`` is None for unweighted
+    aggregates); ``to_bytes(sketch)`` is the stage-1 partial blob;
+    ``merge_blobs(list[bytes]) -> bytes`` is the stage-2 result, and is
+    called with ``[]`` for a global aggregate over no input.  The
+    optional ``pack(values) -> bytes | None`` serializes a small
+    unweighted group without building a sketch (None declines).  A key
+    parks up to ``chunk_rows`` rows before they reach ``update``."""
+
+    field: str
+    new: Callable[[], object]
+    update: Callable[[object, np.ndarray, np.ndarray | None], None]
+    to_bytes: Callable[[object], bytes]
+    merge_blobs: Callable[[list], bytes]
+    pack: Callable[[np.ndarray], bytes | None] | None = None
+    chunk_rows: int = DEFAULT_BUFFER
+
+
+def digest_codec(compression: float, scale: str,
+                 buffer_size: int = DEFAULT_BUFFER) -> SketchCodec:
+    """The t-digest: uncompressed VERBOSE partials, one
+    ``core.merge_blobs`` pass per key in stage 2, and the bit-identical
+    singleton packing (``core.try_singleton_blob``) for small keys."""
+    return SketchCodec(
+        DIGEST_FIELD,
+        new=lambda: TDigest(compression, buffer_size=buffer_size,
+                            scale=scale),
+        update=lambda d, v, w: d.add_batch(v, w),
+        to_bytes=lambda d: d.to_bytes(compress=False),
+        merge_blobs=lambda blobs: merge_blobs(
+            blobs, compression=compression, scale=scale).to_bytes(),
+        pack=lambda v: try_singleton_blob(v, compression, buffer_size,
+                                          scale),
+        chunk_rows=buffer_size)
+
+
+def object_codec(field: str, new: Callable[[], object], update,
+                 from_bytes: Callable[[bytes], object]) -> SketchCodec:
+    """Codec for a sketch class with ``to_bytes`` and an in-place
+    ``merge`` (KLL, histograms, count-min, Bloom, HLL)."""
+    def merge(blobs: list) -> bytes:
+        out = from_bytes(blobs[0]) if blobs else new()
+        for b in blobs[1:]:
+            out.merge(from_bytes(b))
+        return out.to_bytes()
+
+    return SketchCodec(field, new, update, lambda sk: sk.to_bytes(), merge)
+
+
+def _sketch_schema(df: DataFrame, group_cols: Sequence[str],
+                   field: str) -> StructType:
     return StructType(
-        list(fields)
-        + [
-            StructField(DIGEST_FIELD, BinaryType(), False),
-            StructField("rows", LongType(), False),
-        ]
-    )
+        [df.schema[c] for c in group_cols]
+        + [StructField(field, BinaryType(), False),
+           StructField("rows", LongType(), False)])
+
+
+def _needs_canon(t) -> bool:
+    """Whether keys of Arrow type ``t`` can need canonicalization
+    (floats: NaN/-0.0 folding; nested: unhashable)."""
+    import pyarrow as pa
+
+    return (pa.types.is_floating(t) or pa.types.is_nested(t)
+            or pa.types.is_decimal(t))
+
+
+def _groups(key_cols: list, ok: np.ndarray | None = None):
+    """Group rows by their Arrow key columns: returns ``(order,
+    groups)`` where ``order`` stably sorts the rows by group and
+    ``groups`` lists ``(raw key tuple, start, end)`` slices of it,
+    skipping rows where ``ok`` is False.  The group-id step of both
+    stages: each key column is dictionary-encoded (C kernel), the codes
+    combine into one int64 per row, and one stable sort makes every
+    group a contiguous slice, so Python touches each GROUP, never each
+    row.  Raw keys are not canonical: NaN or 0.0/-0.0 may come back as
+    several groups."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    combined = None
+    codes_list = []
+    dicts = []
+    for col in key_cols:
+        try:
+            enc = pc.dictionary_encode(col)
+            codes = pc.fill_null(enc.indices, -1).to_numpy(
+                zero_copy_only=False).astype(np.int64)
+            # decode the (small) dictionary once — key tuples then
+            # come from O(1) list indexing, not per-group pyarrow
+            # scalar .as_py() (which dominated profiles at high
+            # per-batch group cardinality)
+            dict_vals = enc.dictionary.to_pylist()
+        except pa.lib.ArrowNotImplementedError:
+            # nested (array/map/struct) key columns have no Arrow
+            # dictionary kernel — encode in Python.  Cold path:
+            # it only runs for nested-typed GROUP columns, whose
+            # per-batch cardinality is small by grouping contract.
+            vals = col.to_pylist()
+            code_of: dict = {}
+            codes = np.empty(len(vals), dtype=np.int64)
+            dict_vals = []
+            for j, v in enumerate(vals):
+                if v is None:
+                    codes[j] = -1
+                    continue
+                ck = _canon_key_val(v)
+                c = code_of.get(ck)
+                if c is None:
+                    c = code_of[ck] = len(dict_vals)
+                    dict_vals.append(v)
+                codes[j] = c
+        card = len(dict_vals) + 1
+        combined = codes + 1 if combined is None \
+            else combined * card + (codes + 1)
+        codes_list.append(codes)
+        dicts.append(dict_vals)
+    if ok is not None and not ok.all():
+        combined = np.where(ok, combined, -1)
+
+    order = np.argsort(combined, kind="stable")
+    sorted_codes = combined[order]
+    # group boundaries over the sorted codes
+    bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
+    starts = np.concatenate(([0], bounds))
+    ends = np.concatenate((bounds, [sorted_codes.size]))
+    keep = sorted_codes[starts] >= 0  # drop the filtered-out rows bucket
+    starts, ends = starts[keep], ends[keep]
+    # each group's key, read off its first row one column at a time
+    rows0 = order[starts]
+    keys = zip(*([dict_vals[c] if c >= 0 else None
+                  for c in codes[rows0].tolist()]
+                 for codes, dict_vals in zip(codes_list, dicts)))
+    return order, list(zip(keys, starts.tolist(), ends.tolist()))
+
+
+def _sketch_partials(narrow: DataFrame, group_cols: Sequence[str],
+                     codec: SketchCodec, has_weight: bool) -> DataFrame:
+    """Stage 1 over a frame laid out as ``(group_cols..., value[,
+    weight])``: per-(input partition, group) sketches, no raw-row
+    shuffle.  Returns ``group_cols..., <codec.field> binary, rows long``
+    with at most (#partitions x #distinct keys) rows.
+
+    Implemented over ``mapInArrow`` — values reach NumPy zero-copy-ish
+    and group keys are dictionary-encoded by Arrow C kernels, so there
+    is no pandas conversion and no per-row Python anywhere.
+    """
+    group_cols = list(group_cols)
+
+    def build(batches):
+        acc = SketchAccumulator(codec, group_cols, has_weight)
+        for batch in batches:
+            acc.update(batch)
+        out = acc.finish()
+        if out is not None:
+            yield out
+
+    return narrow.mapInArrow(
+        build, schema=_sketch_schema(narrow, group_cols, codec.field))
 
 
 def partial_digests(
@@ -139,81 +299,59 @@ def partial_digests(
     buffer_size: int = DEFAULT_BUFFER,
     weight_col: str | None = None,
 ) -> DataFrame:
-    """Stage 1: per-(input partition, group) digests, no raw-row shuffle.
-
-    Returns a DataFrame ``group_cols... , digest binary, rows long`` with
-    at most (#partitions x #distinct keys) rows.
-
-    Implemented over ``mapInArrow`` — values reach NumPy zero-copy-ish
-    and group keys are dictionary-encoded by Arrow C kernels, so there
-    is no pandas conversion and no per-row Python anywhere.
-    """
+    """Stage 1 for digests: ``group_cols... , digest binary, rows long``
+    with at most (#partitions x #distinct keys) rows (see
+    ``_sketch_partials``)."""
     group_cols = list(group_cols)
     cols = group_cols + [value_col] + ([weight_col] if weight_col else [])
     narrow = df.select(*cols)  # column pruning reaches the scan
-    out_schema = _digest_schema(narrow, group_cols)
-    n_keys = len(group_cols)
-    has_weight = weight_col is not None
-
-    def build(batches):
-        acc = DigestAccumulator(n_keys, group_cols, compression, scale,
-                                buffer_size, has_weight)
-        for batch in batches:
-            acc.update(batch)
-        out = acc.finish()
-        if out is not None:
-            yield out
-
-    return narrow.mapInArrow(build, schema=out_schema)
+    return _sketch_partials(narrow, group_cols,
+                            digest_codec(compression, scale, buffer_size),
+                            weight_col is not None)
 
 
-class DigestAccumulator:
-    """Per-partition digest accumulation over Arrow batches laid out as
+class SketchAccumulator:
+    """Per-partition sketch accumulation over Arrow batches laid out as
     (key_cols..., value[, weight]).
 
-    The stage-1 kernel shared by ``partial_digests`` and fused
-    operators (e.g. ``sources.tables.latency_digests_clustered``, which
-    derives its metric batch in the same Python pass): group keys are
-    dictionary-encoded by Arrow C kernels, values reach NumPy
+    The stage-1 kernel of every sketch family, also driven directly by
+    fused operators (e.g. ``sources.tables.turn_digests_clustered``,
+    which derives its metric batch in the same Python pass): group keys
+    are dictionary-encoded by Arrow C kernels, values reach NumPy
     zero-copy-ish, Python touches each *group* once per batch, never
-    each row."""
+    each row.  Rows whose value is NULL/NaN, or whose weight is NULL,
+    NaN or <= 0, are dropped."""
 
-    def __init__(self, n_keys: int, group_cols: Sequence[str],
-                 compression: float, scale: str, buffer_size: int,
+    def __init__(self, codec: SketchCodec, group_cols: Sequence[str],
                  has_weight: bool = False):
-        self.n_keys = n_keys
+        self.codec = codec
         self.group_cols = list(group_cols)
-        self.compression = compression
-        self.scale = scale
-        self.buffer_size = buffer_size
+        self.n_keys = len(self.group_cols)
         self.has_weight = has_weight
-        self.acc: dict[tuple, TDigest] = {}
+        self.acc: dict[tuple, object] = {}
         self.counts: dict[tuple, int] = {}
         # canon key -> first-seen original values, for emission
         self._orig: dict[tuple, tuple] = {}
-        # whether any key column's type can need canonicalization
-        # (floats: NaN/-0.0 folding; nested: unhashable) — decided from
-        # the first batch's Arrow schema; string/int/timestamp keys
-        # skip the per-group canon+norm entirely
+        # whether any key column's type can need canonicalization —
+        # decided from the first batch's Arrow schema; string/int/
+        # timestamp keys skip the per-group canon+norm entirely
         self._needs_canon: bool | None = None
-        self.key_schema: list = [None] * n_keys
+        self.key_schema: list = [None] * self.n_keys
         # per-key deferred chunks: when a batch spans many groups the
-        # per-group slices are tiny (tens of rows) and TDigest.add_batch's
-        # fixed cost (contiguity/NaN/min-max/append) dominates — so
-        # slices are parked here (views, zero copy) and fed to the
-        # digest in one concatenated call per ~buffer_size rows
+        # per-group slices are tiny (tens of rows) and a sketch update's
+        # fixed cost (for digests: contiguity/NaN/min-max/append)
+        # dominates — so slices are parked here (views, zero copy) and
+        # fed to the sketch in one concatenated call per ~chunk_rows rows
         self._chunks: dict[tuple, list] = {}
         self._wchunks: dict[tuple, list] = {}
         self._chunk_rows: dict[tuple, int] = {}
 
-    def _digest(self, key: tuple) -> TDigest:
-        d = self.acc.get(key)
-        if d is None:
-            d = TDigest(self.compression, buffer_size=self.buffer_size,
-                        scale=self.scale)
-            self.acc[key] = d
+    def _sketch(self, key: tuple):
+        sk = self.acc.get(key)
+        if sk is None:
+            sk = self.acc[key] = self.codec.new()
             self.counts[key] = 0
-        return d
+        return sk
 
     def _push(self, key: tuple, values, weights) -> None:
         lst = self._chunks.get(key)
@@ -227,7 +365,7 @@ class DigestAccumulator:
             self._wchunks[key].append(weights)
         n = self._chunk_rows[key] + values.size
         self._chunk_rows[key] = n
-        if n >= self.buffer_size:
+        if n >= self.codec.chunk_rows:
             self._flush_key(key)
 
     def _flush_key(self, key: tuple) -> None:
@@ -241,101 +379,45 @@ class DigestAccumulator:
         else:
             w = None
         self._chunk_rows.pop(key, None)
-        d = self._digest(key)
-        d.add_batch(v, w)
+        self.codec.update(self._sketch(key), v, w)
         self.counts[key] += v.size
 
     def update(self, batch) -> None:
-        import pyarrow as pa
         import pyarrow.compute as pc
 
         n_keys = self.n_keys
         values = batch.column(n_keys).to_numpy(zero_copy_only=False)
+        ok = ~np.isnan(values)  # aggregates ignore NULL/NaN inputs
+        weights = None
         if self.has_weight:
-            weights = batch.column(n_keys + 1).to_numpy(
-                zero_copy_only=False)
-        else:
-            weights = None
-        ok = ~np.isnan(values)  # aggregate ignores NULL/NaN inputs
-        if weights is not None:
-            ok &= ~np.isnan(weights) & (weights > 0)
+            # NULL weights become 0, so one test drops NULL, NaN and
+            # non-positive weights (an int64 column keeps its dtype)
+            w = batch.column(n_keys + 1)
+            if w.null_count:
+                w = pc.fill_null(w, 0)
+            weights = w.to_numpy(zero_copy_only=False)
+            ok &= weights > 0
         if self._needs_canon is None and n_keys:
-            def _can_need(t):
-                return (pa.types.is_floating(t) or pa.types.is_nested(t)
-                        or pa.types.is_decimal(t))
             self._needs_canon = any(
-                _can_need(batch.schema.field(i).type)
+                _needs_canon(batch.schema.field(i).type)
                 for i in range(n_keys))
 
         if n_keys == 0:
             v = values[ok] if not ok.all() else values
             if v.size == 0:
                 return
-            d = self._digest(())
-            d.add_batch(v, weights[ok] if weights is not None else None)
+            self.codec.update(self._sketch(()), v,
+                              weights[ok] if weights is not None else None)
             self.counts[()] += v.size
             return
-
-        # dictionary-encode each key column (C kernel), combine codes
-        combined = None
-        codes_list = []
-        dicts = []
         for i in range(n_keys):
-            col = batch.column(i)
             self.key_schema[i] = batch.schema.field(i)
-            try:
-                enc = pc.dictionary_encode(col)
-                codes = pc.fill_null(enc.indices, -1).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                # decode the (small) dictionary once — key tuples then
-                # come from O(1) list indexing, not per-group pyarrow
-                # scalar .as_py() (which dominated profiles at high
-                # per-batch group cardinality)
-                dict_vals = enc.dictionary.to_pylist()
-            except pa.lib.ArrowNotImplementedError:
-                # nested (array/map/struct) key columns have no Arrow
-                # dictionary kernel — encode in Python.  Cold path:
-                # it only runs for nested-typed GROUP columns, whose
-                # per-batch cardinality is small by grouping contract.
-                vals = col.to_pylist()
-                code_of: dict = {}
-                codes = np.empty(len(vals), dtype=np.int64)
-                dict_vals = []
-                for j, v in enumerate(vals):
-                    if v is None:
-                        codes[j] = -1
-                        continue
-                    ck = _canon_key_val(v)
-                    c = code_of.get(ck)
-                    if c is None:
-                        c = code_of[ck] = len(dict_vals)
-                        dict_vals.append(v)
-                    codes[j] = c
-            card = len(dict_vals) + 1
-            combined = codes + 1 if combined is None \
-                else combined * card + (codes + 1)
-            codes_list.append(codes)
-            dicts.append(dict_vals)
-        if not ok.all():
-            combined = np.where(ok, combined, -1)
-
-        order = np.argsort(combined, kind="stable")
-        sorted_codes = combined[order]
-        # group boundaries over the sorted codes
-        bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [sorted_codes.size]))
+        order, groups = _groups([batch.column(i) for i in range(n_keys)],
+                                ok)
         sorted_values = values[order]
         sorted_weights = weights[order] if weights is not None else None
         needs_canon = self._needs_canon
-        for s, e in zip(starts, ends):
-            if sorted_codes[s] < 0:  # filtered-out rows bucket
-                continue
-            row0 = order[s]
-            raw = tuple(
-                dicts[i][codes_list[i][row0]]
-                if codes_list[i][row0] >= 0 else None
-                for i in range(n_keys))
+        for raw, s, e in groups:
             if needs_canon:
                 key = _canon_key(raw)
                 self._orig.setdefault(key, _norm_orig(raw))
@@ -350,22 +432,23 @@ class DigestAccumulator:
     def finish(self):
         import pyarrow as pa
 
-        # small unit-weight keys take the bit-identical singleton
-        # serialization fast path (core.try_singleton_blob): in
+        # small unit-weight keys take the codec's pack fast path (for
+        # digests the bit-identical core.try_singleton_blob): in
         # high-cardinality groupings (the flagship (role, ts_hour)
         # shape: thousands of keys x ~tens of rows each per partition)
         # the per-key digest construction + merge pass was the dominant
         # finalize cost (~55 us/key vs ~3 us packed) while provably
-        # producing the same bytes.  Keys with a live digest (already
+        # producing the same bytes.  Keys with a live sketch (already
         # flushed once) or explicit weights use the full path.
         fast: dict[tuple, bytes] = {}
+        pack = self.codec.pack
         for key in list(self._chunks):
             blob = None
-            if not self.has_weight and key not in self.acc:
+            if pack is not None and not self.has_weight \
+                    and key not in self.acc:
                 lst = self._chunks[key]
                 v = lst[0] if len(lst) == 1 else np.concatenate(lst)
-                blob = try_singleton_blob(v, self.compression,
-                                          self.buffer_size, self.scale)
+                blob = pack(v)
             if blob is None:
                 self._flush_key(key)
                 continue
@@ -384,116 +467,79 @@ class DigestAccumulator:
                 [self._orig.get(k, k)[i] for k in keys], type=typ))
             names.append(c)
         arrays.append(pa.array(
-            [fast[k] if k in fast
-             else self.acc[k].to_bytes(compress=False) for k in keys],
+            [fast[k] if k in fast else self.codec.to_bytes(self.acc[k])
+             for k in keys],
             type=pa.binary()))
-        names.append(DIGEST_FIELD)
+        names.append(self.codec.field)
         arrays.append(pa.array([self.counts[k] for k in keys],
                                type=pa.int64()))
         names.append("rows")
         return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
-def _partition_merge_gen(compression: float, scale: str,
-                         group_cols: Sequence[str]):
+def _partition_merge_gen(codec: SketchCodec, group_cols: Sequence[str]):
     """Whole-partition stage-2 merge kernel: accumulate (key -> blobs)
     across the partition's Arrow batches, merge each key once at the
     end, emit one RecordBatch.  One Python round-trip per REDUCER
-    PARTITION instead of one applyInPandas call per GROUP — profiled on
+    PARTITION instead of one grouped pandas call per GROUP — profiled on
     the scaling job the per-group path cost ~10 ms/group (pandas
     construction + Arrow conversion per group), dominating the whole
-    reduce stage at P=256 partials x K~3k keys."""
+    reduce stage at P=256 partials x K~3k keys.  With no group columns
+    it emits exactly one row, even over no input (an empty sketch with
+    ``rows == 0``)."""
     group_cols = list(group_cols)
     n_keys = len(group_cols)
 
     def gen(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         batches = [b for b in batches if b.num_rows]
+        names = group_cols + [codec.field, "rows"]
+        if n_keys == 0:
+            blobs = [b for rb in batches for b in rb.column(0).to_pylist()]
+            rows = sum(int(np.sum(rb.column(1).to_numpy()))
+                       for rb in batches)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([codec.merge_blobs(blobs)], type=pa.binary()),
+                 pa.array([rows], type=pa.int64())], names=names)
+            return
         if not batches:
             return
-        tbl = pa.Table.from_batches(batches)  # digest rows — tiny vs raw
+        tbl = pa.Table.from_batches(batches)  # sketch rows — tiny vs raw
         key_fields = [tbl.schema.field(i) for i in range(n_keys)]
-        needs_canon = any(
-            pa.types.is_floating(f.type) or pa.types.is_nested(f.type)
-            or pa.types.is_decimal(f.type) for f in key_fields)
-        n = tbl.num_rows
+        needs_canon = any(_needs_canon(f.type) for f in key_fields)
         bcol = tbl.column(n_keys).to_pylist()
         rcol = tbl.column(n_keys + 1).to_numpy(zero_copy_only=False)
         blobs: dict[tuple, list] = {}
         rows: dict[tuple, int] = {}
         origs: dict[tuple, tuple] = {}
-        if needs_canon:
-            # float / nested / decimal keys: per-row canonicalization
-            # (NaN folding, -0.0, unhashable lists) — the cold path
-            cols = [tbl.column(i).to_pylist() for i in range(n_keys)]
-            for j in range(n):
-                raw = tuple(c[j] for c in cols)
-                key = _canon_key(raw)
-                lst = blobs.get(key)
-                if lst is None:
-                    lst = blobs[key] = []
-                    rows[key] = 0
-                    origs[key] = _norm_orig(raw)
-                lst.append(bcol[j])
-                rows[key] += rcol[j]
-        else:
-            # vectorized grouping, same dictionary-encode + combined-
-            # code scheme as stage 1 (DigestAccumulator.update): Python
-            # touches each GROUP once, never each row
-            combined = None
-            codes_list = []
-            dicts = []
-            for i in range(n_keys):
-                enc = pc.dictionary_encode(tbl.column(i).combine_chunks())
-                codes = pc.fill_null(enc.indices, -1).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                dict_vals = enc.dictionary.to_pylist()
-                card = len(dict_vals) + 1
-                combined = codes + 1 if combined is None \
-                    else combined * card + (codes + 1)
-                codes_list.append(codes)
-                dicts.append(dict_vals)
-            order = np.argsort(combined, kind="stable")
-            sorted_codes = combined[order]
-            bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [n]))
-            for s, e in zip(starts, ends):
-                row0 = order[s]
-                key = tuple(
-                    dicts[i][codes_list[i][row0]]
-                    if codes_list[i][row0] >= 0 else None
-                    for i in range(n_keys))
-                idx = order[s:e]
-                blobs[key] = [bcol[j] for j in idx]
-                rows[key] = int(rcol[idx].sum())
+        order, groups = _groups([tbl.column(i).combine_chunks()
+                                 for i in range(n_keys)])
+        for raw, s, e in groups:
+            idx = order[s:e]
+            key = _canon_key(raw) if needs_canon else raw
+            if key not in blobs:
+                blobs[key] = []
+                rows[key] = 0
+                origs[key] = _norm_orig(raw) if needs_canon else raw
+            blobs[key].extend(bcol[j] for j in idx)
+            rows[key] += int(rcol[idx].sum())
         keys = list(blobs)
-        arrays = [
-            pa.array([origs.get(k, k)[i] for k in keys],
-                     type=key_fields[i].type)
-            for i in range(n_keys)
-        ]
-        arrays.append(pa.array(
-            [merge_blobs(blobs[k], compression=compression,
-                         scale=scale).to_bytes() for k in keys],
-            type=pa.binary()))
+        arrays = [pa.array([origs[k][i] for k in keys],
+                           type=key_fields[i].type)
+                  for i in range(n_keys)]
+        arrays.append(pa.array([codec.merge_blobs(blobs[k]) for k in keys],
+                               type=pa.binary()))
         arrays.append(pa.array([rows[k] for k in keys], type=pa.int64()))
-        yield pa.RecordBatch.from_arrays(
-            arrays, names=group_cols + [DIGEST_FIELD, "rows"])
+        yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return gen
 
 
-def merge_digests_df(
-    partials: DataFrame,
-    group_cols: Sequence[str] = (),
-    compression: float = 100.0,
-    scale: str = "K_2",
-    pin_partitions: bool = False,
-) -> DataFrame:
-    """Stage 2: shuffle the (tiny) digest rows by key and merge per group.
+def _merge_sketches(partials: DataFrame, group_cols: Sequence[str],
+                    codec: SketchCodec,
+                    pin_partitions: bool = False) -> DataFrame:
+    """Stage 2: shuffle the (tiny) sketch rows by key and merge per group.
 
     Grouped path: ``repartition(keys)`` co-locates every key's partials,
     then a whole-partition ``mapInArrow`` kernel merges all keys of the
@@ -505,7 +551,50 @@ def merge_digests_df(
     (measured 0.65 s/query saved on the sf0.1 headline bench, where the
     pinned 64-task stage dominated the merge).  Every downstream
     consumer of the merge output (quantile-extract UDFs, collect)
-    inherits the right-sized partitioning too.
+    inherits the right-sized partitioning too.  ``pin_partitions``: see
+    ``merge_digests_df``.
+
+    Global aggregate: a single group — funnel the per-partition sketch
+    rows (already tiny) into one task and merge.  repartition, NOT
+    coalesce: coalesce(1) would collapse the whole upstream partial-build
+    stage into a single task; repartition keeps a shuffle barrier so
+    partials stay parallel and only ~1 KB sketch rows funnel through it.
+    """
+    group_cols = list(group_cols)
+    sel = partials.select(*group_cols, codec.field, "rows")
+    if not group_cols:
+        rep = sel.repartition(1)
+    elif pin_partitions:
+        rep = sel.repartition(_shuffle_partitions(partials), *group_cols)
+    else:
+        rep = sel.repartition(*group_cols)
+    return rep.mapInArrow(
+        _partition_merge_gen(codec, group_cols),
+        schema=_sketch_schema(partials, group_cols, codec.field))
+
+
+def aggregate_sketches(narrow: DataFrame, group_cols: Sequence[str],
+                       codec: SketchCodec,
+                       has_weight: bool = False) -> DataFrame:
+    """Both stages over a frame laid out as ``(group_cols..., value[,
+    weight])``: one ``group_cols..., <codec.field>, rows`` row per group,
+    and exactly one row for a global aggregate (``rows == 0`` over no
+    input).  Rows whose value is NULL/NaN, or whose weight is NULL, NaN
+    or <= 0, are dropped."""
+    return _merge_sketches(
+        _sketch_partials(narrow, group_cols, codec, has_weight),
+        group_cols, codec)
+
+
+def merge_digests_df(
+    partials: DataFrame,
+    group_cols: Sequence[str] = (),
+    compression: float = 100.0,
+    scale: str = "K_2",
+    pin_partitions: bool = False,
+) -> DataFrame:
+    """Stage 2 for digest partials: shuffle the (tiny) digest rows by key
+    and merge per group (see ``_merge_sketches``).
 
     ``pin_partitions=True`` pins the exchange at
     spark.sql.shuffle.partitions instead — for callers that KNOW the
@@ -517,42 +606,8 @@ def merge_digests_df(
     with occupancy 0.73 and task CPU inflated 22 -> 37 core-s, while
     the pinned 64-task shape — 8 balanced waves — restores tail-hiding;
     the scan+kernel stage scales 0.95 in the same windows)."""
-    group_cols = list(group_cols)
-    schema = StructType(
-        [partials.schema[c] for c in group_cols]
-        + [StructField(DIGEST_FIELD, BinaryType(), False),
-           StructField("rows", LongType(), False)]
-    )
-    if group_cols:
-        sel = partials.select(*group_cols, DIGEST_FIELD, "rows")
-        if pin_partitions:
-            rep = sel.repartition(_shuffle_partitions(partials),
-                                  *group_cols)
-        else:
-            rep = sel.repartition(*group_cols)
-        return rep.mapInArrow(
-            _partition_merge_gen(compression, scale, group_cols),
-            schema=schema)
-    # global aggregate: single group — funnel the per-partition digest rows
-    # (already tiny) into one task and merge.  repartition, NOT coalesce:
-    # coalesce(1) would collapse the whole upstream partial-build stage
-    # into a single task; repartition keeps a shuffle barrier so partials
-    # stay parallel and only ~1 KB digest rows funnel through it.
-    return partials.repartition(1).mapInPandas(
-        _global_merge_gen(compression, scale), schema=schema)
-
-
-def _global_merge_gen(compression: float, scale: str):
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        blobs: list[bytes] = []
-        rows = 0
-        for pdf in batches:
-            blobs.extend(pdf[DIGEST_FIELD])
-            rows += int(pdf["rows"].sum())
-        merged = merge_blobs(blobs, compression=compression, scale=scale)
-        yield pd.DataFrame({DIGEST_FIELD: [merged.to_bytes()],
-                            "rows": [rows]})
-    return gen
+    return _merge_sketches(partials, group_cols,
+                           digest_codec(compression, scale), pin_partitions)
 
 
 def tree_merge(
@@ -574,24 +629,19 @@ def tree_merge(
     salted = partials.withColumn(
         "__salt", F.pmod(F.crc32(F.col(DIGEST_FIELD)), F.lit(fanout))
     )
-    schema = StructType(
-        [partials.schema[c] for c in group_cols]
-        + [StructField("__salt", salted.schema["__salt"].dataType, True),
-           StructField(DIGEST_FIELD, BinaryType(), False),
-           StructField("rows", LongType(), False)]
-    )
     # intermediate level keeps 2x centroids (stratified merging: sub-digests
     # at delta' > delta are *more* accurate, docs/vldb/short.tex:185-198);
     # only the final level compresses to the public delta.  Same whole-
     # partition merge kernel as merge_digests_df: the salted level has
-    # keys x fanout groups, where per-group applyInPandas overhead would
+    # keys x fanout groups, where per-group pandas-UDF overhead would
     # hurt the most.
     salt_keys = group_cols + ["__salt"]
     level1 = (salted.select(*salt_keys, DIGEST_FIELD, "rows")
               .repartition(*salt_keys)
               .mapInArrow(
-                  _partition_merge_gen(2 * compression, scale, salt_keys),
-                  schema=schema))
+                  _partition_merge_gen(digest_codec(2 * compression, scale),
+                                       salt_keys),
+                  schema=_sketch_schema(salted, salt_keys, DIGEST_FIELD)))
     return merge_digests_df(level1.drop("__salt"), group_cols,
                             compression, scale)
 

@@ -7,27 +7,25 @@ Spark-first split of work:
 - python does pure NumPy array updates;
 - merge stages move only sketch blobs (KBs), never rows.
 
-Same partial->merge shape as the t-digest aggregate (aggregate.py), so
-skew in the hashed column is irrelevant to stage 1.
+Runs through the t-digest's two-stage engine (aggregate.py), so skew
+in the hashed column is irrelevant to stage 1.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType, BinaryType, BooleanType, DoubleType, LongType, StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, BooleanType, DoubleType, LongType
 
 from ..functions.sketches import (
     BloomFilter, CountMinSketch, HyperLogLog, sketch_from_bytes,
 )
+from .aggregate import aggregate_sketches, object_codec
 
 __all__ = [
     "sketch_aggregate", "hll_estimate", "cm_estimates", "bloom_contains",
@@ -69,114 +67,25 @@ def sketch_aggregate(
 ) -> DataFrame:
     """Aggregate ``item_col`` into one sketch per group.
 
-    Returns ``group_cols..., sketch binary, rows long``.
+    Returns ``group_cols..., sketch binary, rows long``.  ``weight_col``
+    (count-min only) is cast to long; like the digest, a row whose
+    weight is NULL or <= 0 is dropped and not counted in ``rows``.
     """
-    import pyarrow as pa
-
     group_cols = list(group_cols)
     use_weight = kind == "cm" and weight_col is not None
     sel = [F.col(c) for c in group_cols] + [hashed(item_col).alias(_HASH)]
     if use_weight:
         sel.append(F.col(weight_col).cast("long").alias(_WEIGHT))
     narrow = df.where(F.col(item_col).isNotNull()).select(*sel)
-    n_keys = len(group_cols)
-    out_schema = StructType(
-        [narrow.schema[c] for c in group_cols]
-        + [StructField(SKETCH_FIELD, BinaryType(), False),
-           StructField("rows", LongType(), False)]
-    )
-
-    def build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow.compute as pc
-
-        acc: dict[tuple, object] = {}
-        counts: dict[tuple, int] = {}
-        key_types: list = [None] * n_keys
-
-        def upd(key, h, w):
-            sk = acc.get(key)
-            if sk is None:
-                sk = _make(kind, params)
-                acc[key] = sk
-                counts[key] = 0
-            if kind == "cm":
-                sk.add_hashes(h, w)
-            else:
-                sk.add_hashes(h)
-            counts[key] += h.size
-
-        for batch in batches:
-            h = batch.column(n_keys).to_numpy(zero_copy_only=False)
-            h = h.astype(np.int64, copy=False)
-            w = (batch.column(n_keys + 1).to_numpy(zero_copy_only=False)
-                 .astype(np.int64, copy=False) if use_weight else None)
-            if n_keys == 0:
-                if h.size:
-                    upd((), h, w)
-                continue
-            combined = None
-            for i in range(n_keys):
-                key_types[i] = batch.schema.field(i).type
-                enc = pc.dictionary_encode(batch.column(i))
-                codes = pc.fill_null(enc.indices, -1).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                combined = codes + 1 if combined is None \
-                    else combined * (len(enc.dictionary) + 1) + (codes + 1)
-            order = np.argsort(combined, kind="stable")
-            sc = combined[order]
-            bounds = np.flatnonzero(np.diff(sc)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [sc.size]))
-            hs = h[order]
-            ws = w[order] if w is not None else None
-            for s, e in zip(starts, ends):
-                row0 = order[s]
-                key = tuple(batch.column(i)[row0].as_py()
-                            for i in range(n_keys))
-                upd(key, hs[s:e], ws[s:e] if ws is not None else None)
-
-        if acc:
-            keys = list(acc.keys())
-            arrays = []
-            for i, _c in enumerate(group_cols):
-                arrays.append(pa.array([k[i] for k in keys],
-                                       type=key_types[i]))
-            arrays.append(pa.array([acc[k].to_bytes() for k in keys],
-                                   type=pa.binary()))
-            arrays.append(pa.array([counts[k] for k in keys],
-                                   type=pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=group_cols + [SKETCH_FIELD, "rows"])
-
-    partials = narrow.mapInArrow(build, schema=out_schema)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        sks = [sketch_from_bytes(bytes(b)) for b in pdf[SKETCH_FIELD]]
-        out = sks[0]
-        for s in sks[1:]:
-            out.merge(s)
-        head = {c: [pdf[c].iloc[0]] for c in group_cols}
-        head[SKETCH_FIELD] = [out.to_bytes()]
-        head["rows"] = [int(pdf["rows"].sum())]
-        return pd.DataFrame(head)
-
-    if group_cols:
-        return partials.groupBy(*group_cols).applyInPandas(
-            merge, schema=out_schema)
-
-    def merge_gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out = None
-        rows = 0
-        for pdf in batches:
-            for b in pdf[SKETCH_FIELD]:
-                sk = sketch_from_bytes(bytes(b))
-                out = sk if out is None else out.merge(sk)
-            rows += int(pdf["rows"].sum())
-        if out is None:
-            out = _make(kind, params)
-        yield pd.DataFrame({SKETCH_FIELD: [out.to_bytes()], "rows": [rows]})
-
-    return partials.repartition(1).mapInPandas(merge_gen, schema=out_schema)
+    if kind == "cm":
+        def update(sk, h, w):
+            sk.add_hashes(h, w)
+    else:
+        def update(sk, h, w):
+            sk.add_hashes(h)
+    codec = object_codec(SKETCH_FIELD, lambda: _make(kind, params), update,
+                         sketch_from_bytes)
+    return aggregate_sketches(narrow, group_cols, codec, use_weight)
 
 
 # ---------------------------------------------------------------------

@@ -332,7 +332,8 @@ def turn_digests_clustered(transcripts: DataFrame,
     import pyarrow.compute as pc
 
     from ..operators.aggregate import (
-        DEFAULT_BUFFER, DIGEST_FIELD, DigestAccumulator, merge_digests_df,
+        DEFAULT_BUFFER, DIGEST_FIELD, SketchAccumulator, digest_codec,
+        merge_digests_df,
     )
     from pyspark.sql.types import BinaryType, LongType, StringType
 
@@ -365,10 +366,8 @@ def turn_digests_clustered(transcripts: DataFrame,
            StructField("rows", LongType(), False)])
 
     def fused(batches):
-        accs = {m: DigestAccumulator(len(group_cols), group_cols,
-                                     compression, scale, buffer_size,
-                                     has_weight=False)
-                for m in metrics}
+        codec = digest_codec(compression, scale, buffer_size)
+        accs = {m: SketchAccumulator(codec, group_cols) for m in metrics}
         for b, lat in _clustered_lag(batches):
             names = b.schema.names
             ts = b.column(names.index("ts"))

@@ -170,3 +170,19 @@ def test_spark_cm_partition_independence(spark):
         ).collect()[0].e[0]
         ests.append(est)
     assert ests[0] == ests[1] == ests[2] == 100
+
+
+def test_spark_cm_drops_null_and_nonpositive_weights(spark):
+    """Weighted count-min follows the digest's rule: a row whose weight
+    is NULL or <= 0 is dropped, never cast into a garbage count."""
+    sdf = spark.createDataFrame(
+        [("a", 1), ("a", None), ("a", 2), ("b", 0), ("b", -4), ("b", 5)],
+        "item string, w bigint")
+    agg = sketch_aggregate(sdf.repartition(2), "item", "cm",
+                           weight_col="w", width=4096)
+    row = agg.select("rows", cm_estimates(
+        "sketch", F.array(hashed(F.lit("a")), hashed(F.lit("b"))))
+        .alias("est")).collect()[0]
+    assert row.est == [3, 5]
+    assert row.rows == 3
+    assert sketch_from_bytes(bytes(agg.collect()[0].sketch)).n == 8

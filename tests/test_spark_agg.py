@@ -452,35 +452,112 @@ def test_turn_digests_clustered_multimetric(spark, tmp_path):
         assert rows[("text_len", role)].rows == tl_ref[role].rows
 
 
-def test_nan_and_negzero_group_keys(spark):
+def _family_aggs():
+    """Every sketch family through its public aggregate, as
+    ``(aggregate(df, group_cols), output field, rows-in-blob(bytes))``.
+    Every row of the inputs below is a distinct value, so HLL's
+    estimate is the row count too."""
+    from t_digest_spark.functions.histogram import (
+        histogram_aggregate, histogram_from_bytes,
+    )
+    from t_digest_spark.functions.kll import KLLSketch, kll_aggregate
+    from t_digest_spark.functions.sketches import sketch_from_bytes
+    from t_digest_spark.operators.sketch_agg import sketch_aggregate
+
+    def sketch(kind):
+        return lambda df, g: sketch_aggregate(df, "v", kind, g)
+
+    return {
+        "digest": (lambda df, g: tdigest_aggregate(df, "v", g), "digest",
+                   lambda b: int(TDigest.from_bytes(b).size)),
+        "kll": (lambda df, g: kll_aggregate(df, "v", g), "kll",
+                lambda b: KLLSketch.from_bytes(b).n),
+        "histogram": (lambda df, g: histogram_aggregate(df, "v", g),
+                      "histogram",
+                      lambda b: int(histogram_from_bytes(b).counts.sum())),
+        "hll": (sketch("hll"), "sketch",
+                lambda b: round(sketch_from_bytes(b).estimate())),
+        "cm": (sketch("cm"), "sketch", lambda b: sketch_from_bytes(b).n),
+        "bloom": (sketch("bloom"), "sketch",
+                  lambda b: sketch_from_bytes(b).n_added),
+    }
+
+
+FAMILIES = ["digest", "kll", "histogram", "hll", "cm", "bloom"]
+
+
+@pytest.mark.parametrize("family", FAMILIES)
+def test_nan_and_negzero_group_keys(spark, family):
     """Group-key canonicalization (operators/aggregate._canon_key):
     NaN keys form ONE group across Arrow batches/partitions (Spark
     groupBy semantics; a naive Python dict would split them because
-    hash(nan) is id-based), and -0.0 groups with 0.0."""
+    hash(nan) is id-based), and -0.0 groups with 0.0 under the key
+    0.0 — for every sketch family, not only the digest."""
+    agg, field, size = _family_aggs()[family]
     rows = [(float("nan"), float(i)) for i in range(10)]
     rows += [(0.0, 100.0), (-0.0, 200.0)]
     df = spark.createDataFrame(rows, "g double, v double").repartition(4)
-    out = tdigest_aggregate(df, "v", ["g"]).collect()
+    out = agg(df, ["g"]).collect()
     assert len(out) == 2
+    assert all(r.g is not None for r in out)
     by_nan = {(r.g != r.g): r for r in out}
     assert by_nan[True].rows == 10
     assert by_nan[False].rows == 2
-    d = TDigest.from_bytes(bytes(by_nan[False].digest))
-    assert (d.min, d.max) == (100.0, 200.0)  # both zeros' values merged
+    zero = by_nan[False]
+    assert str(zero.g) == "0.0"  # not -0.0
+    for r in out:
+        assert size(bytes(r[field])) == r.rows
+    if family == "digest":
+        d = TDigest.from_bytes(bytes(zero.digest))
+        assert (d.min, d.max) == (100.0, 200.0)  # both zeros' values merged
 
 
-def test_array_typed_group_keys(spark):
+@pytest.mark.parametrize("family", FAMILIES)
+def test_array_typed_group_keys(spark, family):
     """Array-typed group columns: Arrow has no dictionary_encode kernel
     for nested types, so stage 1 takes the Python-encoding fallback;
     stage 2's canon-key dict must treat the (unhashable) lists as
     tuples.  Result must match Spark groupBy semantics."""
+    agg, field, size = _family_aggs()[family]
     rows = [([1, 2], float(i)) for i in range(6)]
     rows += [([3], 7.0), ([3], 9.0), (None, 5.0)]
     df = spark.createDataFrame(rows, "g array<bigint>, v double") \
         .repartition(3)
-    out = tdigest_aggregate(df, "v", ["g"]).collect()
+    out = agg(df, ["g"]).collect()
     got = {tuple(r.g) if r.g is not None else None: r.rows for r in out}
     assert got == {(1, 2): 6, (3,): 2, None: 1}
+    for r in out:
+        assert size(bytes(r[field])) == r.rows
+
+
+@pytest.mark.parametrize("family", FAMILIES)
+def test_empty_global_input_one_row(spark, family):
+    """An ungrouped aggregate over no rows is one row holding an empty
+    sketch, like SQL's global aggregate over an empty table."""
+    agg, field, size = _family_aggs()[family]
+    df = spark.createDataFrame([], "g double, v double").repartition(2)
+    out = agg(df, []).collect()
+    assert len(out) == 1
+    assert out[0].rows == 0
+    assert size(bytes(out[0][field])) == 0
+
+
+@pytest.mark.parametrize("family", FAMILIES)
+def test_grouped_plan_shape(spark, family):
+    """Every family's grouped aggregate runs as one Arrow kernel on each
+    side of a single hash exchange: no per-group pandas merge."""
+    agg, _, _ = _family_aggs()[family]
+    df = spark.range(0, 2000).select(
+        (F.col("id") % 7).alias("g"), F.col("id").cast("double").alias("v"))
+    out = agg(df.repartition(3), ["g"])
+    assert len(out.collect()) == 7
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]  # the plan that ran
+    assert "FlatMapGroupsInPandas" not in plan
+    assert plan.count("MapInArrow") == 2, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    head, tail = plan.split("Exchange hashpartitioning")
+    assert "MapInArrow" in head and "MapInArrow" in tail, plan
 
 
 def test_singleton_blob_bit_identical():
@@ -526,3 +603,26 @@ def test_singleton_blob_threshold_behavior():
                               DEFAULT_BUFFER, "K_2") is not None
     assert try_singleton_blob(rng.normal(size=100_000), 100.0,
                               DEFAULT_BUFFER, "K_2") is None
+
+
+def test_singleton_blob_mixed_signed_zeros():
+    """0.0 and -0.0 tie but differ in their bytes: the fast path, the
+    unit-weight full path and the weighted (stable argsort) path must
+    all keep them in input order and agree on min/max."""
+    from t_digest_spark.core import try_singleton_blob
+    from t_digest_spark.operators.aggregate import DEFAULT_BUFFER
+
+    rng = np.random.default_rng(0)
+    pool = np.array([0.0, -0.0, 1.0, -1.0])
+    cases = [rng.choice(pool, size=19)]
+    cases += [rng.choice(pool, size=int(rng.integers(17, 40)))
+              for _ in range(500)]
+    for vals in cases:
+        blob = try_singleton_blob(vals, 100.0, DEFAULT_BUFFER, "K_2")
+        d = TDigest(100.0, buffer_size=DEFAULT_BUFFER, scale="K_2")
+        d.add_batch(vals)
+        w = TDigest(100.0, buffer_size=DEFAULT_BUFFER, scale="K_2")
+        w.add_batch(vals, np.ones(vals.size))
+        assert blob is not None
+        assert blob == d.to_bytes(compress=False), vals
+        assert blob == w.to_bytes(compress=False), vals

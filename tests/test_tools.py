@@ -17,3 +17,15 @@ def test_check_oracles_unknown_name_exits_nonzero():
     assert r.returncode != 0
     assert "unknown query name" in r.stdout
     assert "ALL OK" not in r.stdout
+
+
+def test_bench_scaling_job_files_exist():
+    """job_fingerprint hashes every JOB_FILES path; a stale entry would
+    make it raise FileNotFoundError."""
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    import bench_scaling
+
+    missing = [f for f in bench_scaling.JOB_FILES
+               if not os.path.exists(os.path.join(REPO, f))]
+    assert missing == []
+    assert bench_scaling.job_fingerprint()

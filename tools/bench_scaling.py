@@ -46,7 +46,6 @@ JOB_FILES = (
     "t_digest_spark/core.py",
     "t_digest_spark/scale.py",
     "t_digest_spark/operators/aggregate.py",
-    "t_digest_spark/operators/_arrow_agg.py",
     "t_digest_spark/operators/extract.py",
     "t_digest_spark/sources/tables.py",
 )
