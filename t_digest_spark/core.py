@@ -48,6 +48,9 @@ __all__ = ["TDigest", "merge_digests", "merge_blobs",
 
 _VERBOSE_ENCODING = 1
 _SMALL_ENCODING = 2
+_ENCODING = struct.Struct(">i")
+_VERBOSE_HEAD = struct.Struct(">dddi")
+_SMALL_HEAD = struct.Struct(">ddfhhh")
 
 
 class TDigest:
@@ -896,22 +899,11 @@ class TDigest:
     @classmethod
     def from_bytes(cls, buf: bytes, scale=K_2, **kwargs) -> "TDigest":
         """Decode either encoding (MergingDigest.java:898-936)."""
-        (encoding,) = struct.unpack_from(">i", buf, 0)
-        if encoding == _VERBOSE_ENCODING:
-            mn, mx, compression, n = struct.unpack_from(">dddi", buf, 4)
-            pairs = np.frombuffer(buf, dtype=">f8", count=2 * n,
-                                  offset=32).reshape(n, 2)
-        elif encoding == _SMALL_ENCODING:
-            mn, mx, compression, _sz, _bsz, n = struct.unpack_from(
-                ">ddfhhh", buf, 4)
-            pairs = np.frombuffer(buf, dtype=">f4", count=2 * n,
-                                  offset=30).reshape(n, 2)
-        else:
-            raise ValueError(f"Invalid serialized digest format {encoding}")
+        mn, mx, compression, n, weights, means = _unpack(buf)
         d = cls(compression, scale=scale, **kwargs)
         d._ncentroids = n
-        d._weight = np.ascontiguousarray(pairs[:, 0], dtype=np.float64)
-        d._mean = np.ascontiguousarray(pairs[:, 1], dtype=np.float64)
+        d._weight = np.ascontiguousarray(weights, dtype=np.float64)
+        d._mean = np.ascontiguousarray(means, dtype=np.float64)
         d._total_weight = float(d._weight.sum())
         if n > 0:
             d._min = mn
@@ -922,6 +914,23 @@ class TDigest:
         return (f"TDigest(compression={self.public_compression}, "
                 f"scale={self.scale.name}, n={self.size}, "
                 f"centroids={self._ncentroids})")
+
+
+def _unpack(buf: bytes):
+    """``(min, max, compression, n, weights, means)`` of a VERBOSE or
+    SMALL blob (MergingDigest.java:898-936); weights and means are
+    zero-copy big-endian views into ``buf``."""
+    (encoding,) = _ENCODING.unpack_from(buf, 0)
+    if encoding == _VERBOSE_ENCODING:
+        mn, mx, compression, n = _VERBOSE_HEAD.unpack_from(buf, 4)
+        dtype, offset = ">f8", 32
+    elif encoding == _SMALL_ENCODING:
+        mn, mx, compression, _sz, _bsz, n = _SMALL_HEAD.unpack_from(buf, 4)
+        dtype, offset = ">f4", 30
+    else:
+        raise ValueError(f"Invalid serialized digest format {encoding}")
+    pairs = np.frombuffer(buf, dtype=dtype, count=2 * n, offset=offset)
+    return mn, mx, compression, n, pairs[0::2], pairs[1::2]
 
 
 def _sort_ties_stable(x: np.ndarray) -> np.ndarray:
@@ -1023,8 +1032,47 @@ def _weighted_average(x1: float, w1: float, x2: float, w2: float) -> float:
     """Clamped weighted average (AbstractTDigest.java:32-52)."""
     if x1 <= x2:
         x = (x1 * w1 + x2 * w2) / (w1 + w2)
-        return max(x1, min(x, x2))
+        # NaN propagates, like Java's Math.min/max
+        return x if math.isnan(x) else max(x1, min(x, x2))
     return _weighted_average(x2, w2, x1, w1)
+
+
+def _merge_parts(parts, compression, scale, buffer_size) -> TDigest:
+    """Concatenate the non-empty ``(min, max, compression, n, weights,
+    means)`` parts' centroids, then one merge pass; the first one's
+    compression is the default."""
+    means, weights = [], []
+    mn, mx = math.inf, -math.inf
+    comp = None
+    total_centroids = 0
+    for pmn, pmx, pcomp, n, w, m in parts:
+        if n == 0:
+            continue
+        if comp is None:
+            comp = float(pcomp)
+        weights.append(w)
+        means.append(m)
+        mn = min(mn, pmn)
+        mx = max(mx, pmx)
+        total_centroids += n
+    if compression is None:
+        compression = comp or 100.0
+    # size the temp buffer to swallow every incoming centroid in ONE
+    # merge pass, like the reference add(List) (MergingDigest.java:307-350)
+    if buffer_size == -1:
+        buffer_size = max(total_centroids + int(4 * compression) + 64, 2048)
+    out = TDigest(compression, buffer_size=buffer_size, scale=scale)
+    if total_centroids:
+        out.add_centroids(np.concatenate(means), np.concatenate(weights),
+                          mn, mx)
+    return out
+
+
+def _digest_part(d: TDigest):
+    d._flush()
+    n = d._ncentroids
+    return (d._min, d._max, d.public_compression, n, d._weight[:n],
+            d._mean[:n])
 
 
 def merge_digests(digests, compression: float | None = None,
@@ -1039,30 +1087,10 @@ def merge_digests(digests, compression: float | None = None,
     digests = [d for d in digests if d is not None and d.size > 0]
     if not digests:
         return TDigest(compression or 100.0)
-    if compression is None:
-        compression = digests[0].public_compression
     if scale is None:
         scale = digests[0].scale
-    means, weights = [], []
-    mn, mx = math.inf, -math.inf
-    total_centroids = 0
-    for d in digests:
-        d._flush()
-        if d._ncentroids:
-            means.append(d._mean[:d._ncentroids])
-            weights.append(d._weight[:d._ncentroids])
-            mn = min(mn, d._min)
-            mx = max(mx, d._max)
-            total_centroids += d._ncentroids
-    # size the temp buffer to swallow every incoming centroid in ONE
-    # merge pass, like the reference add(List) (MergingDigest.java:307-350)
-    if buffer_size == -1:
-        buffer_size = max(total_centroids + int(4 * compression) + 64, 2048)
-    out = TDigest(compression, buffer_size=buffer_size, scale=scale)
-    if means:
-        out.add_centroids(np.concatenate(means), np.concatenate(weights),
-                          mn, mx)
-    return out
+    return _merge_parts(map(_digest_part, digests), compression, scale,
+                        buffer_size)
 
 
 def merge_blobs(blobs, compression: float | None = None, scale=None,
@@ -1076,45 +1104,5 @@ def merge_blobs(blobs, compression: float | None = None, scale=None,
     stage-2 hot path: a grouped aggregation at P partitions x K keys
     merges P blobs per key, so blob decode dominates the reduce.
     """
-    means, weights = [], []
-    mn, mx = math.inf, -math.inf
-    comp = None
-    total_centroids = 0
-    for buf in blobs:
-        (encoding,) = struct.unpack_from(">i", buf, 0)
-        if encoding == _VERBOSE_ENCODING:
-            bmn, bmx, bcomp, n = struct.unpack_from(">dddi", buf, 4)
-            pairs = np.frombuffer(buf, dtype=">f8", count=2 * n,
-                                  offset=32).reshape(n, 2)
-        elif encoding == _SMALL_ENCODING:
-            bmn, bmx, bcomp, _sz, _bsz, n = struct.unpack_from(
-                ">ddfhhh", buf, 4)
-            pairs = np.frombuffer(buf, dtype=">f4", count=2 * n,
-                                  offset=30).reshape(n, 2)
-        else:
-            raise ValueError(f"Invalid serialized digest format {encoding}")
-        if n == 0:
-            # skip before capturing comp so an empty first blob can't
-            # dictate the fallback compression (matches merge_digests,
-            # which filters size()>0 first)
-            continue
-        if comp is None:
-            comp = float(bcomp)
-        weights.append(pairs[:, 0])
-        means.append(pairs[:, 1])
-        mn = min(mn, bmn)
-        mx = max(mx, bmx)
-        total_centroids += n
-    if compression is None:
-        compression = comp or 100.0
-    if scale is None:
-        scale = K_2
-    if buffer_size == -1:
-        buffer_size = max(total_centroids + int(4 * compression) + 64, 2048)
-    out = TDigest(compression, buffer_size=buffer_size, scale=scale)
-    if total_centroids:
-        out.add_centroids(
-            np.ascontiguousarray(np.concatenate(means), dtype=np.float64),
-            np.ascontiguousarray(np.concatenate(weights), dtype=np.float64),
-            mn, mx)
-    return out
+    return _merge_parts(map(_unpack, blobs), compression,
+                        K_2 if scale is None else scale, buffer_size)

@@ -21,9 +21,10 @@ import struct
 import zlib
 
 import numpy as np
-import pandas as pd
+from pyspark.sql.types import ArrayType, DoubleType
 
 from ..operators.aggregate import aggregate_sketches, object_codec
+from ..operators.extract import _probe
 
 __all__ = ["KLLSketch", "kll_aggregate", "kll_quantiles_of"]
 
@@ -227,17 +228,6 @@ def kll_aggregate(df, value_col: str, group_cols=(), k: int = 200,
 
 def kll_quantiles_of(kll_col, qs):
     """array<double> of quantiles from a KLL blob column."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, DoubleType
-
     qvs = [float(q) for q in qs]
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def f(blobs: pd.Series) -> pd.Series:
-        def one(b):
-            if b is None:
-                return None
-            return KLLSketch.from_bytes(bytes(b)).quantiles(qvs).tolist()
-        return blobs.map(one)
-
-    return f(kll_col)
+    return _probe(ArrayType(DoubleType()), KLLSketch.from_bytes,
+                  lambda sk: sk.quantiles(qvs).tolist(), None)(kll_col)

@@ -45,7 +45,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-from ..core import TDigest, merge_blobs, merge_digests, try_singleton_blob
+from ..core import TDigest, merge_blobs, try_singleton_blob
 
 __all__ = [
     "partial_digests",
@@ -189,9 +189,12 @@ def _sketch_schema(df: DataFrame, group_cols: Sequence[str],
 
 def _needs_canon(t) -> bool:
     """Whether keys of Arrow type ``t`` can need canonicalization
-    (floats: NaN/-0.0 folding; nested: unhashable)."""
+    (floats: NaN/-0.0 folding; nested: unhashable), looking through a
+    dictionary type to its values."""
     import pyarrow as pa
 
+    if pa.types.is_dictionary(t):
+        t = t.value_type
     return (pa.types.is_floating(t) or pa.types.is_nested(t)
             or pa.types.is_decimal(t))
 
@@ -709,5 +712,4 @@ def tdigest_collect(
     partials = partial_digests(df, value_col, (), compression, scale,
                                buffer_size)
     blobs = [r[DIGEST_FIELD] for r in partials.select(DIGEST_FIELD).collect()]
-    return merge_digests([TDigest.from_bytes(b, scale=scale) for b in blobs],
-                         compression=compression)
+    return merge_blobs(blobs, compression=compression, scale=scale)

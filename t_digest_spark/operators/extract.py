@@ -1,16 +1,17 @@
-"""Scalar extraction functions over digest (binary) columns.
+"""The per-row probe kernel every sketch column is read through, and
+the digest extraction functions built on it.
 
 These run *after* aggregation, over one row per group — cheap O(delta)
 work per row (SURVEY.md §3.3), implemented as Arrow-batched pandas UDFs.
 
 Public surface (SURVEY.md §2.B "UDF/UDAF surface"):
   quantile_of / quantiles_of / cdf_of / cdfs_of / trimmed_mean_of /
-  digest_stats / median_of
+  digest_stats / digest_summary
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
 import numpy as np
 import pandas as pd
@@ -18,7 +19,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
-    ArrayType, DoubleType, IntegerType, StructField, StructType,
+    ArrayType, DataType, DoubleType, IntegerType, StructField, StructType,
 )
 
 from ..core import TDigest
@@ -38,74 +39,66 @@ STATS_SCHEMA = StructType([
 ])
 
 
-def _decode(blob) -> TDigest | None:
-    if blob is None:
-        return None
-    return TDigest.from_bytes(bytes(blob))
+def _is_null(v) -> bool:
+    # pandas hands a NULL double argument over as NaN
+    return v is None or (isinstance(v, float) and v != v)
+
+
+def _probe(return_type: DataType, decode: Callable[[bytes], object],
+           fn: Callable, missing):
+    """The pandas UDF over ``(blob, *argument columns)`` that gives
+    ``fn(decode(blob), *argument values)`` for each row, or ``missing``
+    when the blob or any argument is NULL.  For a struct
+    ``return_type``, ``fn`` and ``missing`` give tuples in field
+    order."""
+    struct = isinstance(return_type, StructType)
+
+    def kernel(blobs: pd.Series, *cols: pd.Series) -> pd.Series:
+        out = [missing if b is None or any(map(_is_null, vals))
+               else fn(decode(bytes(b)), *vals)
+               for b, *vals in zip(blobs, *cols)]
+        if struct:
+            return pd.DataFrame(out, columns=return_type.fieldNames())
+        return pd.Series(out)
+
+    if struct:
+        kernel.__annotations__["return"] = pd.DataFrame
+    return pandas_udf(kernel, return_type)
 
 
 def quantile_of(digest: Column | str, q: float) -> Column:
     """quantile(q) of each digest (MergingDigest.java:697-783 semantics)."""
     qv = float(q)
-
-    @pandas_udf(DoubleType())
-    def f(blobs: pd.Series) -> pd.Series:
-        return blobs.map(
-            lambda b: np.nan if b is None else _decode(b).quantile(qv))
-
-    return f(digest)
+    return _probe(DoubleType(), TDigest.from_bytes,
+                  lambda d: d.quantile(qv), np.nan)(digest)
 
 
 def quantiles_of(digest: Column | str, qs: Sequence[float]) -> Column:
     """array of quantiles at the given probabilities."""
     qvs = [float(q) for q in qs]
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def f(blobs: pd.Series) -> pd.Series:
-        def one(b):
-            if b is None:
-                return [np.nan] * len(qvs)
-            return _decode(b).quantiles(qvs).tolist()
-        return blobs.map(one)
-
-    return f(digest)
+    return _probe(ArrayType(DoubleType()), TDigest.from_bytes,
+                  lambda d: d.quantiles(qvs).tolist(),
+                  [np.nan] * len(qvs))(digest)
 
 
 def cdf_of(digest: Column | str, x: float) -> Column:
     xv = float(x)
-
-    @pandas_udf(DoubleType())
-    def f(blobs: pd.Series) -> pd.Series:
-        return blobs.map(
-            lambda b: np.nan if b is None else _decode(b).cdf(xv))
-
-    return f(digest)
+    return _probe(DoubleType(), TDigest.from_bytes, lambda d: d.cdf(xv),
+                  np.nan)(digest)
 
 
 def cdfs_of(digest: Column | str, xs: Sequence[float]) -> Column:
     xvs = [float(x) for x in xs]
-
-    @pandas_udf(ArrayType(DoubleType()))
-    def f(blobs: pd.Series) -> pd.Series:
-        def one(b):
-            if b is None:
-                return [np.nan] * len(xvs)
-            return _decode(b).cdfs(xvs).tolist()
-        return blobs.map(one)
-
-    return f(digest)
+    return _probe(ArrayType(DoubleType()), TDigest.from_bytes,
+                  lambda d: d.cdfs(xvs).tolist(),
+                  [np.nan] * len(xvs))(digest)
 
 
 def trimmed_mean_of(digest: Column | str, q0: float, q1: float) -> Column:
     """Mean of samples between rank-quantiles q0 and q1 (SURVEY §2.A8)."""
-    a, b_ = float(q0), float(q1)
-
-    @pandas_udf(DoubleType())
-    def f(blobs: pd.Series) -> pd.Series:
-        return blobs.map(
-            lambda b: np.nan if b is None else _decode(b).trimmed_mean(a, b_))
-
-    return f(digest)
+    a, b = float(q0), float(q1)
+    return _probe(DoubleType(), TDigest.from_bytes,
+                  lambda d: d.trimmed_mean(a, b), np.nan)(digest)
 
 
 def digest_summary(digest: Column | str, qs: Sequence[float],
@@ -126,22 +119,11 @@ def digest_summary(digest: Column | str, qs: Sequence[float],
         StructField("max", DoubleType()),
         StructField("centroids", IntegerType()),
     ])
-
-    @pandas_udf(schema)
-    def f(blobs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in blobs:
-            if b is None:
-                rows.append(([np.nan] * len(qvs), np.nan, np.nan,
-                             np.nan, np.nan, 0))
-                continue
-            d = _decode(b)
-            rows.append((d.quantiles(qvs).tolist(),
-                         d.trimmed_mean(t0, t1), float(d.size),
-                         d.min, d.max, int(d.centroid_count())))
-        return pd.DataFrame(rows, columns=[fld.name for fld in schema.fields])
-
-    return f(digest)
+    return _probe(
+        schema, TDigest.from_bytes,
+        lambda d: (d.quantiles(qvs).tolist(), d.trimmed_mean(t0, t1),
+                   float(d.size), d.min, d.max, int(d.centroid_count())),
+        ([np.nan] * len(qvs), np.nan, np.nan, np.nan, np.nan, 0))(digest)
 
 
 def digest_stats(digest: Column | str) -> Column:
@@ -150,18 +132,11 @@ def digest_stats(digest: Column | str) -> Column:
     These are *exact* (min/max/n track the raw stream), so they are
     DuckDB-oracle-checkable — SURVEY.md §7.5.
     """
+    return _probe(STATS_SCHEMA, bytes, _stats,
+                  (np.nan, 0, np.nan, np.nan, np.nan, 0))(digest)
 
-    @pandas_udf(STATS_SCHEMA)
-    def f(blobs: pd.Series) -> pd.DataFrame:
-        rows = []
-        for b in blobs:
-            if b is None:
-                rows.append((np.nan, 0, np.nan, np.nan, np.nan, 0))
-                continue
-            d = _decode(b)
-            rows.append((float(d.size), int(d.centroid_count()),
-                         d.min, d.max, d.public_compression, len(bytes(b))))
-        return pd.DataFrame(
-            rows, columns=[fld.name for fld in STATS_SCHEMA.fields])
 
-    return f(digest)
+def _stats(blob: bytes) -> tuple:
+    d = TDigest.from_bytes(blob)
+    return (float(d.size), int(d.centroid_count()), d.min, d.max,
+            d.public_compression, len(blob))

@@ -16,16 +16,15 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, BooleanType, DoubleType, LongType
 
 from ..functions.sketches import (
     BloomFilter, CountMinSketch, HyperLogLog, sketch_from_bytes,
 )
 from .aggregate import aggregate_sketches, object_codec
+from .extract import _probe
 
 __all__ = [
     "sketch_aggregate", "hll_estimate", "cm_estimates", "bloom_contains",
@@ -93,41 +92,27 @@ def sketch_aggregate(
 # ---------------------------------------------------------------------
 
 def hll_estimate(sketch: Column | str) -> Column:
-    @pandas_udf(DoubleType())
-    def f(blobs: pd.Series) -> pd.Series:
-        return blobs.map(
-            lambda b: np.nan if b is None
-            else float(sketch_from_bytes(bytes(b)).estimate()))
-    return f(sketch)
+    return _probe(DoubleType(), sketch_from_bytes,
+                  lambda sk: float(sk.estimate()), np.nan)(sketch)
 
 
 def cm_estimates(sketch: Column | str, hash_array: Column) -> Column:
     """Point estimates for a column of item-hash arrays (build the hash
     array with ``F.array(*[hashed(F.lit(v)) for v in items])`` so the
     probe uses the same JVM hash as the build)."""
-    @pandas_udf(ArrayType(LongType()))
-    def f(blobs: pd.Series, hs: pd.Series) -> pd.Series:
-        def one(b, harr):
-            if b is None:
-                return None
-            sk = sketch_from_bytes(bytes(b))
-            return [int(x) for x in
-                    sk.estimate_hashes(np.asarray(harr, dtype=np.int64))]
-        return pd.Series([one(b, h) for b, h in zip(blobs, hs)])
-    return f(sketch, hash_array)
+    return _probe(
+        ArrayType(LongType()), sketch_from_bytes,
+        lambda sk, hs: [int(x) for x in sk.estimate_hashes(
+            np.asarray(hs, dtype=np.int64))],
+        None)(sketch, hash_array)
 
 
 def bloom_contains(sketch: Column | str, hash_array: Column) -> Column:
-    @pandas_udf(ArrayType(BooleanType()))
-    def f(blobs: pd.Series, hs: pd.Series) -> pd.Series:
-        def one(b, harr):
-            if b is None:
-                return None
-            sk = sketch_from_bytes(bytes(b))
-            return [bool(x) for x in
-                    sk.contains_hashes(np.asarray(harr, dtype=np.int64))]
-        return pd.Series([one(b, h) for b, h in zip(blobs, hs)])
-    return f(sketch, hash_array)
+    return _probe(
+        ArrayType(BooleanType()), sketch_from_bytes,
+        lambda sk, hs: [bool(x) for x in sk.contains_hashes(
+            np.asarray(hs, dtype=np.int64))],
+        None)(sketch, hash_array)
 
 
 def distinct_count_approx(df: DataFrame, item_col: str,

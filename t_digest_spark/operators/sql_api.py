@@ -8,60 +8,34 @@ queried with plain SQL:
            tdigest_trimmed_mean(digest, 0.05, 0.95) AS tmean
     FROM latency_digests
 
-All functions are Arrow-batched pandas UDFs over the binary digest
-column; the q/x arguments are per-row columns (use literals for fixed
-probes).
+All functions are probe-kernel UDFs over the binary digest column; the
+q/x arguments are per-row columns (use literals for fixed probes), and
+a NULL digest or argument gives NULL.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 from ..core import TDigest
+from .extract import _probe
 
 __all__ = ["register_sql_functions"]
 
+# SQL literals like 0.5 arrive as decimals, hence the float() casts
+_FUNCTIONS = {
+    "tdigest_quantile": lambda d, q: d.quantile(float(q)),
+    "tdigest_cdf": lambda d, x: d.cdf(float(x)),
+    "tdigest_trimmed_mean":
+        lambda d, q0, q1: d.trimmed_mean(float(q0), float(q1)),
+    "tdigest_count": lambda d: float(d.size),
+}
+
 
 def register_sql_functions(spark: SparkSession) -> None:
-    @pandas_udf(DoubleType())
-    def tdigest_quantile(blobs: pd.Series, qs: pd.Series) -> pd.Series:
-        return pd.Series([
-            np.nan if b is None
-            else TDigest.from_bytes(bytes(b)).quantile(float(q))
-            for b, q in zip(blobs, qs)
-        ])
-
-    @pandas_udf(DoubleType())
-    def tdigest_cdf(blobs: pd.Series, xs: pd.Series) -> pd.Series:
-        return pd.Series([
-            np.nan if b is None
-            else TDigest.from_bytes(bytes(b)).cdf(float(x))
-            for b, x in zip(blobs, xs)
-        ])
-
-    @pandas_udf(DoubleType())
-    def tdigest_trimmed_mean(blobs: pd.Series, q0: pd.Series,
-                             q1: pd.Series) -> pd.Series:
-        return pd.Series([
-            np.nan if b is None
-            else TDigest.from_bytes(bytes(b)).trimmed_mean(float(a),
-                                                           float(z))
-            for b, a, z in zip(blobs, q0, q1)
-        ])
-
-    @pandas_udf(DoubleType())
-    def tdigest_count(blobs: pd.Series) -> pd.Series:
-        return pd.Series([
-            np.nan if b is None else float(TDigest.from_bytes(bytes(b)).size)
-            for b in blobs
-        ])
-
-    spark.udf.register("tdigest_quantile", tdigest_quantile)
-    spark.udf.register("tdigest_cdf", tdigest_cdf)
-    spark.udf.register("tdigest_trimmed_mean", tdigest_trimmed_mean)
-    spark.udf.register("tdigest_count", tdigest_count)
+    for name, fn in _FUNCTIONS.items():
+        spark.udf.register(
+            name, _probe(DoubleType(), TDigest.from_bytes, fn, np.nan))

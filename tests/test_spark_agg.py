@@ -302,6 +302,71 @@ def test_sql_registered_functions(spark, events, exact_by_type):
         assert r.n == data.size
         assert abs(dist_cdf(r.p50, data) - 0.5) < 0.015
         assert r.c50 == pytest.approx(dist_cdf(50.0, data), abs=0.015)
+    # a NULL argument (or digest) gives NULL, never a figure or an error
+    null_rows = spark.sql("""
+        SELECT tdigest_quantile(digest, CAST(NULL AS DOUBLE)) AS p,
+               tdigest_cdf(digest, CAST(NULL AS DOUBLE)) AS c,
+               tdigest_trimmed_mean(digest, CAST(NULL AS DOUBLE), 0.75)
+                   AS lo,
+               tdigest_trimmed_mean(digest, 0.25, CAST(NULL AS DOUBLE))
+                   AS hi,
+               tdigest_count(CAST(NULL AS BINARY)) AS n
+        FROM ev_digests
+    """).collect()
+    assert len(null_rows) == len(rows)
+    assert all(tuple(r) == (None,) * 5 for r in null_rows), null_rows
+
+
+def _null_blob_probes():
+    """Every public probe, as ``name -> (column over a NULL blob column
+    "b" and a hash-array column "hs", its result)``."""
+    from t_digest_spark.functions.kll import kll_quantiles_of
+    from t_digest_spark.operators.extract import (
+        cdfs_of, digest_summary,
+    )
+    from t_digest_spark.operators.sketch_agg import (
+        bloom_contains, cm_estimates, hll_estimate,
+    )
+
+    return {
+        "quantile_of": (quantile_of("b", 0.5), None),
+        "quantiles_of": (quantiles_of("b", [0.1, 0.9]), [None, None]),
+        "cdf_of": (cdf_of("b", 1.0), None),
+        "cdfs_of": (cdfs_of("b", [1.0, 2.0]), [None, None]),
+        "trimmed_mean_of": (trimmed_mean_of("b", 0.1, 0.9), None),
+        "digest_summary": (digest_summary("b", [0.5]),
+                           ([None], None, None, None, None, 0)),
+        "digest_stats": (digest_stats("b"),
+                         (None, 0, None, None, None, 0)),
+        "tdigest_quantile": (F.expr("tdigest_quantile(b, 0.5)"), None),
+        "tdigest_cdf": (F.expr("tdigest_cdf(b, 1.0)"), None),
+        "tdigest_trimmed_mean": (
+            F.expr("tdigest_trimmed_mean(b, 0.1, 0.9)"), None),
+        "tdigest_count": (F.expr("tdigest_count(b)"), None),
+        "kll_quantiles_of": (kll_quantiles_of("b", [0.5]), None),
+        "hll_estimate": (hll_estimate("b"), None),
+        "cm_estimates": (cm_estimates("b", "hs"), None),
+        "bloom_contains": (bloom_contains("b", "hs"), None),
+    }
+
+
+@pytest.mark.parametrize("probe", [
+    "quantile_of", "quantiles_of", "cdf_of", "cdfs_of", "trimmed_mean_of",
+    "digest_summary", "digest_stats", "tdigest_quantile", "tdigest_cdf",
+    "tdigest_trimmed_mean", "tdigest_count", "kll_quantiles_of",
+    "hll_estimate", "cm_estimates", "bloom_contains",
+])
+def test_null_blob_probes(spark, probe):
+    """A NULL sketch column reads as each probe's missing value: NULL
+    scalars, arrays of NULLs for the digest's multi-probes, zero counts
+    in the digest's structs."""
+    from t_digest_spark.operators.sql_api import register_sql_functions
+
+    register_sql_functions(spark)
+    col, expect = _null_blob_probes()[probe]
+    df = spark.createDataFrame([(None, [1, 2])], "b binary, hs array<bigint>")
+    (got,) = df.select(col.alias("out")).collect()
+    assert got.out == expect
 
 
 # ---------------------------------------------------------------------
@@ -558,6 +623,27 @@ def test_grouped_plan_shape(spark, family):
     assert plan.count("Exchange hashpartitioning") == 1, plan
     head, tail = plan.split("Exchange hashpartitioning")
     assert "MapInArrow" in head and "MapInArrow" in tail, plan
+
+
+def test_dictionary_typed_float_group_keys():
+    """Dictionary-typed float keys are canonical like plain doubles:
+    NaN keys form one group and -0.0 folds into 0.0 across batches."""
+    import pyarrow as pa
+
+    from t_digest_spark.operators.aggregate import (
+        SketchAccumulator, digest_codec,
+    )
+
+    acc = SketchAccumulator(digest_codec(100.0, "K_2"), ["g"])
+    for keys in ([float("nan"), -0.0, 1.0], [float("nan"), 0.0, 1.0]):
+        g = pa.array(keys).dictionary_encode()
+        assert pa.types.is_dictionary(g.type)
+        acc.update(pa.RecordBatch.from_arrays(
+            [g, pa.array([1.0, 2.0, 3.0])], names=["g", "v"]))
+    out = acc.finish().to_pydict()
+    assert out["rows"] == [2, 2, 2], out
+    g = out["g"]
+    assert g[0] != g[0] and [str(x) for x in g[1:]] == ["0.0", "1.0"], out
 
 
 def test_singleton_blob_bit_identical():
