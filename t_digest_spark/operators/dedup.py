@@ -18,19 +18,25 @@ Five levels, all shaped for 100 TB inputs:
 
 Candidate joins are joins between small derived tables; Catalyst/AQE
 broadcast them when they fit.
+
+The three LSH pair listers and their cluster-scale keep/drop
+counterparts (``minhash_dedup``, ``simhash_dedup``, ``embedding_dedup``)
+share one path: a band-key builder per family → one candidate
+self-join (pairs) or bucket table + O(k) bucket edges (dedup) → one
+payload re-join scored exactly → ``lsh_components`` for the keep/drop
+decision.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
-
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from .similarity import _norm
 from .text import fingerprint, shingle_fingerprints
 
 __all__ = [
@@ -77,7 +83,10 @@ def _mulmod61(a: np.ndarray, h: np.ndarray) -> np.ndarray:
 def exact_dedup(df: DataFrame, text_col: str = "text",
                 id_col: str = "doc_id", keep: str = "min") -> DataFrame:
     """Keep one row per distinct normalized text: group by fingerprint,
-    keep the min/max id.  Shuffles only (fingerprint, id)."""
+    keep the min (``keep="min"``) or max (``"max"``) id.  Shuffles only
+    (fingerprint, id)."""
+    if keep not in ("min", "max"):
+        raise ValueError(f"keep must be 'min' or 'max', got {keep!r}")
     fp = df.select(F.col(id_col),
                    fingerprint(text_col).alias("__fp"))
     agg = F.min(id_col) if keep == "min" else F.max(id_col)
@@ -149,6 +158,90 @@ def _perm_matrix_ws(a1, a0, bb, h, ws):
     return t1
 
 
+def _workspace(num_perm: int, width: int) -> tuple:
+    return (np.empty((num_perm, width), dtype=np.uint64),
+            np.empty((num_perm, width), dtype=np.uint64),
+            np.empty((num_perm, width), dtype=bool))
+
+
+def _minhash_udf(num_perm: int, seed: int, k_shingle: int | None):
+    """The one MinHash kernel: a pandas UDF from an array<long> column
+    to the array<long> signature.  With ``k_shingle=None`` the rows are
+    shingle fingerprints; otherwise they are word hashes, shingled one
+    chunk at a time by text.shingle_flat so the fingerprints never
+    materialize as a column (a row shorter than k words — empty
+    included — has one fingerprint).  Null rows, and empty fingerprint
+    rows, give a null signature.
+
+    Whole-batch vectorization in row chunks: concatenate the chunk's
+    fingerprints, one (num_perm x target) modular-hash matrix into
+    REUSED FULL-WIDTH workspace buffers, per-row minima via
+    minimum.reduceat on the row boundaries.  The chunk target bounds
+    the working set: 1024 shingles x 64 perms x 2 uint64 buffers ~ 1 MB
+    — per-core-cache resident (see _perm_matrix_ws for the measured
+    scaling effect; the round-3 8 Ki target with allocating temporaries
+    was the next-best shape, and 64 Ki measured 5x slower per doc).
+    Chunks are padded to the buffer width rather than sliced: a [:, :w]
+    view de-contiguates every ufunc and measured 2.1x slower; padded
+    columns are overwritten with 2^62 (> p) so they can never win a
+    row's min."""
+    from .text import shingle_flat
+
+    a, b = _perm_params(num_perm, seed)
+
+    @pandas_udf(ArrayType(LongType()))
+    def f(col: pd.Series) -> pd.Series:
+        aa = a.astype(np.uint64)[:, None]
+        bb = b.astype(np.uint64)[:, None]
+        a1, a0 = aa >> np.uint64(31), aa & _M31
+        n = len(col)
+        out: list = [None] * n
+        vals = col.to_numpy()
+        lens = np.fromiter((-1 if v is None else len(v) for v in vals),
+                           dtype=np.int64, count=n)
+        width = lens if k_shingle is None else np.where(
+            lens < 0, 0, np.maximum(lens - k_shingle + 1, 1))
+        idx = np.flatnonzero(width > 0)
+        target = 1024
+        big = np.uint64(1) << np.uint64(62)
+        ws_full = _workspace(num_perm, target)
+        flat_buf = np.zeros((1, target), dtype=np.uint64)
+        start = 0
+        while start < len(idx):
+            end, tot = start, 0
+            while end < len(idx) and (tot == 0
+                                      or tot + width[idx[end]] <= target):
+                tot += width[idx[end]]
+                end += 1
+            rows = idx[start:end]
+            flat = np.concatenate(
+                [np.asarray(vals[i], dtype=np.int64) for i in rows]
+            ).astype(np.uint64)
+            if k_shingle is None:
+                starts = np.concatenate(([0], np.cumsum(lens[rows])[:-1]))
+            else:
+                fp, _l, fp_offs = shingle_flat(flat, lens[rows], k_shingle)
+                flat, starts = fp.astype(np.uint64), fp_offs[:-1]
+            w = len(flat)
+            if w <= target:
+                flat_buf[0, :w] = flat
+                sig = _perm_matrix_ws(a1, a0, bb, _mod61(flat_buf),
+                                      ws_full)
+                if w < target:
+                    sig[:, w:] = big
+            else:  # one oversized document: one-off buffers
+                sig = _perm_matrix_ws(a1, a0, bb, _mod61(flat[None, :]),
+                                      _workspace(num_perm, w))
+            mins = np.minimum.reduceat(sig, starts, axis=1) \
+                .astype(np.int64)
+            for j, i in enumerate(rows):
+                out[i] = mins[:, j]
+            start = end
+        return pd.Series(out)
+
+    return f
+
+
 def minhash_from_word_hashes(wh_col, k_shingle: int = 5,
                              num_perm: int = 64, seed: int = 7):
     """MinHash signature (array<long>) FUSED from word hashes: shingle
@@ -159,161 +252,152 @@ def minhash_from_word_hashes(wh_col, k_shingle: int = 5,
     Bit-identical to ``minhash_signature(shingle_fingerprints(...))``
     (asserted in tests); use the unfused pair when the fingerprints
     themselves are needed (exact-Jaccard verification)."""
-    from .text import EMPTY_FP, shingle_flat
-
-    a, b = _perm_params(num_perm, seed)
-
-    @pandas_udf(ArrayType(LongType()))
-    def f(whs: pd.Series) -> pd.Series:
-        aa = a.astype(np.uint64)[:, None]
-        bb = b.astype(np.uint64)[:, None]
-        a1, a0 = aa >> np.uint64(31), aa & _M31
-        n = len(whs)
-        out: list = [None] * n
-        vals = whs.to_numpy()
-        lens = np.fromiter((-1 if v is None else len(v) for v in vals),
-                           dtype=np.int64, count=n)
-        empties = np.flatnonzero(lens == 0)
-        if len(empties):
-            # empty docs have the one-element fingerprint set
-            # {EMPTY_FP}: their signature is a constant vector
-            ef = np.array([[np.uint64(np.int64(EMPTY_FP))]])
-            ws1 = (np.empty((num_perm, 1), np.uint64),
-                   np.empty((num_perm, 1), np.uint64),
-                   np.empty((num_perm, 1), bool))
-            esig = _perm_matrix_ws(a1, a0, bb, _mod61(ef), ws1)[:, 0] \
-                .astype(np.int64)
-            for i in empties:
-                out[i] = esig
-        idx = np.flatnonzero(lens > 0)
-        fpl = np.maximum(lens - k_shingle + 1, 1)
-        target = 1024
-        big = np.uint64(1) << np.uint64(62)
-        ws_full = (np.empty((num_perm, target), dtype=np.uint64),
-                   np.empty((num_perm, target), dtype=np.uint64),
-                   np.empty((num_perm, target), dtype=bool))
-        flat_buf = np.zeros((1, target), dtype=np.uint64)
-        start = 0
-        while start < len(idx):
-            end, tot = start, 0
-            while end < len(idx) and (tot == 0
-                                      or tot + fpl[idx[end]] <= target):
-                tot += fpl[idx[end]]
-                end += 1
-            rows = idx[start:end]
-            flat_wh = np.concatenate(
-                [np.asarray(vals[i], dtype=np.int64) for i in rows]
-            ).astype(np.uint64)
-            fp_flat, _l, fp_offs = shingle_flat(flat_wh, lens[rows],
-                                                k_shingle)
-            w = len(fp_flat)
-            fp_u = fp_flat.astype(np.uint64)[None, :]
-            if w <= target:
-                flat_buf[0, :w] = fp_u
-                sig = _perm_matrix_ws(a1, a0, bb, _mod61(flat_buf),
-                                      ws_full)
-                if w < target:
-                    sig[:, w:] = big
-            else:
-                ws1 = (np.empty((num_perm, w), dtype=np.uint64),
-                       np.empty((num_perm, w), dtype=np.uint64),
-                       np.empty((num_perm, w), dtype=bool))
-                sig = _perm_matrix_ws(a1, a0, bb, _mod61(fp_u), ws1)
-            mins = np.minimum.reduceat(sig, fp_offs[:-1], axis=1) \
-                .astype(np.int64)
-            for j, i in enumerate(rows):
-                out[i] = mins[:, j]
-            start = end
-        return pd.Series(out)
-
-    return f(wh_col)
+    return _minhash_udf(num_perm, seed, k_shingle)(wh_col)
 
 
 def minhash_signature(shingles_col, num_perm: int = 64,
                       seed: int = 7):
     """MinHash signature (array<long>) from an array-of-shingle-hashes
     column.  Vectorized: one (num_perm x n_shingles) NumPy min-reduce
-    per row batch via a pandas UDF (shingle hashing itself already
+    per row chunk via a pandas UDF (shingle hashing itself already
     happened upstream in shingle_fingerprints)."""
-    a, b = _perm_params(num_perm, seed)
-
-    @pandas_udf(ArrayType(LongType()))
-    def f(sh: pd.Series) -> pd.Series:
-        aa = a.astype(np.uint64)[:, None]
-        bb = b.astype(np.uint64)[:, None]
-        a1, a0 = aa >> np.uint64(31), aa & _M31
-        n = len(sh)
-        out = [None] * n
-        vals = sh.to_numpy()
-        lens = np.fromiter((0 if v is None else len(v) for v in vals),
-                           dtype=np.int64, count=n)
-        idx = np.flatnonzero(lens > 0)
-        # whole-batch vectorization in row chunks: concatenate the
-        # chunk's shingle hashes, one (num_perm x target) modular-hash
-        # matrix into REUSED FULL-WIDTH workspace buffers, per-row
-        # minima via minimum.reduceat on the row boundaries.  The
-        # chunk target bounds the working set: 1024 shingles x 64
-        # perms x 2 uint64 buffers ~ 1 MB — per-core-cache resident
-        # (see _perm_matrix_ws for the measured scaling effect; the
-        # round-3 8 Ki target with allocating temporaries was the
-        # next-best shape, and 64 Ki measured 5x slower per doc).
-        # Chunks are padded to the buffer width rather than sliced:
-        # a [:, :w] view de-contiguates every ufunc and measured 2.1x
-        # slower; padded columns are overwritten with 2^62 (> p) so
-        # they can never win a row's min.
-        target = 1024
-        big = np.uint64(1) << np.uint64(62)
-        ws_full = (np.empty((num_perm, target), dtype=np.uint64),
-                   np.empty((num_perm, target), dtype=np.uint64),
-                   np.empty((num_perm, target), dtype=bool))
-        flat_buf = np.zeros((1, target), dtype=np.uint64)
-        start = 0
-        while start < len(idx):
-            end, tot = start, 0
-            while end < len(idx) and (tot == 0
-                                      or tot + lens[idx[end]] <= target):
-                tot += lens[idx[end]]
-                end += 1
-            rows = idx[start:end]
-            cc = np.concatenate(
-                [np.asarray(vals[i], dtype=np.int64) for i in rows]
-            ).astype(np.uint64)
-            w = len(cc)
-            if w <= target:
-                flat_buf[0, :w] = cc
-                sig = _perm_matrix_ws(a1, a0, bb, _mod61(flat_buf),
-                                      ws_full)
-                if w < target:
-                    sig[:, w:] = big
-            else:  # one oversized document: one-off buffers
-                ws1 = (np.empty((num_perm, w), dtype=np.uint64),
-                       np.empty((num_perm, w), dtype=np.uint64),
-                       np.empty((num_perm, w), dtype=bool))
-                sig = _perm_matrix_ws(a1, a0, bb, _mod61(cc[None, :]),
-                                      ws1)
-            starts = np.concatenate(([0], np.cumsum(lens[rows])[:-1]))
-            mins = np.minimum.reduceat(sig, starts, axis=1) \
-                .astype(np.int64)
-            for j, i in enumerate(rows):
-                out[i] = mins[:, j]
-            start = end
-        return pd.Series(out)
-
-    return f(shingles_col)
+    return _minhash_udf(num_perm, seed, None)(shingles_col)
 
 
-def _band_keys(sig_col: str, bands: int, rows_per_band: int):
-    """posexplode(band -> xxhash64 of that signature slice) as
-    (__band, __key) — the shared LSH banding for pairs and dedup.
-    The slice (array<long>) is hashed directly — xxhash64 hashes array
-    elements natively, and the earlier ``concat_ws`` form paid a
-    long->string render of the whole signature per document."""
+def _minhash_band_keys(sigs: DataFrame, id_col: str, num_perm: int,
+                       bands: int) -> DataFrame:
+    """(id, __band, __key): xxhash64 of each of ``bands`` slices of the
+    ``__sig`` signature, num_perm // bands minhashes each.  The slice
+    (array<long>) is hashed directly — xxhash64 hashes array elements
+    natively, and the earlier ``concat_ws`` form paid a long->string
+    render of the whole signature per document."""
+    if not 1 <= bands <= num_perm:
+        # a 0-row band hashes the empty slice: every document would
+        # share every band's bucket
+        raise ValueError(f"MinHash banding needs 1 <= bands <= num_perm, "
+                         f"got bands={bands}, num_perm={num_perm}")
+    rows_per_band = num_perm // bands
     band_idx = F.sequence(F.lit(0), F.lit(bands - 1))
-    return F.posexplode(F.transform(
+    return sigs.select(id_col, F.posexplode(F.transform(
         band_idx,
         lambda i: F.xxhash64(
-            F.slice(sig_col, i * rows_per_band + 1,
-                    rows_per_band)))).alias("__band", "__key")
+            F.slice("__sig", i * rows_per_band + 1,
+                    rows_per_band)))).alias("__band", "__key"))
+
+
+def _simhash_band_keys(sh: DataFrame, id_col: str,
+                       max_hamming: int) -> DataFrame:
+    """(id, __band, __key): the (max_hamming + 1) bit chunks of the
+    64-bit ``__simhash`` — by pigeonhole, a pair within the Hamming
+    budget agrees on at least one chunk."""
+    if not 0 <= max_hamming <= 63:
+        # 64 chunks of width 0 mask every key to 0: one bucket for all
+        raise ValueError(f"SimHash banding needs 0 <= max_hamming <= 63, "
+                         f"got max_hamming={max_hamming}")
+    n_chunks = max_hamming + 1
+    width = 64 // n_chunks
+    mask = (1 << width) - 1
+    return sh.select(id_col, F.posexplode(F.array(*[
+        F.shiftrightunsigned("__simhash", i * width).bitwiseAND(mask)
+        for i in range(n_chunks)])).alias("__band", "__key"))
+
+
+def _embedding_band_keys(vecs: DataFrame, id_col: str, n_planes: int,
+                         n_bands: int, seed: int,
+                         dim: int | None) -> DataFrame:
+    """(id, __band, __key): banded sign-of-hyperplane bucket codes of
+    the ``__v`` vectors, computed by an Arrow-batched UDF (one code per
+    band, one matmul per batch).
+
+    The projection planes derive deterministically from ``(seed,
+    n_bands, n_planes, dim)``.  When ``dim`` is not supplied it is read
+    from the first non-null vector inside the UDF — every executor
+    derives bit-identical planes from the same seed, so no driver-side
+    Spark job is launched just to learn the vector width (previously
+    one extra ``first()`` job per operator call)."""
+    weights = (1 << np.arange(n_planes, dtype=np.uint64))
+
+    def _planes(d: int) -> np.ndarray:
+        rng = np.random.default_rng(seed)
+        return rng.normal(size=(n_bands, n_planes, d)).astype(np.float64)
+
+    state: dict = {"planes": None if dim is None else _planes(dim)}
+
+    @pandas_udf(ArrayType(LongType()))
+    def buckets(vs: pd.Series) -> pd.Series:
+        mask = vs.notna().to_numpy()
+        out: list = [None] * len(vs)
+        if mask.any():
+            x = np.stack([np.asarray(v, dtype=np.float64)
+                          for v in vs[mask]])            # (rows, dim)
+            planes = state["planes"]
+            if planes is None:
+                planes = state["planes"] = _planes(x.shape[1])
+            sig = np.einsum("bpd,rd->rbp", planes, x) > 0
+            codes = (sig.astype(np.uint64) * weights).sum(axis=2) \
+                .astype(np.int64).tolist()
+            for j, row in zip(np.flatnonzero(mask), codes):
+                out[j] = row
+        return pd.Series(out)
+
+    return vecs.select(id_col, F.posexplode(buckets("__v"))
+                       .alias("__band", "__key"))
+
+
+def _candidate_pairs(banded: DataFrame, id_col: str) -> DataFrame:
+    """Distinct (id_a < id_b) pairs sharing a (__band, __key) — the
+    pairs operators' candidate self-join.  It carries ONLY ids: a pair
+    colliding in several bands produces several candidate rows, and
+    shipping the payloads (signatures, vectors) on each of them through
+    the shuffle before dropDuplicates is pure waste at duplicate-cluster
+    scale."""
+    return (banded.alias("l")
+            .join(banded.alias("r"),
+                  on=[F.col("l.__band") == F.col("r.__band"),
+                      F.col("l.__key") == F.col("r.__key"),
+                      F.col(f"l.{id_col}") < F.col(f"r.{id_col}")])
+            .select(F.col(f"l.{id_col}").alias("id_a"),
+                    F.col(f"r.{id_col}").alias("id_b"))
+            .dropDuplicates(["id_a", "id_b"]))
+
+
+def _verified(pairs: DataFrame, table: DataFrame, id_col: str, col: str,
+              score, name: str) -> DataFrame:
+    """(id_a, id_b, name): each distinct candidate pair scored exactly
+    by ``score(a, b)`` over its two members' ``col`` payloads, which
+    are re-joined from ``table`` once per pair."""
+    def side(s: str) -> DataFrame:
+        return table.select(F.col(id_col).alias(f"id_{s}"),
+                            F.col(col).alias(f"__p{s}"))
+
+    return (pairs.join(side("a"), "id_a").join(side("b"), "id_b")
+            .select("id_a", "id_b",
+                    score(F.col("__pa"), F.col("__pb")).alias(name)))
+
+
+def _hamming(a, b):
+    return F.bit_count(a.bitwiseXOR(b))
+
+
+def _cosine(a, b):
+    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
+                      F.lit(0.0), lambda acc, v: acc + v)
+    return dot / (_norm(a) * _norm(b))
+
+
+def _buckets(banded: DataFrame, id_col: str) -> DataFrame:
+    """(id, __bucket = xxhash64(__band, __key)): the dedup operators'
+    bucket table."""
+    return banded.select(id_col,
+                         F.xxhash64("__band", "__key").alias("__bucket"))
+
+
+def _id_universe(df: DataFrame, id_col: str,
+                 assume_unique_ids: bool = False) -> DataFrame:
+    """One row per id of ``df``.  ``assume_unique_ids`` skips the
+    distinct() — a full scan+shuffle — for a primary-key id column."""
+    ids = df.select(F.col(id_col))
+    return ids if assume_unique_ids else ids.distinct()
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
@@ -324,57 +408,24 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     """Near-duplicate pairs by MinHash + banded LSH.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard >=
-    threshold (estimated from signatures when verify=False).
+    threshold: the exact shingle-set Jaccard, or with verify=False the
+    fraction of matching minhashes.
     """
-    rows_per_band = num_perm // bands
-    sigs = df.select(
-        F.col(id_col),
-        shingle_fingerprints(text_col, k_shingle).alias("__sh"),
-    ).withColumn("__sig", minhash_signature("__sh", num_perm))
-
-    # band key: hash of each signature slice; explode to (band, key, id).
-    # The candidate join carries ONLY ids — a pair colliding in several
-    # bands produces several candidate rows, and shipping the
-    # num_perm-long signatures on each of them through the shuffle
-    # before dropDuplicates is pure waste at duplicate-cluster scale;
-    # the two signature columns are re-joined once per DISTINCT pair.
-    banded = sigs.select(id_col, _band_keys("__sig", bands,
-                                            rows_per_band))
-    cand = (banded.alias("l")
-            .join(banded.alias("r"),
-                  on=[F.col("l.__band") == F.col("r.__band"),
-                      F.col("l.__key") == F.col("r.__key"),
-                      F.col(f"l.{id_col}") < F.col(f"r.{id_col}")])
-            .select(F.col(f"l.{id_col}").alias("id_a"),
-                    F.col(f"r.{id_col}").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
-    sig_only = sigs.select(id_col, "__sig")
-    cand = (cand
-            .join(sig_only.select(F.col(id_col).alias("id_a"),
-                                  F.col("__sig").alias("__sig_a")), "id_a")
-            .join(sig_only.select(F.col(id_col).alias("id_b"),
-                                  F.col("__sig").alias("__sig_b")), "id_b"))
-    # signature-estimated jaccard (fraction of matching minhashes)
-    est = cand.withColumn(
-        "jaccard",
-        F.aggregate(
-            F.zip_with("__sig_a", "__sig_b",
-                       lambda x, y: F.when(x == y, 1).otherwise(0)),
-            F.lit(0), lambda acc, v: acc + v) / F.lit(num_perm),
-    ).select("id_a", "id_b", "jaccard")
-    if not verify:
-        return est.where(F.col("jaccard") >= threshold)
-    # exact verification on the candidate set only
     sh = df.select(F.col(id_col),
                    shingle_fingerprints(text_col, k_shingle).alias("__sh"))
-    verified = (est
-                .join(sh.select(F.col(id_col).alias("id_a"),
-                                F.col("__sh").alias("__sh_a")), "id_a")
-                .join(sh.select(F.col(id_col).alias("id_b"),
-                                F.col("__sh").alias("__sh_b")), "id_b")
-                .withColumn("jaccard", ngram_jaccard("__sh_a", "__sh_b"))
-                .select("id_a", "id_b", "jaccard"))
-    return verified.where(F.col("jaccard") >= threshold)
+    sigs = sh.withColumn("__sig", minhash_signature("__sh", num_perm))
+    cand = _candidate_pairs(
+        _minhash_band_keys(sigs, id_col, num_perm, bands), id_col)
+    if verify:
+        table, col, score = sh, "__sh", ngram_jaccard
+    else:
+        def score(a, b):  # the fraction of matching minhashes
+            return F.aggregate(
+                F.zip_with(a, b, lambda x, y: F.when(x == y, 1).otherwise(0)),
+                F.lit(0), lambda acc, v: acc + v) / F.lit(num_perm)
+        table, col = sigs, "__sig"
+    return (_verified(cand, table, id_col, col, score, "jaccard")
+            .where(F.col("jaccard") >= threshold))
 
 
 def ngram_jaccard(sh_a, sh_b):
@@ -431,74 +482,11 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
     the conventional <=3-bit budget; larger budgets mean narrower
     chunks and proportionally more candidates.
     """
-    n_chunks = max_hamming + 1
-    width = 64 // n_chunks
-    mask = (1 << width) - 1
     sh = df.select(F.col(id_col), simhash(text_col).alias("__simhash"))
-    # candidate join on ids only (see minhash_lsh_pairs); simhashes are
-    # re-joined per distinct pair, not carried on every candidate row
-    chunks = sh.select(
-        id_col,
-        F.posexplode(F.array(*[
-            F.shiftrightunsigned("__simhash", i * width).bitwiseAND(mask)
-            for i in range(n_chunks)
-        ])).alias("__chunk", "__ckey"))
-    cand = (chunks.alias("l")
-            .join(chunks.alias("r"),
-                  on=[F.col("l.__chunk") == F.col("r.__chunk"),
-                      F.col("l.__ckey") == F.col("r.__ckey"),
-                      F.col(f"l.{id_col}") < F.col(f"r.{id_col}")])
-            .select(F.col(f"l.{id_col}").alias("id_a"),
-                    F.col(f"r.{id_col}").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
-    cand = (cand
-            .join(sh.select(F.col(id_col).alias("id_a"),
-                            F.col("__simhash").alias("__ha")), "id_a")
-            .join(sh.select(F.col(id_col).alias("id_b"),
-                            F.col("__simhash").alias("__hb")), "id_b"))
-    return (cand.withColumn(
-        "hamming", F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming"))
-
-
-def _hyperplane_buckets_udf(n_planes: int, n_bands: int, seed: int,
-                            dim: int | None = None):
-    """Banded sign-of-hyperplane bucket codes, as an Arrow-batched UDF
-    returning array<long> (one code per band).
-
-    The projection planes derive deterministically from ``(seed,
-    n_bands, n_planes, dim)``.  When ``dim`` is not supplied it is read
-    from the first non-null vector inside the UDF — every executor
-    derives bit-identical planes from the same seed, so no driver-side
-    Spark job is launched just to learn the vector width (previously
-    one extra ``first()`` job per operator call)."""
-    weights = (1 << np.arange(n_planes, dtype=np.uint64))
-
-    def _planes(d: int) -> np.ndarray:
-        rng = np.random.default_rng(seed)
-        return rng.normal(size=(n_bands, n_planes, d)).astype(np.float64)
-
-    state: dict = {"planes": None if dim is None else _planes(dim)}
-
-    @pandas_udf(ArrayType(LongType()))
-    def buckets(vs: pd.Series) -> pd.Series:
-        mask = vs.notna().to_numpy()
-        out: list = [None] * len(vs)
-        if mask.any():
-            x = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in vs[mask]])            # (rows, dim)
-            planes = state["planes"]
-            if planes is None:
-                planes = state["planes"] = _planes(x.shape[1])
-            sig = np.einsum("bpd,rd->rbp", planes, x) > 0
-            codes = (sig.astype(np.uint64) * weights).sum(axis=2) \
-                .astype(np.int64).tolist()
-            for j, row in zip(np.flatnonzero(mask), codes):
-                out[j] = row
-        return pd.Series(out)
-
-    return buckets
+    cand = _candidate_pairs(_simhash_band_keys(sh, id_col, max_hamming),
+                            id_col)
+    return (_verified(cand, sh, id_col, "__simhash", _hamming, "hamming")
+            .where(F.col("hamming") <= max_hamming))
 
 
 def embedding_cosine_pairs(df: DataFrame, vec_col: str = "embedding",
@@ -517,38 +505,12 @@ def embedding_cosine_pairs(df: DataFrame, vec_col: str = "embedding",
     join key is (band, bucket) so candidates never leave their band's
     bucket — at 10^9 rows this shuffles ids + vectors once, never
     all-pairs."""
-    buckets = _hyperplane_buckets_udf(n_planes, n_bands, seed, dim)
     vecs = df.select(F.col(id_col),
                      F.col(vec_col).cast("array<double>").alias("__v"))
-    # candidate join on ids only (see minhash_lsh_pairs); the dim-long
-    # vectors are re-joined per distinct pair, not carried on every
-    # candidate row through the bucket-join shuffle
-    b = vecs.select(F.col(id_col),
-                    F.posexplode(buckets("__v")).alias("__band",
-                                                       "__bucket"))
-    cand = (b.alias("l")
-            .join(b.alias("r"),
-                  on=[F.col("l.__band") == F.col("r.__band"),
-                      F.col("l.__bucket") == F.col("r.__bucket"),
-                      F.col(f"l.{id_col}") < F.col(f"r.{id_col}")])
-            .select(F.col(f"l.{id_col}").alias("id_a"),
-                    F.col(f"r.{id_col}").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
-    cand = (cand
-            .join(vecs.select(F.col(id_col).alias("id_a"),
-                              F.col("__v").alias("__va")), "id_a")
-            .join(vecs.select(F.col(id_col).alias("id_b"),
-                              F.col("__v").alias("__vb")), "id_b"))
-    dot = F.aggregate(
-        F.zip_with("__va", "__vb", lambda x, y: x * y),
-        F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform("__va", lambda x: x * x),
-                            F.lit(0.0), lambda a, v: a + v))
-    nb = F.sqrt(F.aggregate(F.transform("__vb", lambda x: x * x),
-                            F.lit(0.0), lambda a, v: a + v))
-    return (cand.withColumn("cosine", dot / (na * nb))
-            .where(F.col("cosine") >= threshold)
-            .select("id_a", "id_b", "cosine"))
+    cand = _candidate_pairs(_embedding_band_keys(
+        vecs, id_col, n_planes, n_bands, seed, dim), id_col)
+    return (_verified(cand, vecs, id_col, "__v", _cosine, "cosine")
+            .where(F.col("cosine") >= threshold))
 
 
 # ----------------------------------------------------------------------
@@ -607,8 +569,7 @@ def _driver_components(id_series, b_codes: np.ndarray, max_iter: int):
     if not id_series.notna().all():
         # pd.factorize maps nulls to code -1, which would silently
         # index lab[-1] below and corrupt labels — fail loudly instead
-        # (the distributed path tolerates nulls differently; callers
-        # must drop/clean null ids first).
+        # (lsh_components drops null ids before either strategy).
         raise ValueError(
             "lsh_components driver path: null ids in edge table")
     if len(b_codes) and int(b_codes.min()) < 0:
@@ -631,15 +592,24 @@ def _driver_components(id_series, b_codes: np.ndarray, max_iter: int):
             break
         lab = new
     else:
-        import warnings
-
-        warnings.warn(
-            f"lsh_components: not converged after {max_iter} rounds; "
-            "labels are valid but possibly under-merged — raise "
-            "max_iter", RuntimeWarning, stacklevel=3)
+        _warn_unconverged(max_iter, stacklevel=4)
     # rep value of unique id i = the id whose rank is lab[i]
     reps = np.asarray(id_vals)[order][lab]
     return id_vals, reps
+
+
+def _warn_unconverged(max_iter: int, stacklevel: int) -> None:
+    # exhausting max_iter silently would under-merge: members of a long
+    # chain keep non-minimal reps, so some duplicates survive as
+    # keepers (recall loss, never corruption).  LSH dup clusters are
+    # near-cliques (diameter 2-3); hitting this means the graph is
+    # pathological or max_iter was lowered too far.
+    import warnings
+
+    warnings.warn(
+        f"lsh_components: not converged after {max_iter} rounds; "
+        "labels are valid but possibly under-merged — raise "
+        "max_iter", RuntimeWarning, stacklevel=stacklevel)
 
 
 # edge-count gate below which the pruned, star-contracted duplicate
@@ -657,7 +627,6 @@ def lsh_components(edges: DataFrame, id_col: str = "doc_id",
                    max_iter: int = 10,
                    checkpoint_dir: str | None = None,
                    driver_max_edges: int | None = None,
-                   assume_distinct: bool = False,
                    all_ids: DataFrame | None = None) -> DataFrame:
     """Connected components of a bipartite (id, bucket) graph.
 
@@ -698,10 +667,10 @@ def lsh_components(edges: DataFrame, id_col: str = "doc_id",
     also forces the distributed path (a driver-resident solve has no
     executor-failure story to checkpoint).
 
-    ``assume_distinct`` is accepted for compatibility and ignored:
-    the star contraction's own dropDuplicates makes duplicate
-    (id, bucket) input rows harmless (see inline comment), so the old
-    defensive pre-shuffle is never needed.  ``all_ids`` supplies
+    Duplicate (id, bucket) input rows are harmless (see inline
+    comment).  Rows with a null id or bucket carry no co-occurrence
+    evidence and are dropped before both strategies; a null id in the
+    universe comes back with a null ``rep_id``.  ``all_ids`` supplies
     the universe of ids (each id exactly once) so it isn't re-derived
     by a distinct() over the edge table; ids absent from ``edges``
     come back as their own representative either way.
@@ -717,12 +686,6 @@ def lsh_components(edges: DataFrame, id_col: str = "doc_id",
         def _ckpt(df: DataFrame, eager: bool) -> DataFrame:
             return df.localCheckpoint(eager=eager)
 
-    # assume_distinct is retained for API compatibility but no longer
-    # buys anything: after the star contraction below, duplicate
-    # (id, bucket) rows cannot change the result — min(__id) ignores
-    # repeats, and a row-duplicated singleton bucket survives pruning
-    # only to emit a harmless (x, x) self-edge.
-    del assume_distinct
     e_all = edges.select(F.col(id_col).alias("__id"),
                          F.col(bucket_col).alias("__b"))
     if all_ids is None:
@@ -734,7 +697,7 @@ def lsh_components(edges: DataFrame, id_col: str = "doc_id",
         # from the signature UDF into the star exchange — no
         # materialization at all.
         e_all = _ckpt(e_all, False)
-        all_ids = e_all.select("__id").distinct()
+        all_ids = _id_universe(e_all, "__id")
     else:
         all_ids = all_ids.select(
             F.col(all_ids.columns[0]).alias("__id"))
@@ -757,7 +720,10 @@ def lsh_components(edges: DataFrame, id_col: str = "doc_id",
     #    SAME min, so the b band copies collapse to ONE row — the
     #    iterated/collected edge table shrinks from O(members x bands)
     #    to ~O(members), i.e. ~16x at the default 64/16 banding, for
-    #    both physical strategies below.
+    #    both physical strategies below.  Duplicate (id, bucket) rows
+    #    cannot change the result: min(__id) ignores repeats, and a
+    #    row-duplicated singleton bucket survives pruning only to emit
+    #    a harmless (x, x) self-edge.
     #
     # WHY a window and not groupBy().agg(): the bucket key is ~unique
     # for every non-duplicate doc's bands, so a hash aggregate builds
@@ -769,8 +735,6 @@ def lsh_components(edges: DataFrame, id_col: str = "doc_id",
     # measured ~35% faster end-to-end at 8 cores and, more
     # importantly, the hash-agg's summed CPU inflated ~2x from 2 to
     # 8 cores (memory-bound) while the sort does not.
-    from pyspark.sql import Window
-
     from .aggregate import _shuffle_partitions
 
     # The window's exchange is PINNED at spark.sql.shuffle.partitions
@@ -788,17 +752,30 @@ def lsh_components(edges: DataFrame, id_col: str = "doc_id",
     # NULLs into one pseudo-bucket, which would star-contract unrelated
     # docs into one component; a null bucket carries no co-occurrence
     # evidence, so the correct edge contribution is none (ids with no
-    # surviving bucket remain their own representative).
+    # surviving bucket remain their own representative).  Null ids go
+    # too — they are no document, and the driver path cannot label
+    # them — but only after the window, where min(__id) already skips
+    # them: dropped before it, the filter would be pushed into the
+    # upstream scan, below the signature UDF.  A bucket left with one
+    # real member then emits only a harmless (x, x) self-edge.
     w = Window.partitionBy("__b")
     e = (e_all
          .where(F.col("__b").isNotNull())
          .repartition(_shuffle_partitions(e_all), "__b")
          .withColumn("__c", F.count(F.lit(1)).over(w))
          .withColumn("__bm", F.min("__id").over(w))
-         .where(F.col("__c") > 1)
+         .where((F.col("__c") > 1) & F.col("__id").isNotNull())
          .select("__id", F.col("__bm").alias("__b"))
          .dropDuplicates(["__id", "__b"]))
     e = _ckpt(e, False)
+
+    def _reps(labels: DataFrame) -> DataFrame:
+        # (id, rep_id) over the whole universe: unlabelled ids are
+        # their own representative
+        return (all_ids.join(labels, "__id", "left")
+                .select(F.col("__id").alias(id_col),
+                        F.coalesce("__rep", F.col("__id")).alias("rep_id")))
+
     if checkpoint_dir is None:
         # the count doubles as the materializing action for both
         # checkpoints above; its value is the driver-path gate
@@ -819,16 +796,10 @@ def lsh_components(edges: DataFrame, id_col: str = "doc_id",
             b_codes, _ = _factorize_exact(tbl.column("__b"))
             id_vals, reps = _driver_components(
                 tbl.column("__id").to_pandas(), b_codes, max_iter)
-            spark = edges.sparkSession
-            lab_df = spark.createDataFrame(
+            return _reps(F.broadcast(edges.sparkSession.createDataFrame(
                 pd.DataFrame({"__id": np.asarray(id_vals),
-                              "__rep": reps}))
-            return (all_ids.join(F.broadcast(lab_df), "__id", "left")
-                    .select(F.col("__id").alias(id_col),
-                            F.coalesce("__rep", F.col("__id"))
-                            .alias("rep_id")))
-    labels = (e.select("__id").distinct()
-              .withColumn("__rep", F.col("__id")))
+                              "__rep": reps}))))
+    labels = _id_universe(e, "__id").withColumn("__rep", F.col("__id"))
     for _ in range(max_iter):
         bmin = (e.join(labels, "__id")
                 .groupBy("__b").agg(F.min("__rep").alias("__bmin")))
@@ -861,20 +832,8 @@ def lsh_components(edges: DataFrame, id_col: str = "doc_id",
         if changed == 0:
             break
     else:
-        # exhausting max_iter silently would under-merge: members of a
-        # long chain keep non-minimal reps, so some duplicates survive
-        # as keepers (recall loss, never corruption).  LSH dup clusters
-        # are near-cliques (diameter 2-3); hitting this means the graph
-        # is pathological or max_iter was lowered too far.
-        import warnings
-
-        warnings.warn(
-            f"lsh_components: not converged after {max_iter} rounds; "
-            "labels are valid but possibly under-merged — raise "
-            "max_iter", RuntimeWarning, stacklevel=2)
-    return (all_ids.join(labels, "__id", "left")
-            .select(F.col("__id").alias(id_col),
-                    F.coalesce("__rep", F.col("__id")).alias("rep_id")))
+        _warn_unconverged(max_iter, stacklevel=3)
+    return _reps(labels)
 
 
 def _dedup_decisions(ids_and_buckets: DataFrame, id_col: str,
@@ -890,12 +849,8 @@ def _dedup_decisions(ids_and_buckets: DataFrame, id_col: str,
     much larger bucket table; ids with no bucket/edge are their own
     representative."""
     if all_ids is None:
-        all_ids = ids_and_buckets.select(id_col).distinct()
-    if verified_edges is None:
-        comp = lsh_components(ids_and_buckets, id_col, "__bucket",
-                              max_iter, checkpoint_dir,
-                              assume_distinct=True, all_ids=all_ids)
-    else:
+        all_ids = _id_universe(ids_and_buckets, id_col)
+    if verified_edges is not None:
         # verified (id_a, id_b) edges -> 2-member hyperedges keyed by
         # the edge pair itself.  The key must be collision-free: a
         # 64-bit hash key would, at crawl scale (billions of verified
@@ -904,13 +859,12 @@ def _dedup_decisions(ids_and_buckets: DataFrame, id_col: str,
         # non-duplicate.  lsh_components accepts any groupable key
         # type, so use the exact pair struct.
         ek = F.struct(F.col("id_a"), F.col("id_b")).alias("__bucket")
-        both = (verified_edges.select(F.col("id_a").alias(id_col), ek)
-                .unionByName(
-                    verified_edges.select(F.col("id_b").alias(id_col),
-                                          ek)))
-        comp = lsh_components(both, id_col, "__bucket", max_iter,
-                              checkpoint_dir, assume_distinct=True,
-                              all_ids=all_ids)
+        ids_and_buckets = (
+            verified_edges.select(F.col("id_a").alias(id_col), ek)
+            .unionByName(verified_edges.select(F.col("id_b").alias(id_col),
+                                               ek)))
+    comp = lsh_components(ids_and_buckets, id_col, "__bucket", max_iter,
+                          checkpoint_dir, all_ids=all_ids)
     return comp.withColumn("is_keeper", F.col("rep_id") == F.col(id_col))
 
 
@@ -938,37 +892,29 @@ def minhash_dedup(df: DataFrame, text_col: str = "text",
     ``id_col`` is a primary key by construction (the normal case in a
     crawl pipeline).  With duplicate ids it would emit one decision row
     per input row instead of per id."""
-    ids = df.select(F.col(id_col))
-    if not assume_unique_ids:
-        ids = ids.distinct()
     if threshold is None:
         # no verification ⇒ fingerprints are never needed: the fused
         # minhash UDF keeps them inside one Python stage (no Arrow
         # round-trip of the 36-hashes-per-doc fingerprint arrays)
-        banded = minhash_buckets(df, text_col, id_col, k_shingle,
-                                 num_perm, bands)
-        return _dedup_decisions(banded, id_col, None, max_iter,
-                                checkpoint_dir, all_ids=ids)
-    sigs = df.select(
-        F.col(id_col),
-        shingle_fingerprints(text_col, k_shingle).alias("__sh"),
-    ).withColumn("__sig", minhash_signature("__sh", num_perm))
-    banded = minhash_buckets(df, text_col, id_col, k_shingle, num_perm,
-                             bands, _sigs=sigs)
-    # the bucket table feeds both the verification edges and the
-    # component propagation — checkpoint it once so the (expensive)
-    # minhash signatures aren't computed twice
-    banded = banded.localCheckpoint(eager=False)
-    sh = sigs.select(id_col, "__sh")
-    verified = (bucket_candidate_edges(banded, id_col)
-                .join(sh.select(F.col(id_col).alias("id_a"),
-                                F.col("__sh").alias("__sa")), "id_a")
-                .join(sh.select(F.col(id_col).alias("id_b"),
-                                F.col("__sh").alias("__sb")), "id_b")
-                .where(ngram_jaccard("__sa", "__sb") >= threshold)
-                .select("id_a", "id_b"))
-    return _dedup_decisions(banded, id_col, verified, max_iter,
-                            checkpoint_dir, all_ids=ids)
+        buckets = minhash_buckets(df, text_col, id_col, k_shingle,
+                                  num_perm, bands)
+        verified = None
+    else:
+        sh = df.select(F.col(id_col), shingle_fingerprints(
+            text_col, k_shingle).alias("__sh"))
+        sigs = sh.withColumn("__sig", minhash_signature("__sh", num_perm))
+        # the bucket table feeds both the verification edges and the
+        # component propagation — checkpoint it once so the (expensive)
+        # minhash signatures aren't computed twice
+        buckets = minhash_buckets(df, text_col, id_col, k_shingle,
+                                  num_perm, bands, _sigs=sigs) \
+            .localCheckpoint(eager=False)
+        verified = (_verified(bucket_candidate_edges(buckets, id_col), sh,
+                              id_col, "__sh", ngram_jaccard, "jaccard")
+                    .where(F.col("jaccard") >= threshold))
+    return _dedup_decisions(buckets, id_col, verified, max_iter,
+                            checkpoint_dir,
+                            _id_universe(df, id_col, assume_unique_ids))
 
 
 def minhash_buckets(df: DataFrame, text_col: str = "text",
@@ -979,7 +925,6 @@ def minhash_buckets(df: DataFrame, text_col: str = "text",
     minhash_dedup clusters over, exposed so pipelines can audit
     candidate volume (e.g. bucket_min_edges counts are O(k) per
     duplicate cluster)."""
-    rows_per_band = num_perm // bands
     if _sigs is None:
         from .text import word_hashes
 
@@ -987,10 +932,8 @@ def minhash_buckets(df: DataFrame, text_col: str = "text",
             F.col(id_col),
             minhash_from_word_hashes(word_hashes(text_col), k_shingle,
                                      num_perm).alias("__sig"))
-    return (_sigs.select(id_col,
-                         _band_keys("__sig", bands, rows_per_band))
-            .select(id_col,
-                    F.xxhash64("__band", "__key").alias("__bucket")))
+    return _buckets(_minhash_band_keys(_sigs, id_col, num_perm, bands),
+                    id_col)
 
 
 def bucket_min_edges(ids_and_buckets: DataFrame,
@@ -1003,9 +946,6 @@ def bucket_min_edges(ids_and_buckets: DataFrame,
             .where(F.col(id_col) != F.col("id_a"))
             .select("id_a", F.col(id_col).alias("id_b"))
             .dropDuplicates(["id_a", "id_b"]))
-
-
-_bucket_min_edges = bucket_min_edges
 
 
 def bucket_candidate_edges(ids_and_buckets: DataFrame,
@@ -1023,7 +963,6 @@ def bucket_candidate_edges(ids_and_buckets: DataFrame,
     interloper.  Residual risk (two duplicates separated by >=2
     interleaved interlopers with a non-dup min, in EVERY band they
     co-occur in) falls off with the OR-redundancy of the bands."""
-    from pyspark.sql import Window
     w = Window.partitionBy("__bucket").orderBy(id_col)
     chain = (ids_and_buckets
              .withColumn("__prev", F.lag(id_col).over(w))
@@ -1047,39 +986,20 @@ def simhash_dedup(df: DataFrame, text_col: str = "text",
     O(k) per bucket — and components run over surviving edges; without,
     chunk co-occurrence is the edge.  ``assume_unique_ids``: see
     minhash_dedup."""
-    n_chunks = max_hamming + 1
-    width = 64 // n_chunks
-    mask = (1 << width) - 1
     # checkpoint the simhash table: verification edges re-join it twice
     # and the chunk buckets derive from it — without this the bit-vote
     # UDF would run 3x
     sh = (df.select(F.col(id_col), simhash(text_col).alias("__simhash"))
           .localCheckpoint(eager=False))
-    chunks = (sh.select(
-        id_col,
-        F.posexplode(F.array(*[
-            F.shiftrightunsigned("__simhash", i * width).bitwiseAND(mask)
-            for i in range(n_chunks)
-        ])).alias("__chunk", "__ckey"))
-        .select(id_col,
-                F.xxhash64("__chunk", "__ckey").alias("__bucket")))
-    ids = df.select(F.col(id_col))
-    if not assume_unique_ids:
-        ids = ids.distinct()
-    if not verify:
-        return _dedup_decisions(chunks, id_col, None, max_iter,
-                                checkpoint_dir, all_ids=ids)
-    verified = (bucket_candidate_edges(chunks, id_col)
-                .join(sh.select(F.col(id_col).alias("id_a"),
-                                F.col("__simhash").alias("__ha")), "id_a")
-                .join(sh.select(F.col(id_col).alias("id_b"),
-                                F.col("__simhash").alias("__hb")), "id_b")
-                .where(F.bit_count(
-                    F.col("__ha").bitwiseXOR(F.col("__hb")))
-                    <= max_hamming)
-                .select("id_a", "id_b"))
-    return _dedup_decisions(chunks, id_col, verified, max_iter,
-                            checkpoint_dir, all_ids=ids)
+    buckets = _buckets(_simhash_band_keys(sh, id_col, max_hamming), id_col)
+    verified = None
+    if verify:
+        verified = (_verified(bucket_candidate_edges(buckets, id_col), sh,
+                              id_col, "__simhash", _hamming, "hamming")
+                    .where(F.col("hamming") <= max_hamming))
+    return _dedup_decisions(buckets, id_col, verified, max_iter,
+                            checkpoint_dir,
+                            _id_universe(df, id_col, assume_unique_ids))
 
 
 def embedding_dedup(df: DataFrame, vec_col: str = "embedding",
@@ -1096,37 +1016,18 @@ def embedding_dedup(df: DataFrame, vec_col: str = "embedding",
     bucket min-id member only (O(k) per bucket); ``threshold=None``
     treats bucket co-occurrence as the edge.  ``assume_unique_ids``:
     see minhash_dedup."""
-    # reuse the pair operator's bucketing by projecting ids+buckets out
-    # of its candidate stage: rebuild the bucket table directly
-    buckets = _hyperplane_buckets_udf(n_planes, n_bands, seed, dim)
     vecs = df.select(F.col(id_col),
                      F.col(vec_col).cast("array<double>").alias("__v"))
-    b = (vecs.select(id_col,
-                     F.posexplode(buckets("__v")).alias("__band",
-                                                        "__bucket0"))
-         .select(id_col,
-                 F.xxhash64("__band", "__bucket0").alias("__bucket")))
-    ids = df.select(F.col(id_col))
-    if not assume_unique_ids:
-        ids = ids.distinct()
-    if threshold is None:
-        return _dedup_decisions(b, id_col, None, max_iter,
-                                checkpoint_dir, all_ids=ids)
-    # bucket table feeds both verification and propagation: checkpoint
-    # so the projection matmul UDF runs once
-    b = b.localCheckpoint(eager=False)
-    dot = F.aggregate(F.zip_with("__va", "__vb", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform("__va", lambda x: x * x),
-                            F.lit(0.0), lambda a, v: a + v))
-    nb = F.sqrt(F.aggregate(F.transform("__vb", lambda x: x * x),
-                            F.lit(0.0), lambda a, v: a + v))
-    verified = (bucket_candidate_edges(b, id_col)
-                .join(vecs.select(F.col(id_col).alias("id_a"),
-                                  F.col("__v").alias("__va")), "id_a")
-                .join(vecs.select(F.col(id_col).alias("id_b"),
-                                  F.col("__v").alias("__vb")), "id_b")
-                .where(dot / (na * nb) >= threshold)
-                .select("id_a", "id_b"))
-    return _dedup_decisions(b, id_col, verified, max_iter,
-                            checkpoint_dir, all_ids=ids)
+    buckets = _buckets(_embedding_band_keys(vecs, id_col, n_planes,
+                                            n_bands, seed, dim), id_col)
+    verified = None
+    if threshold is not None:
+        # bucket table feeds both verification and propagation:
+        # checkpoint so the projection matmul UDF runs once
+        buckets = buckets.localCheckpoint(eager=False)
+        verified = (_verified(bucket_candidate_edges(buckets, id_col),
+                              vecs, id_col, "__v", _cosine, "cosine")
+                    .where(F.col("cosine") >= threshold))
+    return _dedup_decisions(buckets, id_col, verified, max_iter,
+                            checkpoint_dir,
+                            _id_universe(df, id_col, assume_unique_ids))

@@ -25,7 +25,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..core import TDigest, merge_digests
+from ..core import TDigest, merge_blobs
 from ..operators.aggregate import DIGEST_FIELD, merge_digests_df, \
     partial_digests
 
@@ -275,13 +275,12 @@ def stateful_digest_stream(
             # idle past the TTL: evict; a later arrival starts fresh
             state.remove()
             return
-        d = TDigest(compression, scale=scale)
-        rows = 0
-        if state.exists:
-            blob, rows = state.get
-            d = merge_digests([d, TDigest.from_bytes(bytes(blob),
-                                                     scale=scale)],
-                              compression=compression, scale=scale)
+        blob, rows = state.get if state.exists else (None, 0)
+        # an empty state starts fresh: merge_blobs would size an empty
+        # merge's buffer differently
+        d = (merge_blobs([bytes(blob)], compression=compression,
+                         scale=scale)
+             if rows > 0 else TDigest(compression, scale=scale))
         for pdf in pdf_iter:
             vals = pdf[value_col].to_numpy(dtype="float64", na_value=np.nan)
             vals = vals[~np.isnan(vals)]

@@ -108,6 +108,18 @@ def test_exact_dedup(spark):
     assert groups[0].ids == [1, 2, 3]
 
 
+def test_exact_dedup_keep(spark):
+    """keep picks the min or max id of a duplicate group; any other
+    value is an error, not a silent max."""
+    sdf = spark.createDataFrame([(1, "same text"), (2, "same text")],
+                                "doc_id long, text string")
+    for keep, want in (("min", [1]), ("max", [2])):
+        assert [r.doc_id for r in exact_dedup(sdf, keep=keep)
+                .collect()] == want
+    with pytest.raises(ValueError, match="keep"):
+        exact_dedup(sdf, keep="first")
+
+
 def test_load_table_catalog_contract(spark, monkeypatch):
     """The ``catalog:`` branch of load_table must resolve to
     spark.read.table('<catalog-prefix>.<table>') — pinned with a mocked
@@ -171,8 +183,7 @@ def test_lsh_components_star_contraction_invariants(spark):
     already share that member, so merging is correct; (b) duplicate
     (id, bucket) input rows change nothing — including a
     row-duplicated singleton bucket, whose surviving self-edge is
-    harmless; (c) assume_distinct is accepted and ignored.  All
-    checked on BOTH physical strategies."""
+    harmless.  All checked on BOTH physical strategies."""
     from t_digest_spark.operators.dedup import lsh_components
 
     # buckets: 100={1,2}, 200={1,3} (shared min 1), 300={7,8},
@@ -185,12 +196,26 @@ def test_lsh_components_star_contraction_invariants(spark):
     expect = {1: 1, 2: 1, 3: 1, 7: 7, 8: 8, 9: 9}
     # NOTE: bucket 300 = {7,8} -> component {7,8} rep 7
     expect[8] = 7
-    for kw in ({}, {"assume_distinct": True},
-               {"driver_max_edges": 0},
-               {"driver_max_edges": 0, "assume_distinct": True}):
+    for kw in ({}, {"driver_max_edges": 0}):
         got = {r.doc_id: r.rep_id
                for r in lsh_components(edges, "doc_id", **kw).collect()}
         assert got == expect, kw
+
+
+@pytest.mark.parametrize("driver_max_edges", [None, 0])
+def test_lsh_components_null_ids_dropped(spark, driver_max_edges):
+    """A null id is no document: both component strategies drop its
+    edges (it bridges nothing) and return it with a null rep_id."""
+    from t_digest_spark.operators.dedup import lsh_components
+
+    edges = spark.createDataFrame(
+        [(1, 100), (2, 100), (None, 100), (None, 200), (3, 200),
+         (4, 300), (5, 300)], "doc_id long, __bucket long")
+    got = {r.doc_id: r.rep_id
+           for r in lsh_components(edges, "doc_id",
+                                   driver_max_edges=driver_max_edges)
+           .collect()}
+    assert got == {1: 1, 2: 1, 3: 3, 4: 4, 5: 4, None: None}
 
 
 def test_minhash_dedup_assume_unique_ids(spark):
@@ -216,7 +241,7 @@ def test_minhash_dedup_cluster(spark):
     exactly one keeper, in both bucket-edge and verified modes — and
     the candidate volume is O(k) edges, never O(k^2) pairs."""
     from t_digest_spark.operators.dedup import (
-        minhash_dedup, _bucket_min_edges)
+        minhash_dedup, bucket_min_edges)
     k = 40
     rows = [(i, f"unique document number {i} about topic {i * 13}")
             for i in range(20)]
@@ -290,11 +315,11 @@ def test_embedding_dedup_cluster(spark):
 def test_bucket_min_edges_linear_in_cluster_size(spark):
     """The verification edge set for one bucket of k members is k-1
     rows (member vs bucket-min), not k*(k-1)/2 pairs."""
-    from t_digest_spark.operators.dedup import _bucket_min_edges
+    from t_digest_spark.operators.dedup import bucket_min_edges
     k = 50
     b = spark.createDataFrame([(i, 42) for i in range(k)],
                               "doc_id long, __bucket long")
-    edges = _bucket_min_edges(b, "doc_id").collect()
+    edges = bucket_min_edges(b, "doc_id").collect()
     assert len(edges) == k - 1
     assert all(e.id_a == 0 for e in edges)
 
@@ -493,6 +518,50 @@ def test_embedding_cosine_pairs(spark):
     got = {(r.id_a, r.id_b): r.cosine for r in pairs.collect()}
     assert (1, 2) in got and got[(1, 2)] > 0.99
     assert (1, 3) not in got
+
+
+@pytest.mark.parametrize("op,kw", [
+    ("minhash_lsh_pairs", {"num_perm": 8, "bands": 16}),
+    ("minhash_lsh_pairs", {"bands": 0}),
+    ("minhash_dedup", {"num_perm": 8, "bands": 16}),
+    ("minhash_buckets", {"num_perm": 8, "bands": 16}),
+    ("simhash_pairs", {"max_hamming": 64}),
+    ("simhash_dedup", {"max_hamming": 64, "verify": False}),
+    ("simhash_dedup", {"max_hamming": -1}),
+], ids=["minhash_pairs-8x16", "minhash_pairs-bands0", "minhash_dedup-8x16",
+        "minhash_buckets-8x16", "simhash_pairs-64", "simhash_dedup-64",
+        "simhash_dedup-neg"])
+def test_lsh_banding_rejects_degenerate_parameters(spark, op, kw):
+    """Banding that leaves a band empty (bands > num_perm) or a SimHash
+    chunk 0 bits wide (max_hamming >= 64) puts every document in one
+    bucket; it must raise, not silently merge unrelated documents."""
+    from t_digest_spark.operators import dedup
+
+    sdf = spark.createDataFrame(
+        [(i, f"unrelated document {i} about subject {i * 31}")
+         for i in range(6)], "doc_id long, text string")
+    with pytest.raises(ValueError, match="bands|max_hamming"):
+        getattr(dedup, op)(sdf, **kw)
+
+
+def test_pairs_plans_have_three_joins(spark):
+    """Verified pairs = one candidate self-join + one payload re-join
+    per side: exactly 3 joins in each pairs operator's plan."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    docs = spark.createDataFrame([(1, "a b c d e f"), (2, "a b c d e g")],
+                                 "doc_id long, text string")
+    vecs = spark.createDataFrame([(1, [1.0, 0.0]), (2, [1.0, 0.1])],
+                                 "vec_id long, embedding array<double>")
+    for df in (minhash_lsh_pairs(docs), simhash_pairs(docs),
+               embedding_cosine_pairs(vecs)):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        joins = re.findall(r"^\(\d+\) (\w*Join)", buf.getvalue(), re.M)
+        assert len(joins) == 3, joins
 
 
 # -------------------------------------------------------- similarity

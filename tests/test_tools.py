@@ -2,9 +2,12 @@
 that match nothing (VERDICT r5 #3 — a typo'd query name used to run
 zero queries and print ALL OK with exit 0)."""
 
+import importlib
 import os
 import subprocess
 import sys
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -19,13 +22,17 @@ def test_check_oracles_unknown_name_exits_nonzero():
     assert "ALL OK" not in r.stdout
 
 
-def test_bench_scaling_job_files_exist():
-    """job_fingerprint hashes every JOB_FILES path; a stale entry would
-    make it raise FileNotFoundError."""
+@pytest.mark.parametrize("tool,files,fingerprint", [
+    ("bench_scaling", "JOB_FILES", "job_fingerprint"),
+    ("bench_dedup", "DEDUP_JOB_FILES", "dedup_job_fingerprint"),
+], ids=["bench_scaling", "bench_dedup"])
+def test_bench_scaling_job_files_exist(tool, files, fingerprint):
+    """Each job fingerprint hashes every path of its file list; a stale
+    entry would make it raise FileNotFoundError."""
     sys.path.insert(0, os.path.join(REPO, "tools"))
-    import bench_scaling
+    mod = importlib.import_module(tool)
 
-    missing = [f for f in bench_scaling.JOB_FILES
+    missing = [f for f in getattr(mod, files)
                if not os.path.exists(os.path.join(REPO, f))]
     assert missing == []
-    assert bench_scaling.job_fingerprint()
+    assert getattr(mod, fingerprint)()
