@@ -947,7 +947,7 @@ def _sort_ties_stable(x: np.ndarray) -> np.ndarray:
 # probe digests for try_singleton_blob, one per (compression,
 # buffer_size, scale-name): only read for their derived working
 # compression / flag set, never mutated; paired with a per-n
-# eligibility memo
+# eligibility memo holding only n < buffer size
 _SINGLETON_PROBES: dict = {}
 
 
@@ -955,10 +955,7 @@ def _singletons_survive(probe: "TDigest", n: int) -> bool:
     """Would a single merge pass over n unit-weight samples keep every
     sample as its own centroid?  Evaluates the SAME all-singletons
     early-exit predicate ``_cluster_starts`` uses, with the probe's
-    working compression."""
-    if n > probe._buffer_size - 1:
-        # one add_batch must fit the buffer without an overflow merge
-        return False
+    working compression.  The caller keeps n below the buffer size."""
     if n <= 2:
         return True
     total = float(n)
@@ -1002,6 +999,10 @@ def try_singleton_blob(values: np.ndarray, compression: float = 100.0,
         entry = _SINGLETON_PROBES[key] = (
             TDigest(compression, buffer_size=buffer_size, scale=scale), {})
     probe, elig_cache = entry
+    if n >= probe._buffer_size:
+        # one add_batch must fit the buffer without an overflow merge;
+        # checked before the memo, which large n would grow unbounded
+        return None
     # eligibility depends only on n for unit weights — memoize it (the
     # predicate costs ~25 us vectorized; group sizes repeat heavily
     # within a task)

@@ -482,7 +482,11 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
     the conventional <=3-bit budget; larger budgets mean narrower
     chunks and proportionally more candidates.
     """
-    sh = df.select(F.col(id_col), simhash(text_col).alias("__simhash"))
+    # checkpoint the simhash table: the candidate self-join and both
+    # payload re-joins read it — without this the bit-vote UDF would run
+    # on every branch, six times per document
+    sh = (df.select(F.col(id_col), simhash(text_col).alias("__simhash"))
+          .localCheckpoint(eager=False))
     cand = _candidate_pairs(_simhash_band_keys(sh, id_col, max_hamming),
                             id_col)
     return (_verified(cand, sh, id_col, "__simhash", _hamming, "hamming")

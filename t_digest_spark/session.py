@@ -16,7 +16,17 @@ These settings matter at any scale; two are load-bearing:
 - ``spark.python.daemon.module = t_digest_spark.daemon``
   preloads numpy/pandas/pyarrow in the worker daemon so per-task forked
   workers inherit them copy-on-write instead of re-importing (~0.7 s per
-  task in syscall-constrained sandboxes).
+  task in syscall-constrained sandboxes).  It also stat-guards zip
+  re-reads: each task's ``importlib.invalidate_caches()`` otherwise
+  makes every cached zipimporter re-read ``pyspark.zip``'s directory,
+  ~0.2 s of init per task even on reused workers.  The ``--py-files``
+  shape, where ``_daemon_importable()`` is False and the stock daemon
+  runs, still pays that ~0.2 s per task.  To see it, set the loggers
+  ``org.apache.spark.sql.execution.python`` (SQL UDFs) and
+  ``org.apache.spark.api.python`` (RDD functions) to INFO: each task
+  logs ``Times: total = …, boot = …, init = …, finish = …``; on a
+  reused worker ``boot`` is negative (it counts from the end of the
+  worker's previous task), so the task's setup cost is ``init + boot``.
 
 The rest are ordinary large-input hygiene: AQE on, shuffle partitions
 sized to the cluster, scan splits sized so small files still fan out.
@@ -43,8 +53,10 @@ def _daemon_importable() -> bool:
     via runtime sys.path injection, but the daemon module is spawned
     before that, so the preloading daemon would kill every worker with
     ModuleNotFoundError.  Fall back to the stock daemon there (slower
-    per-task imports, still correct); production images should put the
-    package on the worker PYTHONPATH to keep the preloading daemon.
+    per-task imports, and no stat guard on zip re-reads, so every task
+    pays ~0.2 s of ``PythonRunner`` init re-reading ``pyspark.zip``;
+    still correct); production images should put the package on the
+    worker PYTHONPATH to keep the preloading daemon.
 
     The probe strips from PYTHONPATH any ZIP/EGG FILE that provides
     t_digest_spark — the --py-files shape: spark-submit injects the

@@ -35,14 +35,20 @@ def dist_quantile(q: float, data_sorted: np.ndarray) -> float:
 def spark():
     from pyspark.sql import SparkSession
 
-    spark = (
+    from t_digest_spark.session import _daemon_importable
+
+    builder = (
         SparkSession.builder.master("local[4]")
         .appName("t-digest-spark-tests")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", "4g")
         .config("spark.ui.enabled", "false")
-        .getOrCreate()
     )
+    if _daemon_importable():
+        # the worker daemon the library recommends
+        builder = builder.config("spark.python.daemon.module",
+                                 "t_digest_spark.daemon")
+    spark = builder.getOrCreate()
     yield spark
     spark.stop()

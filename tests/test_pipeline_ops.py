@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from t_digest_spark.operators.dedup import (
     embedding_cosine_pairs, exact_dedup, exact_dup_groups,
-    minhash_lsh_pairs, ngram_jaccard, simhash_pairs,
+    minhash_lsh_pairs, ngram_jaccard, simhash, simhash_pairs,
 )
 from t_digest_spark.operators.multimodal import (
     decode_features, frame_sample, set_decoder, synth_media,
@@ -503,6 +503,45 @@ def test_simhash_pairs(spark):
            for r in simhash_pairs(sdf, max_hamming=12).collect()}
     assert (1, 2) in got
     assert (1, 3) not in got
+
+
+def test_simhash_pairs_single_evaluation_exact(spark):
+    """simhash_pairs evaluates the bit-vote UDF at most once in its plan
+    (not once per join branch) and returns exactly the pairs within the
+    Hamming budget, by brute force over near-duplicate clusters."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    rng = np.random.default_rng(11)
+    rows = []
+    for _ in range(30):
+        base = rng.integers(0, 300, size=40)
+        for edits in range(3):
+            d = base.copy()
+            d[rng.integers(0, 40, size=edits)] = rng.integers(
+                0, 300, size=edits)
+            rows.append((len(rows), " ".join(f"w{t}" for t in d)))
+    sdf = spark.createDataFrame(rows, "doc_id long, text string")
+    pairs = simhash_pairs(sdf, max_hamming=3)
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        pairs.explain("formatted")
+    nodes = re.split(r"\n(?=\(\d+\) )", buf.getvalue())
+    evals = [n for n in nodes
+             if re.match(r"\(\d+\) ArrowEvalPython", n) and "votes" in n]
+    assert len(evals) <= 1, len(evals)
+
+    sh = {r.doc_id: r.h for r in
+          sdf.select("doc_id", simhash("text").alias("h")).collect()}
+    ids = sorted(sh)
+    expect = {(a, b): bin((sh[a] ^ sh[b]) & (2**64 - 1)).count("1")
+              for i, a in enumerate(ids) for b in ids[i + 1:]}
+    expect = {k: v for k, v in expect.items() if v <= 3}
+    got = {(r.id_a, r.id_b): r.hamming for r in pairs.collect()}
+    assert got == expect
+    assert any(0 < v for v in got.values())
 
 
 def test_embedding_cosine_pairs(spark):

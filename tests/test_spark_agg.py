@@ -691,6 +691,23 @@ def test_singleton_blob_threshold_behavior():
                               DEFAULT_BUFFER, "K_2") is None
 
 
+def test_singleton_blob_memo_bounded():
+    """The per-n eligibility memo only holds n below the buffer size:
+    larger n is declined at the first check, so a sweep of large group
+    sizes must not grow it."""
+    from t_digest_spark import core
+
+    key = (37.0, -1, "K_2")
+    core._SINGLETON_PROBES.pop(key, None)
+    probe = core.TDigest(37.0, scale="K_2")
+    buf = probe._buffer_size
+    for n in list(range(1, 64)) + list(range(buf - 2, buf + 3000)):
+        blob = core.try_singleton_blob(np.arange(float(n)), 37.0, -1, "K_2")
+        assert blob is None or n < buf
+    assert len(core._SINGLETON_PROBES[key][1]) <= buf
+    core._SINGLETON_PROBES.pop(key, None)
+
+
 def test_singleton_blob_mixed_signed_zeros():
     """0.0 and -0.0 tie but differ in their bytes: the fast path, the
     unit-weight full path and the weighted (stable argsort) path must

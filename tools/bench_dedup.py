@@ -56,6 +56,7 @@ DEDUP_JOB_FILES = (
     "t_digest_spark/operators/dedup.py",
     "t_digest_spark/operators/text.py",
     "t_digest_spark/session.py",
+    "t_digest_spark/daemon.py",  # every Python task runs under it
     "tools/bench_dedup.py",  # harness config shapes the measured job too
 )
 

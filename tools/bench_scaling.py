@@ -48,6 +48,7 @@ JOB_FILES = (
     "t_digest_spark/operators/aggregate.py",
     "t_digest_spark/operators/extract.py",
     "t_digest_spark/sources/tables.py",
+    "t_digest_spark/daemon.py",  # every Python task runs under it
 )
 
 
