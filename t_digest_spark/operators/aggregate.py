@@ -38,6 +38,7 @@ per centroid, see core.to_small_bytes).
 
 from __future__ import annotations
 
+import functools
 from typing import Callable, NamedTuple, Sequence
 
 import numpy as np
@@ -120,6 +121,98 @@ def _shuffle_partitions(df: DataFrame) -> int:
     except (TypeError, ValueError):
         return spark.sparkContext.defaultParallelism
 
+
+# logical operators that keep their child's partitioning: the walk from
+# a partial table down to its scan passes only through these
+_NARROW = frozenset(("Project", "Filter", "SubqueryAlias", "View", "Sample",
+                     "Generate", "MapInArrow", "MapInPandas"))
+# past this many files the scan's split arithmetic packs the first
+# _SIZED_FILES sizes and scales the count (each size is a py4j round
+# trip, ~0.1 ms)
+_SIZED_FILES = 256
+
+
+@functools.lru_cache(maxsize=1)
+def _file_partition(jvm):
+    """Spark's ``FilePartition`` object (each package step of a py4j
+    lookup is a JVM round trip)."""
+    return getattr(jvm.org.apache.spark.sql.execution.datasources,
+                   "FilePartition$").__getattr__("MODULE$")
+
+
+def _scan_tasks(df: DataFrame) -> int | None:
+    """How many tasks the scan under ``df`` runs, computed from Spark's
+    own split arithmetic without planning or running anything: the
+    analyzed plan is walked through narrow operators to a file relation,
+    ``FilePartition.maxSplitBytes`` gives the split size, and the file
+    sizes are packed the way ``FilePartition.getFilePartitions`` packs
+    them (largest first; a split closes when the next file would
+    overflow it; each file also costs ``openCostInBytes``).  Partition
+    filters are not applied, so a pruned scan is over-counted.  None
+    when the input is not a narrow chain over a file scan (shuffles,
+    joins, in-memory or streaming sources): then the stage-1 task count
+    is not known before the job runs."""
+    from py4j.protocol import Py4JError
+
+    try:
+        node = df._jdf.queryExecution().analyzed()
+        name = node.nodeName()
+        while name in _NARROW:
+            node = node.child()
+            name = node.nodeName()
+        if name != "LogicalRelation":
+            return None
+        loc = node.relation().location()
+        nil = node.children()  # a leaf's: an empty Seq for the filters
+        split = _file_partition(df.sparkSession._jvm).maxSplitBytes(
+            df.sparkSession._jsparkSession, loc.listFiles(nil, nil))
+        open_cost = df.sparkSession._jsparkSession.sessionState().conf() \
+            .filesOpenCostInBytes()
+        files = loc.allFiles()
+        n = files.size()
+        sizes = [files.apply(i).getLen()
+                 for i in range(min(n, _SIZED_FILES))]
+    except Py4JError:
+        return None
+    # files split at maxSplitBytes (parquet and ORC are splittable)
+    chunks = sorted((min(split, s - off) for s in sizes
+                     for off in range(0, s, split)), reverse=True)
+    tasks, used = 0, 0
+    for c in chunks:
+        if used and used + c > split:
+            tasks, used = tasks + 1, 0
+        used += c + open_cost
+    tasks += used > 0
+    return tasks if n <= _SIZED_FILES else -(-tasks * n // _SIZED_FILES)
+
+
+def _merge_partitions(partials: DataFrame) -> int | None:
+    """The stage-2 partition count for a grouped merge of ``partials``,
+    or None to let AQE size the exchange from bytes.
+
+    With P1 stage-1 tasks, C = defaultParallelism and S =
+    spark.sql.shuffle.partitions: when stage 1 spans more than one wave
+    (P1 > C) the merge gets ``min(S, C * ceil(P1 / C))`` partitions —
+    whole waves, never more tasks than stage 1 had.  Otherwise the
+    partial table is at most one wave's worth of sketch rows per key
+    and AQE coalesces it (a 15-row digest table runs as ONE task, not S
+    near-empty Python round trips).
+
+    Why whole waves: AQE targets about C tasks by bytes, and on the
+    flagship 100M-row job (256 scan tasks) its coalesced merge stage got
+    11 tasks at local[8] — one ragged wave that scaled 0.46 from 2 to 8
+    cores (occupancy 0.73, task CPU 22 -> 37 core-s) while the scan
+    stage scaled 0.95; the 64-task shape (8 balanced waves) restores
+    tail-hiding.  Why not a wave when P1 <= C: measured on
+    sketchbench at local[2], a C-task pin made the small sibling merges
+    of ``raw_ingest`` slower (rows/s median 2.25M -> 2.12M)."""
+    p1 = _scan_tasks(partials)
+    cores = partials.sparkSession.sparkContext.defaultParallelism
+    if p1 is None or p1 <= cores:
+        return None
+    return min(_shuffle_partitions(partials), cores * -(-p1 // cores))
+
+
 # Arrow batches are ~10k rows; we let each per-key digest buffer several
 # batches before a merge pass (amortized buffering per
 # MergingDigest.java:33-49 — bigger buffers are both faster and more
@@ -199,13 +292,17 @@ def _needs_canon(t) -> bool:
             or pa.types.is_decimal(t))
 
 
+# combined group codes stay below this; past it they are renumbered
+_CODE_SPACE = 1 << 62
+
+
 def _groups(key_cols: list, ok: np.ndarray | None = None):
     """Group rows by their Arrow key columns: returns ``(order,
     groups)`` where ``order`` stably sorts the rows by group and
     ``groups`` lists ``(raw key tuple, start, end)`` slices of it,
     skipping rows where ``ok`` is False.  The group-id step of both
     stages: each key column is dictionary-encoded (C kernel), the codes
-    combine into one int64 per row, and one stable sort makes every
+    combine into one integer per row, and one stable sort makes every
     group a contiguous slice, so Python touches each GROUP, never each
     row.  Raw keys are not canonical: NaN or 0.0/-0.0 may come back as
     several groups."""
@@ -245,12 +342,28 @@ def _groups(key_cols: list, ok: np.ndarray | None = None):
                     dict_vals.append(v)
                 codes[j] = c
         card = len(dict_vals) + 1
-        combined = codes + 1 if combined is None \
-            else combined * card + (codes + 1)
+        if combined is None:
+            combined, space = codes + 1, card
+        else:
+            if space * card >= _CODE_SPACE:
+                # renumber the codes so far densely (order-preserving)
+                # before the product could overflow int64
+                uniq, combined = np.unique(combined, return_inverse=True)
+                space = uniq.size
+            combined = combined * card + (codes + 1)
+            space *= card
         codes_list.append(codes)
         dicts.append(dict_vals)
+    # code 0 marks the filtered-out rows; the narrowest dtype that holds
+    # the code space lets NumPy's stable sort radix-sort 16-bit codes
+    # (a 262,144-row batch with 9 keys: 14.0 -> 1.7 ms per sort)
     if ok is not None and not ok.all():
-        combined = np.where(ok, combined, -1)
+        combined = np.where(ok, combined + 1, 0)
+    else:
+        combined = combined + 1
+    space += 1
+    combined = combined.astype(np.uint16 if space <= 1 << 16 else
+                               np.uint32 if space <= 1 << 32 else np.int64)
 
     order = np.argsort(combined, kind="stable")
     sorted_codes = combined[order]
@@ -258,7 +371,7 @@ def _groups(key_cols: list, ok: np.ndarray | None = None):
     bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
     starts = np.concatenate(([0], bounds))
     ends = np.concatenate((bounds, [sorted_codes.size]))
-    keep = sorted_codes[starts] >= 0  # drop the filtered-out rows bucket
+    keep = sorted_codes[starts] > 0  # drop the filtered-out rows bucket
     starts, ends = starts[keep], ends[keep]
     # each group's key, read off its first row one column at a time
     rows0 = order[starts]
@@ -541,21 +654,17 @@ def _partition_merge_gen(codec: SketchCodec, group_cols: Sequence[str]):
 
 def _merge_sketches(partials: DataFrame, group_cols: Sequence[str],
                     codec: SketchCodec,
-                    pin_partitions: bool = False) -> DataFrame:
+                    n_parts: int | None | str = "auto") -> DataFrame:
     """Stage 2: shuffle the (tiny) sketch rows by key and merge per group.
 
     Grouped path: ``repartition(keys)`` co-locates every key's partials,
     then a whole-partition ``mapInArrow`` kernel merges all keys of the
     partition in ONE Python round-trip (see _partition_merge_gen).  The
-    repartition is BY COLUMN with no pinned count by default, so AQE
-    sizes the reduce stage by actual partial bytes (guide §2.2): a
-    15-row digest table collapses to ONE task instead of
-    spark.sql.shuffle.partitions near-empty Python round-trips
-    (measured 0.65 s/query saved on the sf0.1 headline bench, where the
-    pinned 64-task stage dominated the merge).  Every downstream
-    consumer of the merge output (quantile-extract UDFs, collect)
-    inherits the right-sized partitioning too.  ``pin_partitions``: see
-    ``merge_digests_df``.
+    exchange has ``n_parts`` partitions (``"auto"``: ``_merge_partitions
+    (partials)``); None repartitions BY COLUMN and AQE sizes the reduce
+    stage by actual partial bytes.  Every downstream consumer of the
+    merge output (quantile-extract UDFs, collect) inherits its
+    partitioning.
 
     Global aggregate: a single group — funnel the per-partition sketch
     rows (already tiny) into one task and merge.  repartition, NOT
@@ -567,10 +676,10 @@ def _merge_sketches(partials: DataFrame, group_cols: Sequence[str],
     sel = partials.select(*group_cols, codec.field, "rows")
     if not group_cols:
         rep = sel.repartition(1)
-    elif pin_partitions:
-        rep = sel.repartition(_shuffle_partitions(partials), *group_cols)
     else:
-        rep = sel.repartition(*group_cols)
+        if n_parts == "auto":
+            n_parts = _merge_partitions(partials)
+        rep = sel.repartition(*([n_parts] if n_parts else []), *group_cols)
     return rep.mapInArrow(
         _partition_merge_gen(codec, group_cols),
         schema=_sketch_schema(partials, group_cols, codec.field))
@@ -594,23 +703,25 @@ def merge_digests_df(
     group_cols: Sequence[str] = (),
     compression: float = 100.0,
     scale: str = "K_2",
-    pin_partitions: bool = False,
 ) -> DataFrame:
     """Stage 2 for digest partials: shuffle the (tiny) digest rows by key
-    and merge per group (see ``_merge_sketches``).
-
-    ``pin_partitions=True`` pins the exchange at
-    spark.sql.shuffle.partitions instead — for callers that KNOW the
-    partial table is large (high key cardinality x many partitions):
-    AQE's byte-sized coalescing targets ~defaultParallelism tasks
-    there, and the resulting single ragged wave quantizes badly on the
-    core count (flagship 100M-row job, per-stage event-log profile:
-    the 11-task coalesced merge stage scaled 0.46 from 2 to 8 cores
-    with occupancy 0.73 and task CPU inflated 22 -> 37 core-s, while
-    the pinned 64-task shape — 8 balanced waves — restores tail-hiding;
-    the scan+kernel stage scales 0.95 in the same windows)."""
+    and merge per group (see ``_merge_sketches``).  The exchange is
+    sized by ``_merge_partitions``: when the partial table comes from
+    more than one wave of scan tasks it gets whole waves of
+    by-number partitions (the flagship fused job: 64), otherwise AQE
+    sizes it from bytes."""
     return _merge_sketches(partials, group_cols,
-                           digest_codec(compression, scale), pin_partitions)
+                           digest_codec(compression, scale))
+
+
+def _level1_codec(compression: float, scale: str) -> SketchCodec:
+    """``tree_merge``'s salted level: groups of two or more partials
+    merge at 2x the compression, and a group holding exactly one blob
+    passes through as is — no decode, merge or re-encode, since a group
+    of one cuts no fan-in."""
+    codec = digest_codec(2 * compression, scale)
+    return codec._replace(merge_blobs=lambda blobs: blobs[0]
+                          if len(blobs) == 1 else codec.merge_blobs(blobs))
 
 
 def tree_merge(
@@ -623,30 +734,30 @@ def tree_merge(
     """treeAggregate-style two-level reduce over digest rows.
 
     Caps any single reduce task's fan-in at ~``fanout`` digests per key by
-    pre-merging within salted buckets.  Use when #input-partitions per key
-    is very large (10^4+).  Accuracy is unchanged — digest merging meets
-    the same bounds for any split (AccuracyTest.java:131-151); stratified
-    two-level merging is in fact *more* accurate (docs/vldb/short.tex:185-198).
+    pre-merging within salted buckets (FP-Hadoop's Intermediate Reduce).
+    Use when #input-partitions per key is very large (10^4+).  Accuracy
+    is unchanged — digest merging meets the same bounds for any split
+    (AccuracyTest.java:131-151); stratified two-level merging is in fact
+    *more* accurate (docs/vldb/short.tex:185-198).
+
+    Both levels' exchanges take ``_merge_partitions(partials)``: whole
+    waves of by-number partitions behind a multi-wave scan, else AQE.
+    A salted group holding one partial passes through level 1 unchanged
+    (``_level1_codec``), so a key with at most ~fanout partials pays
+    for level 1 only where salts collide.
     """
     group_cols = list(group_cols)
+    n_parts = _merge_partitions(partials)
     salted = partials.withColumn(
         "__salt", F.pmod(F.crc32(F.col(DIGEST_FIELD)), F.lit(fanout))
     )
     # intermediate level keeps 2x centroids (stratified merging: sub-digests
     # at delta' > delta are *more* accurate, docs/vldb/short.tex:185-198);
-    # only the final level compresses to the public delta.  Same whole-
-    # partition merge kernel as merge_digests_df: the salted level has
-    # keys x fanout groups, where per-group pandas-UDF overhead would
-    # hurt the most.
-    salt_keys = group_cols + ["__salt"]
-    level1 = (salted.select(*salt_keys, DIGEST_FIELD, "rows")
-              .repartition(*salt_keys)
-              .mapInArrow(
-                  _partition_merge_gen(digest_codec(2 * compression, scale),
-                                       salt_keys),
-                  schema=_sketch_schema(salted, salt_keys, DIGEST_FIELD)))
-    return merge_digests_df(level1.drop("__salt"), group_cols,
-                            compression, scale)
+    # only the final level compresses to the public delta
+    level1 = _merge_sketches(salted, group_cols + ["__salt"],
+                             _level1_codec(compression, scale), n_parts)
+    return _merge_sketches(level1.drop("__salt"), group_cols,
+                           digest_codec(compression, scale), n_parts)
 
 
 def tdigest_aggregate(
@@ -675,23 +786,12 @@ def tdigest_aggregate(
     partials = partial_digests(df, value_col, group_cols, compression,
                                scale, buffer_size, weight_col)
     if tree == "auto":
-        # Estimate stage-1 task count WITHOUT df.rdd (which forces a
-        # full RDD conversion of the plan — measurable on wide plans and
-        # illegal on streaming DataFrames).  inputFiles() is a metadata
-        # listing; for non-file plans fall back to the cluster's default
-        # parallelism, which bounds the partial-digest partition count
-        # for any shuffle-free stage 1.  File count is a HEURISTIC for
-        # task count, not equal to it: maxPartitionBytes splits large
-        # files (undercount) and small files coalesce into shared
-        # partitions (overcount) — acceptable here because the 10^4
-        # threshold only picks the reduce shape, and both shapes are
-        # correct for any split; force tree=True/False to override.
-        try:
-            n_parts = len(df.inputFiles())
-        except Exception:
-            n_parts = 0
-        if n_parts == 0:
-            n_parts = df.sparkSession.sparkContext.defaultParallelism
+        # the stage-1 task count from the scan's split arithmetic (no
+        # job, no df.rdd — illegal on streaming frames), else the
+        # default parallelism: the 10^4 threshold only picks the reduce
+        # shape, and both shapes are correct for any split
+        n_parts = _scan_tasks(df) \
+            or df.sparkSession.sparkContext.defaultParallelism
         tree = n_parts > 10_000
     if tree:
         return tree_merge(partials, group_cols, compression, scale, fanout)

@@ -411,20 +411,24 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     threshold: the exact shingle-set Jaccard, or with verify=False the
     fraction of matching minhashes.
     """
-    sh = df.select(F.col(id_col),
-                   shingle_fingerprints(text_col, k_shingle).alias("__sh"))
-    sigs = sh.withColumn("__sig", minhash_signature("__sh", num_perm))
+    # checkpoint the (id, shingles, signature) table: the candidate
+    # self-join and both payload re-joins read it — without this the
+    # shingle UDF would run on four plan branches per document
+    sigs = (df.select(F.col(id_col), shingle_fingerprints(
+                text_col, k_shingle).alias("__sh"))
+            .withColumn("__sig", minhash_signature("__sh", num_perm))
+            .localCheckpoint(eager=False))
     cand = _candidate_pairs(
         _minhash_band_keys(sigs, id_col, num_perm, bands), id_col)
     if verify:
-        table, col, score = sh, "__sh", ngram_jaccard
+        col, score = "__sh", ngram_jaccard
     else:
         def score(a, b):  # the fraction of matching minhashes
             return F.aggregate(
                 F.zip_with(a, b, lambda x, y: F.when(x == y, 1).otherwise(0)),
                 F.lit(0), lambda acc, v: acc + v) / F.lit(num_perm)
-        table, col = sigs, "__sig"
-    return (_verified(cand, table, id_col, col, score, "jaccard")
+        col = "__sig"
+    return (_verified(cand, sigs, id_col, col, score, "jaccard")
             .where(F.col("jaccard") >= threshold))
 
 

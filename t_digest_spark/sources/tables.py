@@ -399,10 +399,10 @@ def turn_digests_clustered(transcripts: DataFrame,
                         + list(rb.schema)))
 
     partials = narrow.mapInArrow(fused, schema=out_schema)
-    # pin_partitions: this operator's shape is high key cardinality
-    # (e.g. (role, ts_hour): thousands of keys) x one partial per key
-    # per scan partition — a large partial table whose merge stage
-    # needs balanced waves, not AQE's ~core-count coalescing (see
-    # merge_digests_df docstring for the 2v8 per-stage evidence)
+    # the merge exchange follows aggregate._merge_partitions: behind a
+    # multi-wave scan (the flagship: 256 one-file tasks, thousands of
+    # (role, ts_hour) keys each) it gets whole waves of by-number
+    # partitions — 64, not AQE's one ragged ~core-count wave that scaled
+    # 0.46 from 2 to 8 cores — and behind a one-wave scan AQE sizes it
     return merge_digests_df(partials, ["metric"] + group_cols,
-                            compression, scale, pin_partitions=True)
+                            compression, scale)

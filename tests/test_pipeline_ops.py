@@ -544,6 +544,66 @@ def test_simhash_pairs_single_evaluation_exact(spark):
     assert any(0 < v for v in got.values())
 
 
+
+@pytest.mark.parametrize("verify", [True, False])
+def test_minhash_lsh_pairs_single_evaluation_exact(spark, verify):
+    """minhash_lsh_pairs evaluates the shingle and signature UDFs at
+    most once each in its plan (not once per join branch) and returns
+    exactly the brute-force pairs: documents sharing a band slice of
+    their signatures, scored by exact shingle-set Jaccard (verify) or
+    the fraction of matching minhashes, at or above the threshold."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    from t_digest_spark.operators.dedup import minhash_signature
+
+    num_perm, bands, threshold = 32, 8, 0.5
+    rng = np.random.default_rng(23)
+    rows = []
+    for _ in range(20):
+        base = rng.integers(0, 300, size=50)
+        for edits in (0, 2, 6, 14):
+            d = base.copy()
+            d[rng.integers(0, 50, size=edits)] = rng.integers(
+                0, 300, size=edits)
+            rows.append((len(rows), " ".join(f"w{t}" for t in d)))
+    sdf = spark.createDataFrame(rows, "doc_id long, text string") \
+        .repartition(3)
+    pairs = minhash_lsh_pairs(sdf, num_perm=num_perm, bands=bands,
+                              threshold=threshold, verify=verify)
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        pairs.explain("formatted")
+    evals = [n for n in re.split(r"\n(?=\(\d+\) )", buf.getvalue())
+             if re.match(r"\(\d+\) ArrowEvalPython", n)]
+    assert sum("shingles" in n for n in evals) <= 1, evals
+    assert len(evals) <= 2, evals
+
+    table = {r.doc_id: (set(r.sh), r.sig) for r in sdf.select(
+        "doc_id", shingle_fingerprints("text", 5).alias("sh"),
+        minhash_signature(shingle_fingerprints("text", 5), num_perm)
+        .alias("sig")).collect()}
+    width = num_perm // bands
+    ids = sorted(table)
+    expect = {}
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            (sa, ga), (sb, gb) = table[a], table[b]
+            if not any(ga[k:k + width] == gb[k:k + width]
+                       for k in range(0, num_perm, width)):
+                continue
+            score = (len(sa & sb) / len(sa | sb) if verify else
+                     sum(x == y for x, y in zip(ga, gb)) / num_perm)
+            if score >= threshold:
+                expect[(a, b)] = score
+    got = {(r.id_a, r.id_b): r.jaccard for r in pairs.collect()}
+    assert got.keys() == expect.keys()
+    assert all(abs(got[k] - expect[k]) < 1e-12 for k in got)
+    assert any(v < 1.0 for v in got.values())
+
+
 def test_embedding_cosine_pairs(spark):
     rng = np.random.default_rng(3)
     v1 = rng.normal(size=16)

@@ -729,3 +729,47 @@ def test_singleton_blob_mixed_signed_zeros():
         assert blob is not None
         assert blob == d.to_bytes(compress=False), vals
         assert blob == w.to_bytes(compress=False), vals
+
+
+@pytest.mark.parametrize("cards", [(9,), (129, 3), (300, 300),
+                                   (2000, 2000, 2000),
+                                   (70_000, 70_000, 70_000, 70_000)])
+def test_groups_narrow_codes_match_lexicographic_order(cards):
+    """_groups sorts on the narrowest code dtype (uint16 radix sort,
+    uint32, int64, or renumbered codes past 2^62) and still returns
+    exactly the stable lexicographic order over (kept, key codes...) —
+    the order of the plain int64 combined code — with nulls and
+    filtered-out rows, for code spaces below 2^16 and past 2^16, 2^32
+    and int64."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from t_digest_spark.operators.aggregate import _groups
+
+    rng = np.random.default_rng(sum(cards))
+    n = 120_000
+    cols = []
+    for i, card in enumerate(cards):
+        v = rng.integers(0, card, size=n)
+        mask = rng.random(n) < 0.01
+        cols.append(pa.array(v if i % 2 == 0 else v.astype(str).astype(object),
+                             mask=mask))
+    ok = rng.random(n) > 0.05
+    order, groups = _groups(cols, ok)
+
+    encs = [pc.dictionary_encode(c) for c in cols]
+    codes = [pc.fill_null(e.indices, -1).to_numpy(zero_copy_only=False)
+             .astype(np.int64) + 1 for e in encs]
+    keys = [np.where(ok, c, 0) for c in codes]
+    want = np.lexsort(keys[::-1] + [ok])
+    assert np.array_equal(order, want)
+    combo = np.stack([ok] + keys, axis=1)[want]
+    starts = np.flatnonzero(np.any(combo[1:] != combo[:-1], axis=1)) + 1
+    starts = np.concatenate(([0], starts))
+    ends = np.concatenate((starts[1:], [n]))
+    dicts = [e.dictionary.to_pylist() for e in encs]
+    want_groups = [
+        (tuple(dicts[j][codes[j][want[s]] - 1] if codes[j][want[s]] else None
+               for j in range(len(cols))), int(s), int(e))
+        for s, e in zip(starts, ends) if ok[want[s]]]
+    assert groups == want_groups
