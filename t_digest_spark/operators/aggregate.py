@@ -38,7 +38,6 @@ per centroid, see core.to_small_bytes).
 
 from __future__ import annotations
 
-import functools
 from typing import Callable, NamedTuple, Sequence
 
 import numpy as np
@@ -122,95 +121,74 @@ def _shuffle_partitions(df: DataFrame) -> int:
         return spark.sparkContext.defaultParallelism
 
 
-# logical operators that keep their child's partitioning: the walk from
-# a partial table down to its scan passes only through these
-_NARROW = frozenset(("Project", "Filter", "SubqueryAlias", "View", "Sample",
-                     "Generate", "MapInArrow", "MapInPandas"))
-# past this many files the scan's split arithmetic packs the first
-# _SIZED_FILES sizes and scales the count (each size is a py4j round
-# trip, ~0.1 ms)
-_SIZED_FILES = 256
-
-
-@functools.lru_cache(maxsize=1)
-def _file_partition(jvm):
-    """Spark's ``FilePartition`` object (each package step of a py4j
-    lookup is a JVM round trip)."""
-    return getattr(jvm.org.apache.spark.sql.execution.datasources,
-                   "FilePartition$").__getattr__("MODULE$")
+# physical operators that keep their child's partitioning: the walk
+# from a plan's root down to its scan passes only through these
+_NARROW = frozenset((
+    "ProjectExec", "FilterExec", "SampleExec", "GenerateExec",
+    "MapInArrowExec", "PythonMapInArrowExec", "MapInPandasExec",
+    "ArrowEvalPythonExec", "BatchEvalPythonExec"))
 
 
 def _scan_tasks(df: DataFrame) -> int | None:
-    """How many tasks the scan under ``df`` runs, computed from Spark's
-    own split arithmetic without planning or running anything: the
-    analyzed plan is walked through narrow operators to a file relation,
-    ``FilePartition.maxSplitBytes`` gives the split size, and the file
-    sizes are packed the way ``FilePartition.getFilePartitions`` packs
-    them (largest first; a split closes when the next file would
-    overflow it; each file also costs ``openCostInBytes``).  Partition
-    filters are not applied, so a pruned scan is over-counted.  None
-    when the input is not a narrow chain over a file scan (shuffles,
-    joins, in-memory or streaming sources): then the stage-1 task count
-    is not known before the job runs."""
+    """How many tasks the scan under ``df`` runs, asked of Spark without
+    running a job: the physical plan (planned, never executed) is walked
+    through narrow operators to its scan node, whose input RDD holds
+    Spark's own file partitions — splitting, packing, non-splittable
+    codecs, bucketing and partition pruning included.  Planning is
+    cached on ``df``, so a reused input pays it once.  None when the
+    input is not a narrow chain over a scan (shuffles, joins, in-memory
+    or streaming sources): then the stage-1 task count is not known
+    before the job runs."""
     from py4j.protocol import Py4JError
+    from pyspark.errors import PySparkException
 
+    if df.isStreaming:
+        return None
     try:
-        node = df._jdf.queryExecution().analyzed()
-        name = node.nodeName()
+        node = df._jdf.queryExecution().sparkPlan()
+        name = node.getClass().getSimpleName()
         while name in _NARROW:
             node = node.child()
-            name = node.nodeName()
-        if name != "LogicalRelation":
+            name = node.getClass().getSimpleName()
+        if name not in ("FileSourceScanExec", "BatchScanExec"):
             return None
-        loc = node.relation().location()
-        nil = node.children()  # a leaf's: an empty Seq for the filters
-        split = _file_partition(df.sparkSession._jvm).maxSplitBytes(
-            df.sparkSession._jsparkSession, loc.listFiles(nil, nil))
-        open_cost = df.sparkSession._jsparkSession.sessionState().conf() \
-            .filesOpenCostInBytes()
-        files = loc.allFiles()
-        n = files.size()
-        sizes = [files.apply(i).getLen()
-                 for i in range(min(n, _SIZED_FILES))]
-    except Py4JError:
+        return node.inputRDD().getNumPartitions()
+    except (Py4JError, PySparkException):
         return None
-    # files split at maxSplitBytes (parquet and ORC are splittable)
-    chunks = sorted((min(split, s - off) for s in sizes
-                     for off in range(0, s, split)), reverse=True)
-    tasks, used = 0, 0
-    for c in chunks:
-        if used and used + c > split:
-            tasks, used = tasks + 1, 0
-        used += c + open_cost
-    tasks += used > 0
-    return tasks if n <= _SIZED_FILES else -(-tasks * n // _SIZED_FILES)
 
 
-def _merge_partitions(partials: DataFrame) -> int | None:
-    """The stage-2 partition count for a grouped merge of ``partials``,
-    or None to let AQE size the exchange from bytes.
+def _merge_partitions(df: DataFrame) -> int | None:
+    """The stage-2 partition count of the fused transcript aggregate
+    (``sources.tables.turn_digests_clustered``) over ``df``, or None to
+    let AQE size the exchange from bytes.
 
     With P1 stage-1 tasks, C = defaultParallelism and S =
     spark.sql.shuffle.partitions: when stage 1 spans more than one wave
     (P1 > C) the merge gets ``min(S, C * ceil(P1 / C))`` partitions —
-    whole waves, never more tasks than stage 1 had.  Otherwise the
-    partial table is at most one wave's worth of sketch rows per key
-    and AQE coalesces it (a 15-row digest table runs as ONE task, not S
-    near-empty Python round trips).
+    whole waves, never more tasks than stage 1 had.  Otherwise AQE
+    coalesces the partial table (sketchbench ``keyed_merge`` at
+    local[2]: one merge task instead of 16 pinned ones, and the fused
+    operator's median 0.88 -> 0.67 s).
 
-    Why whole waves: AQE targets about C tasks by bytes, and on the
-    flagship 100M-row job (256 scan tasks) its coalesced merge stage got
-    11 tasks at local[8] — one ragged wave that scaled 0.46 from 2 to 8
-    cores (occupancy 0.73, task CPU 22 -> 37 core-s) while the scan
-    stage scaled 0.95; the 64-task shape (8 balanced waves) restores
-    tail-hiding.  Why not a wave when P1 <= C: measured on
-    sketchbench at local[2], a C-task pin made the small sibling merges
-    of ``raw_ingest`` slower (rows/s median 2.25M -> 2.12M)."""
-    p1 = _scan_tasks(partials)
-    cores = partials.sparkSession.sparkContext.defaultParallelism
+    Why whole waves: that operator's partial table is large (thousands
+    of keys x one partial per key per scan task), and AQE targets about
+    C tasks by bytes: on the flagship 100M-row job (256 scan tasks) its
+    coalesced merge stage got 11 tasks at local[8] — one ragged wave
+    that scaled 0.46 from 2 to 8 cores (occupancy 0.73, task CPU 22 ->
+    37 core-s) while the scan stage scaled 0.95; the 64-task shape (8
+    balanced waves) restores tail-hiding.
+
+    Why only there: P1 > C does not make a partial table large.  A
+    grouped ``tdigest_aggregate`` over 256 small parquet files (P1 = 9
+    at local[2], rule: 10 partitions) ran 1.04 s pinned against 0.72 s
+    under AQE with 4 keys, and 1.49 s against 1.20 s with 2,000 keys
+    (medians of 10 alternating runs, 4-vCPU host), so every other
+    grouped merge and both ``tree_merge`` levels stay on AQE."""
+    p1 = _scan_tasks(df)
+    cores = df.sparkSession.sparkContext.defaultParallelism
     if p1 is None or p1 <= cores:
         return None
-    return min(_shuffle_partitions(partials), cores * -(-p1 // cores))
+    return min(_shuffle_partitions(df), cores * -(-p1 // cores))
 
 
 # Arrow batches are ~10k rows; we let each per-key digest buffer several
@@ -654,17 +632,18 @@ def _partition_merge_gen(codec: SketchCodec, group_cols: Sequence[str]):
 
 def _merge_sketches(partials: DataFrame, group_cols: Sequence[str],
                     codec: SketchCodec,
-                    n_parts: int | None | str = "auto") -> DataFrame:
+                    n_parts: int | None = None) -> DataFrame:
     """Stage 2: shuffle the (tiny) sketch rows by key and merge per group.
 
     Grouped path: ``repartition(keys)`` co-locates every key's partials,
     then a whole-partition ``mapInArrow`` kernel merges all keys of the
     partition in ONE Python round-trip (see _partition_merge_gen).  The
-    exchange has ``n_parts`` partitions (``"auto"``: ``_merge_partitions
-    (partials)``); None repartitions BY COLUMN and AQE sizes the reduce
-    stage by actual partial bytes.  Every downstream consumer of the
-    merge output (quantile-extract UDFs, collect) inherits its
-    partitioning.
+    exchange is BY COLUMN by default, so AQE sizes the reduce stage by
+    actual partial bytes (a 15-row digest table runs as ONE task, not
+    spark.sql.shuffle.partitions near-empty Python round trips);
+    ``n_parts`` pins it BY NUMBER instead (see ``_merge_partitions``).
+    Every downstream consumer of the merge output (quantile-extract
+    UDFs, collect) inherits its partitioning.
 
     Global aggregate: a single group — funnel the per-partition sketch
     rows (already tiny) into one task and merge.  repartition, NOT
@@ -677,8 +656,6 @@ def _merge_sketches(partials: DataFrame, group_cols: Sequence[str],
     if not group_cols:
         rep = sel.repartition(1)
     else:
-        if n_parts == "auto":
-            n_parts = _merge_partitions(partials)
         rep = sel.repartition(*([n_parts] if n_parts else []), *group_cols)
     return rep.mapInArrow(
         _partition_merge_gen(codec, group_cols),
@@ -705,11 +682,8 @@ def merge_digests_df(
     scale: str = "K_2",
 ) -> DataFrame:
     """Stage 2 for digest partials: shuffle the (tiny) digest rows by key
-    and merge per group (see ``_merge_sketches``).  The exchange is
-    sized by ``_merge_partitions``: when the partial table comes from
-    more than one wave of scan tasks it gets whole waves of
-    by-number partitions (the flagship fused job: 64), otherwise AQE
-    sizes it from bytes."""
+    and merge per group (see ``_merge_sketches``); AQE sizes the
+    exchange from the partial bytes."""
     return _merge_sketches(partials, group_cols,
                            digest_codec(compression, scale))
 
@@ -740,14 +714,12 @@ def tree_merge(
     (AccuracyTest.java:131-151); stratified two-level merging is in fact
     *more* accurate (docs/vldb/short.tex:185-198).
 
-    Both levels' exchanges take ``_merge_partitions(partials)``: whole
-    waves of by-number partitions behind a multi-wave scan, else AQE.
-    A salted group holding one partial passes through level 1 unchanged
-    (``_level1_codec``), so a key with at most ~fanout partials pays
-    for level 1 only where salts collide.
+    Both levels' exchanges are sized by AQE.  A salted group holding
+    one partial passes through level 1 unchanged (``_level1_codec``),
+    so a key with at most ~fanout partials pays for level 1 only where
+    salts collide.
     """
     group_cols = list(group_cols)
-    n_parts = _merge_partitions(partials)
     salted = partials.withColumn(
         "__salt", F.pmod(F.crc32(F.col(DIGEST_FIELD)), F.lit(fanout))
     )
@@ -755,9 +727,9 @@ def tree_merge(
     # at delta' > delta are *more* accurate, docs/vldb/short.tex:185-198);
     # only the final level compresses to the public delta
     level1 = _merge_sketches(salted, group_cols + ["__salt"],
-                             _level1_codec(compression, scale), n_parts)
+                             _level1_codec(compression, scale))
     return _merge_sketches(level1.drop("__salt"), group_cols,
-                           digest_codec(compression, scale), n_parts)
+                           digest_codec(compression, scale))
 
 
 def tdigest_aggregate(
@@ -786,8 +758,8 @@ def tdigest_aggregate(
     partials = partial_digests(df, value_col, group_cols, compression,
                                scale, buffer_size, weight_col)
     if tree == "auto":
-        # the stage-1 task count from the scan's split arithmetic (no
-        # job, no df.rdd — illegal on streaming frames), else the
+        # the stage-1 task count from the planned scan (no job, no
+        # df.rdd — illegal on streaming frames), else the
         # default parallelism: the 10^4 threshold only picks the reduce
         # shape, and both shapes are correct for any split
         n_parts = _scan_tasks(df) \

@@ -332,8 +332,8 @@ def turn_digests_clustered(transcripts: DataFrame,
     import pyarrow.compute as pc
 
     from ..operators.aggregate import (
-        DEFAULT_BUFFER, DIGEST_FIELD, SketchAccumulator, digest_codec,
-        merge_digests_df,
+        DEFAULT_BUFFER, DIGEST_FIELD, SketchAccumulator, _merge_partitions,
+        _merge_sketches, digest_codec,
     )
     from pyspark.sql.types import BinaryType, LongType, StringType
 
@@ -403,6 +403,9 @@ def turn_digests_clustered(transcripts: DataFrame,
     # multi-wave scan (the flagship: 256 one-file tasks, thousands of
     # (role, ts_hour) keys each) it gets whole waves of by-number
     # partitions — 64, not AQE's one ragged ~core-count wave that scaled
-    # 0.46 from 2 to 8 cores — and behind a one-wave scan AQE sizes it
-    return merge_digests_df(partials, ["metric"] + group_cols,
-                            compression, scale)
+    # 0.46 from 2 to 8 cores — and behind a one-wave scan AQE sizes it.
+    # The count is read off ``transcripts``, whose scan is this stage
+    # 1's, so a caller that reuses the frame plans it only once.
+    return _merge_sketches(partials, ["metric"] + group_cols,
+                           digest_codec(compression, scale),
+                           _merge_partitions(transcripts))

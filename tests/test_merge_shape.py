@@ -2,10 +2,10 @@
 FP-Hadoop tests its Intermediate Reduce: multi-wave against one-wave
 inputs, skewed keys and mixed fan-in.
 
-- ``_scan_tasks`` is Spark's own scan split count, computed without a job;
-- ``_merge_partitions`` pins whole waves (``REPARTITION_BY_NUM``) only
-  behind a scan of more than one wave, else leaves AQE to size the
-  exchange (``REPARTITION_BY_COL``);
+- ``_scan_tasks`` is Spark's own scan split count, read without a job;
+- the fused transcript aggregate pins whole waves (``REPARTITION_BY_NUM``)
+  only behind a scan of more than one wave, and every other grouped
+  merge leaves AQE to size the exchange (``REPARTITION_BY_COL``);
 - ``tree_merge`` passes one-blob salted groups through untouched and
   meets the AccuracyTest.java:131-151 bounds for any fan-in and any
   input order.
@@ -109,9 +109,15 @@ def partials_path(spark, fan_in, tmp_path_factory):
 
 
 def test_scan_tasks_is_the_scan_split_count(spark, transcripts_path,
-                                            partials_path):
-    """The split arithmetic gives the scan's real partition count under
-    packing, one file per task, and files split at maxPartitionBytes."""
+                                            partials_path, tmp_path):
+    """The scan's real partition count under packing, one file per
+    task, files split at maxPartitionBytes, a non-splittable codec and
+    a partition-pruned scan."""
+    gz, parted = str(tmp_path / "gz"), str(tmp_path / "parted")
+    spark.range(0, 20000, numPartitions=3).selectExpr("id", "id * 0.5 v") \
+        .write.option("compression", "gzip").csv(gz)
+    spark.range(0, 20000, numPartitions=4).selectExpr("id % 4 p", "id v") \
+        .write.partitionBy("p").parquet(parted)
     confs = [contextlib.nullcontext(), _one_file_per_task(spark),
              _conf(spark, "spark.sql.files.maxPartitionBytes", "4096")]
     for conf in confs:
@@ -121,7 +127,11 @@ def test_scan_tasks_is_the_scan_split_count(spark, transcripts_path,
                 narrow = df.where(F.col("rows") > 0) \
                     if "rows" in df.columns else df.select("role", "ts")
                 assert _scan_tasks(narrow) == df.rdd.getNumPartitions()
+            for df in (spark.read.csv(gz),
+                       spark.read.parquet(parted).where(F.col("p") == 1)):
+                assert _scan_tasks(df) == df.rdd.getNumPartitions()
     assert _scan_tasks(spark.range(10)) is None
+    assert _scan_tasks(spark.readStream.format("rate").load()) is None
     assert _scan_tasks(spark.read.parquet(partials_path)
                        .groupBy("k").count()) is None
 
@@ -129,16 +139,23 @@ def test_scan_tasks_is_the_scan_split_count(spark, transcripts_path,
 def test_multi_wave_scan_pins_whole_waves(spark, transcripts_path,
                                           partials_path):
     """The flagship shape (one file per scan task, more tasks than
-    cores): the fused job's merge and both tree levels exchange by
-    number into S partitions, as the 2v8 gate's merge stage always did."""
+    cores): the fused job's merge exchanges by number into S
+    partitions, as the 2v8 gate's merge stage always did; a grouped
+    aggregate and both tree levels over the same kind of scan keep AQE."""
     cores, shuffle = _waves(spark)
     assert shuffle <= 2 * cores  # so min(S, C * ceil(P1 / C)) is S
     with _one_file_per_task(spark):
-        fused = latency_digests_clustered(spark.read.parquet(transcripts_path))
+        t = spark.read.parquet(transcripts_path)
+        assert _scan_tasks(t) > cores
+        fused = latency_digests_clustered(t)
         assert _merge_exchanges(fused) == [(shuffle, "REPARTITION_BY_NUM")]
         tree = tree_merge(spark.read.parquet(partials_path), ["k"],
                           fanout=FANOUT)
-        assert _merge_exchanges(tree) == [(shuffle, "REPARTITION_BY_NUM")] * 2
+        agg = tdigest_aggregate(t.withColumn("v", F.col("turn_idx") * 1.0),
+                                "v", ["role"])
+        for df in (tree, agg):
+            assert {k for _, k in _merge_exchanges(df)} \
+                == {"REPARTITION_BY_COL"}
 
 
 def test_one_wave_scan_and_small_aggregate_keep_aqe(spark, transcripts_path,
