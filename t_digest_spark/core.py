@@ -639,173 +639,26 @@ class TDigest:
         return _weighted_average(float(mean[n - 1]), z1, self._max, z2)
 
     def quantiles(self, qs) -> np.ndarray:
-        """Vectorized multi-quantile: same semantics as ``quantile`` (the
-        scalar walk of MergingDigest.java:697-783 re-expressed with
-        cumsum + searchsorted); differentially tested against the scalar
-        port in tests/test_invariants.py."""
+        """Vectorized multi-quantile: ``DigestBatch.quantiles`` over a
+        batch of this one digest, with the semantics of the scalar
+        ``quantile`` walk (differentially tested against it in
+        tests/test_invariants.py and tests/test_batch_read.py)."""
         qs = np.atleast_1d(np.asarray(qs, dtype=np.float64))
-        if ((qs < 0) | (qs > 1)).any():
-            raise ValueError("q should be in [0,1]")
-        self._flush()
-        n = self._ncentroids
-        if n == 0:
-            return np.full(qs.shape, np.nan)
-        if n == 1:
-            return np.full(qs.shape, float(self._mean[0]))
-        m = self._mean[:n]
-        w = self._weight[:n]
-        total = self._total_weight
-        lo, hi = self._min, self._max
-        index = qs * total
-
-        csum = np.cumsum(w)
-        # weightSoFar before interval i equals csum[i] - w[i]/2
-        wsf = csum - w / 2
-        # interval i brackets index when wsf[i+1] > index >= wsf[i]
-        i = np.clip(np.searchsorted(wsf, index, side="right") - 1,
-                    0, n - 2)
-        wsf_i = wsf[i]
-        dw = (w[i] + w[i + 1]) / 2
-        left_unit = np.where(w[i] == 1, 0.5, 0.0)
-        right_unit = np.where(w[i + 1] == 1, 0.5, 0.0)
-        z1 = index - wsf_i - left_unit
-        z2 = wsf_i + dw - index - right_unit
-        x1, w1 = m[i], z2
-        x2, w2 = m[i + 1], z1
-        # every branch value is computed eagerly and masked by np.where,
-        # so 0/0 (two bracketing singletons: w1+w2==0; weight-2 tail
-        # centroid: w/2-1==0) is expected and masked — silence it like
-        # cdfs does below, rather than spamming executor logs.
-        with np.errstate(invalid="ignore", divide="ignore"):
-            interp = (x1 * w1 + x2 * w2) / (w1 + w2)
-            interp = np.clip(interp, np.minimum(x1, x2),
-                             np.maximum(x1, x2))
-            out = interp
-            # singleton spheres (no interpolation inside unit-weight
-            # centroids)
-            out = np.where((w[i + 1] == 1) & (wsf_i + dw - index <= 0.5),
-                           m[i + 1], out)
-            out = np.where((w[i] == 1) & (index - wsf_i < 0.5), m[i], out)
-            # fallthrough past the last interval: interpolate out to max
-            fz1 = index - total - w[n - 1] / 2.0
-            fz2 = w[n - 1] / 2 - fz1
-            fx = (m[n - 1] * fz1 + hi * fz2) / (fz1 + fz2)
-            fx = np.clip(fx, min(m[n - 1], hi), max(m[n - 1], hi))
-            # scalar loop falls through when no interval has
-            # weightSoFar + dw > index, i.e. index >= wsf[n-1]
-            out = np.where(index >= wsf[n - 1], fx, out)
-            # tails (evaluated last: they take precedence, matching the
-            # scalar early returns)
-            out = np.where(
-                (w[n - 1] > 1) & (total - index <= w[n - 1] / 2),
-                hi - (total - index - 1) / (w[n - 1] / 2 - 1)
-                * (hi - m[n - 1]),
-                out)
-            out = np.where(index > total - 1, hi, out)
-            out = np.where(
-                (w[0] > 1) & (index < w[0] / 2),
-                lo + (index - 1) / (w[0] / 2 - 1) * (m[0] - lo),
-                out)
-        out = np.where(index < 1, lo, out)
-        return out
+        return DigestBatch.of(self).quantiles(qs.ravel())[0] \
+            .reshape(qs.shape)
 
     def cdfs(self, xs) -> np.ndarray:
-        """Vectorized multi-probe CDF: the scalar walk of
-        MergingDigest.java:559-695 re-expressed with cumsum +
-        searchsorted (same re-expression as ``quantiles``);
-        differentially tested against the scalar ``cdf`` in
-        tests/test_invariants.py."""
+        """Vectorized multi-probe CDF: ``DigestBatch.cdfs`` over a batch
+        of this one digest, with the semantics of the scalar ``cdf``
+        walk."""
         xs = np.atleast_1d(np.asarray(xs, dtype=np.float64))
-        if xs.size and (np.isnan(xs).any() or np.isinf(xs).any()):
-            raise ValueError("Invalid value in cdf probes")
-        self._flush()
-        n = self._ncentroids
-        if n == 0:
-            return np.full(xs.shape, np.nan)
-        total = self._total_weight
-        lo, hi = self._min, self._max
-        if n == 1:
-            width = hi - lo
-            out = np.full(xs.shape, 0.5)
-            inside = (xs >= lo) & (xs <= hi)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                frac = (xs - lo) / width if width > 0 else xs * 0.0
-            out = np.where(inside & (xs - lo > width), frac, out)
-            out = np.where(xs < lo, 0.0, out)
-            out = np.where(xs > hi, 1.0, out)
-            return out
-        m = self._mean[:n]
-        w = self._weight[:n]
-        csum = np.cumsum(w)
-        wsf = csum - w                       # weight before centroid i
-        j0 = np.searchsorted(m, xs, side="left")
-        j1 = np.searchsorted(m, xs, side="right")
-        # interior interpolation (non-tie): m[it] < x < m[it+1]
-        it = np.clip(j0 - 1, 0, n - 2)
-        li, ri = m[it], m[it + 1]
-        wl, wr = w[it], w[it + 1]
-        left_excl = np.where(wl == 1, 0.5, 0.0)
-        right_excl = np.where((wr == 1) & (wl != 1), 0.5, 0.0)
-        dw = (wl + wr) / 2
-        dw_no_single = dw - left_excl - right_excl
-        base = wsf[it] + wl / 2 + left_excl
-        with np.errstate(invalid="ignore", divide="ignore"):
-            interp = (base + dw_no_single * (xs - li) / (ri - li)) / total
-            # fp-madness guard (:678-684): zero-width gap
-            interp = np.where(ri - li > 0, interp,
-                              (wsf[it] + dw) / total)
-        out = np.where((wl == 1) & (wr == 1), (wsf[it] + 1) / total,
-                       interp)
-        # tie: x lands on a run of equal means [j0, j1) — half credit
-        run_w = np.where(j1 > j0,
-                         csum[np.minimum(j1, n) - 1] - wsf[np.minimum(
-                             j0, n - 1)], 0.0)
-        tie_val = (wsf[np.minimum(j0, n - 1)] + run_w / 2) / total
-        out = np.where(j1 > j0, np.where(j0 >= n - 1, 1 - 0.5 / total,
-                                         tie_val), out)
-        # right tail: x > m[n-1] (and not past max)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            rt = 1 - (1 + (hi - xs) / (hi - m[n - 1])
-                      * (w[n - 1] / 2 - 1)) / total
-        rt = np.where(hi - m[n - 1] > 0, rt, 1.0)
-        rt = np.where(xs == hi, 1 - 0.5 / total, rt)
-        out = np.where((xs > m[n - 1]) & (j1 == j0), rt, out)
-        # left tail: x < m[0]
-        with np.errstate(invalid="ignore", divide="ignore"):
-            lt = (1 + (xs - lo) / (m[0] - lo) * (w[0] / 2 - 1)) / total
-        lt = np.where(m[0] - lo > 0, lt, 0.0)
-        lt = np.where(xs == lo, 0.5 / total, lt)
-        out = np.where(xs < m[0], lt, out)
-        # outside the observed range
-        out = np.where(xs < lo, 0.0, out)
-        out = np.where(xs > hi, 1.0, out)
-        return out
+        return DigestBatch.of(self).cdfs(xs.ravel())[0].reshape(xs.shape)
 
     def trimmed_mean(self, q0: float, q1: float) -> float:
         """Mean of the samples between rank-quantiles q0 and q1
-        (README capability; computed from centroids A5+A7 per SURVEY §2.A8).
-
-        Each centroid's weight is clipped to the [q0*N, q1*N] rank window
-        using cumulative midpoint rank positions.
-        """
-        if not (0 <= q0 < q1 <= 1):
-            raise ValueError("need 0 <= q0 < q1 <= 1")
-        self._flush()
-        n = self._ncentroids
-        if n == 0:
-            return math.nan
-        w = self._weight[:n]
-        m = self._mean[:n]
-        total = self._total_weight
-        lo = q0 * total
-        hi = q1 * total
-        right = np.cumsum(w)
-        left = right - w
-        take = np.clip(np.minimum(right, hi) - np.maximum(left, lo), 0, None)
-        tw = take.sum()
-        if tw <= 0:
-            return math.nan
-        return float((m * take).sum() / tw)
+        (README capability; computed from centroids A5+A7 per SURVEY
+        §2.A8): ``DigestBatch.trimmed_means`` over a batch of one."""
+        return float(DigestBatch.of(self).trimmed_means(q0, q1)[0])
 
     # ------------------------------------------------------------------
     # invariants / diagnostics
@@ -931,6 +784,367 @@ def _unpack(buf: bytes):
         raise ValueError(f"Invalid serialized digest format {encoding}")
     pairs = np.frombuffer(buf, dtype=dtype, count=2 * n, offset=offset)
     return mn, mx, compression, n, pairs[0::2], pairs[1::2]
+
+
+def _between(x: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """``_weighted_average``'s clamp ``max(lo, min(x, hi))`` as Python
+    computes it (a tie keeps the first argument, so a bound's signed
+    zero can win), with NaN passing through."""
+    x = np.where(hi < x, hi, x)
+    return np.where(np.isnan(x) | (x > lo), x, lo)
+
+
+def _segments(start: np.ndarray, length: np.ndarray) -> list:
+    """``(rows, index)`` per distinct non-zero segment length:
+    ``index`` is the (len(rows), length) block of those segments' flat
+    positions.  A row of such a block sums and accumulates exactly like
+    the 1-D slice, which a flat ``np.add.reduceat`` or a zero-padded
+    block does not: NumPy's pairwise sum depends on the length."""
+    if length.size < 2:         # a batch of one, or no runs of ties
+        return [(np.arange(length.size), start[:, None]
+                 + np.arange(length[0]))] if length.any() else []
+    order = np.argsort(length, kind="stable")
+    cuts = np.flatnonzero(np.diff(length[order])) + 1
+    return [(rows, start[rows, None] + np.arange(length[rows[0]]))
+            for rows in np.split(order, cuts)
+            if rows.size and length[rows[0]]]
+
+
+def _seg_cumsum(x: np.ndarray, segments: list) -> np.ndarray:
+    """``x`` with every segment replaced by its ``np.cumsum``."""
+    out = x.copy()
+    for _, idx in segments:
+        out[idx] = np.cumsum(x[idx], axis=1)
+    return out
+
+
+def _be(buf: np.ndarray, pos: np.ndarray, dtype: str, count: int = 1):
+    """``count`` big-endian ``dtype`` values read at each byte offset
+    ``pos`` of the byte array ``buf``: shape (len(pos),), or
+    (len(pos), count)."""
+    dt = np.dtype(dtype)
+    if pos.size == 0:
+        return np.empty((0, count) if count > 1 else 0, dt)
+    k = dt.itemsize * count
+    win = np.lib.stride_tricks.as_strided(
+        buf, (buf.size - k + 1, k), (1, 1), writeable=False)
+    out = win[pos].view(dt)
+    return out if count > 1 else out.reshape(-1)
+
+
+class DigestBatch:
+    """Many digests in one flat centroid layout, read together.
+
+    Digest ``i``'s centroids are ``mean[start[i]:start[i] + count[i]]``
+    (ascending) with their ``weight``s; ``total``, ``lo`` and ``hi`` are
+    its total weight, min and max, ``comp`` its public compression and
+    ``nbytes`` its blob's length.  A row that is not ``live`` (a NULL
+    blob) reads as NaN, or 0 for counts.
+
+    The reads (``quantiles``, ``cdfs``, ``trimmed_means``, ``size``,
+    ``extremes``) are the formulas of MergingDigest.java:559-783
+    re-expressed over cumulative weights and a per-digest
+    ``searchsorted``, for every row at once, with the weights summed in
+    the order the scalar ``TDigest.quantile``/``cdf`` walks sum them:
+    those walks stay as the bit-for-bit oracle, and
+    ``TDigest.quantiles``/``cdfs``/``trimmed_mean`` are a batch of one,
+    so each formula exists only here.  A read costs a fixed number of
+    NumPy calls, except the per-digest sums and prefix sums, which run
+    once per distinct centroid count (and ``cdfs``' sums of runs of
+    equal means, once per distinct run length): NumPy's pairwise sum
+    must see each digest's own length to give the bits of
+    ``weight[a:b].sum()`` — the total ``TDigest.from_bytes`` reads
+    with.  Temporaries are O(centroids + digests x probes).
+    """
+
+    __slots__ = ("mean", "weight", "start", "count", "total", "lo", "hi",
+                 "comp", "nbytes", "live", "_owner", "_segs")
+
+    def __init__(self, mean, weight, count, live, lo, hi, comp, nbytes,
+                 total=None):
+        self.count = count
+        self.start = np.zeros(count.size, np.int64)
+        np.cumsum(count[:-1], out=self.start[1:])
+        # two trailing sentinels keep index i + 1 of a digest with fewer
+        # than two centroids in bounds; what they give is masked
+        self.mean = np.concatenate([mean, (0.0, 0.0)])
+        self.weight = np.concatenate([weight, (1.0, 1.0)])
+        self.live, self.lo, self.hi = live, lo, hi
+        self.comp, self.nbytes = comp, nbytes
+        self._owner = np.repeat(np.arange(count.size), count)
+        self._segs = _segments(self.start, count)
+        self.total = self._sums(weight) if total is None else total
+
+    @classmethod
+    def of(cls, digest: TDigest) -> "DigestBatch":
+        """A batch of one live digest, flushed, read with its own
+        running total."""
+        digest._flush()
+        n = digest._ncentroids
+        lo, hi, comp, total = ([v] for v in (
+            digest._min, digest._max, digest.public_compression,
+            digest._total_weight))
+        return cls(digest._mean[:n], digest._weight[:n], np.array([n]),
+                   np.ones(1, bool), np.array(lo), np.array(hi),
+                   np.array(comp), np.zeros(1, np.int64), np.array(total))
+
+    @classmethod
+    def from_arrow(cls, blobs) -> "DigestBatch":
+        """Decode a pyarrow ``binary`` or ``large_binary`` array of
+        VERBOSE/SMALL blobs (MergingDigest.java:898-936) from its
+        buffers: no ``bytes`` object per row.  A NULL row is not
+        live."""
+        d = len(blobs)
+        _, offsets, data = blobs.buffers()
+        odt = np.dtype(np.int64 if str(blobs.type) == "large_binary"
+                       else np.int32)
+        off = (np.frombuffer(offsets, odt, d + 1, blobs.offset * odt.itemsize)
+               .astype(np.int64) if d else np.zeros(1, np.int64))
+        buf = np.frombuffer(data, np.uint8) if data is not None \
+            else np.empty(0, np.uint8)
+        live = np.ones(d, bool) if blobs.null_count == 0 \
+            else blobs.is_valid().to_numpy(zero_copy_only=False)
+        s = off[:-1][live]
+        size = off[1:][live] - s
+        if (size < 30).any():
+            raise ValueError("truncated digest blob")
+        enc = _be(buf, s, ">i4")
+        verbose = enc == _VERBOSE_ENCODING
+        small = enc == _SMALL_ENCODING
+        if not (verbose | small).all():
+            raise ValueError("Invalid serialized digest format "
+                             f"{enc[~(verbose | small)][0]}")
+        head = np.where(verbose, 32, 30)
+        width = np.where(verbose, 16, 8)
+        if (size < head).any():
+            raise ValueError("truncated digest blob")
+        n = np.empty(s.size, np.int64)
+        comp = np.empty(s.size)
+        n[verbose] = _be(buf, s[verbose] + 28, ">i4")
+        n[small] = _be(buf, s[small] + 28, ">i2")
+        comp[verbose] = _be(buf, s[verbose] + 20, ">f8")
+        comp[small] = _be(buf, s[small] + 20, ">f4")
+        if ((n < 0) | (head + width * n > size)).any():
+            raise ValueError("truncated digest blob")
+        # byte offset of every centroid pair, in row order
+        first = np.zeros(s.size, np.int64)
+        np.cumsum(n[:-1], out=first[1:])
+        pos = np.repeat(s + head - width * first, n) \
+            + np.repeat(width, n) * np.arange(int(n.sum()))
+        mean = np.empty(pos.size)
+        weight = np.empty(pos.size)
+        wide = np.repeat(verbose, n)
+        for rows, dtype in ((wide, ">f8"), (~wide, ">f4")):
+            pairs = _be(buf, pos[rows], dtype, 2)
+            weight[rows] = pairs[:, 0]
+            mean[rows] = pairs[:, 1]
+
+        def full(v, fill, dtype=np.float64):
+            out = np.full(live.size, fill, dtype)
+            out[live] = v
+            return out
+
+        return cls(mean, weight, full(n, 0, np.int64), live,
+                   full(_be(buf, s + 4, ">f8"), np.nan),
+                   full(_be(buf, s + 12, ">f8"), np.nan),
+                   # TDigest(compression) lifts a compression below 10
+                   full(np.where(comp < 10, 10.0, comp), np.nan),
+                   full(size, 0, np.int64))
+
+    # -- per-digest sums, bit for bit ----------------------------------
+
+    def _sums(self, x: np.ndarray) -> np.ndarray:
+        """Per-digest ``x[a:b].sum()``."""
+        out = np.zeros(self.count.size)
+        for rows, idx in self._segs:
+            out[rows] = x[idx].sum(axis=1)
+        return out
+
+    def _search(self, hay, d, x, side: str) -> np.ndarray:
+        """``np.searchsorted(hay[a:b], x[j], side)`` within the slice of
+        digest ``d[j]``, for every probe in one search over (digest,
+        value) keys, which complex numbers order real part first.  NaN
+        probes search as +inf: for side="right", NumPy's own answer."""
+        keys = np.empty(self._owner.size, np.complex128)
+        keys.real = self._owner
+        keys.imag = hay[:self._owner.size]
+        probe = np.empty(x.size, np.complex128)
+        probe.real = d
+        probe.imag = np.where(np.isnan(x), np.inf, x)
+        return keys.searchsorted(probe, side) - self.start[d]
+
+    def _probes(self, ps) -> np.ndarray:
+        """One probe list for every digest, or one row per digest, as
+        a (digests, probes) array."""
+        ps = np.asarray(ps, dtype=np.float64)
+        if ps.ndim < 2:
+            ps = ps.reshape(1, -1)
+        return np.broadcast_to(ps, (self.count.size, ps.shape[1]))
+
+    # -- reads ---------------------------------------------------------
+
+    @property
+    def size(self) -> np.ndarray:
+        """Total weight per digest (``TDigest.size``)."""
+        return np.where(self.live, self.total, np.nan)
+
+    def extremes(self):
+        """``(min, max)`` per digest (``TDigest.min``/``max``)."""
+        has = self.live & (self.total > 0)
+        return np.where(has, self.lo, np.nan), np.where(has, self.hi, np.nan)
+
+    def quantiles(self, qs) -> np.ndarray:
+        """(digests, probes) quantiles (MergingDigest.java:697-783): the
+        scalar ``TDigest.quantile`` walk, re-expressed.  A q outside
+        [0, 1] on a live row raises ValueError; a NaN q gives NaN."""
+        q = self._probes(qs)
+        bad = self.live[:, None] & ((q < 0) | (q > 1))
+        if bad.any():
+            raise ValueError(f"q should be in [0,1], got {q[bad][0]}")
+        shape = q.shape
+        d = np.repeat(np.arange(shape[0]), shape[1])
+        m, w = self.mean, self.weight
+        n, o = self.count[d], self.start[d]
+        total, lo, hi = self.total[d], self.lo[d], self.hi[d]
+        index = q.ravel() * total
+        # weightSoFar before interval i, accumulated as the scalar walk
+        # does: w[0]/2, then += (w[i-1] + w[i])/2
+        half = np.empty_like(w)
+        half[1:] = (w[:-1] + w[1:]) / 2
+        half[self.start] = w[self.start] / 2
+        wsf = _seg_cumsum(half, self._segs)
+        # interval i brackets index when wsf[i+1] > index >= wsf[i]
+        i = o + np.clip(self._search(wsf, d, index, "right") - 1, 0,
+                        np.maximum(n - 2, 0))
+        last = o + n - 1
+        wl, wr, ml, mr, wsf_i = w[i], w[i + 1], m[i], m[i + 1], wsf[i]
+        w0, m0, wn, mn = w[o], m[o], w[last], m[last]
+        dw = (wl + wr) / 2
+        left_unit = np.where(wl == 1, 0.5, 0.0)
+        right_unit = np.where(wr == 1, 0.5, 0.0)
+        z1 = index - wsf_i - left_unit
+        z2 = wsf_i + dw - index - right_unit
+        # every branch value is computed eagerly and masked by np.where,
+        # so 0/0 (two bracketing singletons: z1+z2==0; weight-2 tail
+        # centroid: w/2-1==0) is expected and masked
+        with np.errstate(invalid="ignore", divide="ignore"):
+            out = _between((ml * z2 + mr * z1) / (z2 + z1), ml, mr)
+            # singleton spheres (no interpolation inside unit-weight
+            # centroids)
+            out = np.where((wr == 1) & (wsf_i + dw - index <= 0.5), mr, out)
+            out = np.where((wl == 1) & (index - wsf_i < 0.5), ml, out)
+            # fallthrough past the last interval: interpolate out to max
+            # (the scalar loop falls through when index >= wsf[n-1])
+            fz1 = index - total - wn / 2.0
+            fz2 = wn / 2 - fz1
+            out = np.where(index >= wsf[last], _between(
+                (mn * fz1 + hi * fz2) / (fz1 + fz2), mn, hi), out)
+            # tails (evaluated last: they take precedence, matching the
+            # scalar early returns)
+            out = np.where((wn > 1) & (total - index <= wn / 2),
+                           hi - (total - index - 1) / (wn / 2 - 1)
+                           * (hi - mn), out)
+            out = np.where(index > total - 1, hi, out)
+            out = np.where((w0 > 1) & (index < w0 / 2),
+                           lo + (index - 1) / (w0 / 2 - 1) * (m0 - lo), out)
+        out = np.where(index < 1, lo, out)
+        out = np.where(n == 1, m0, out)
+        out[(n == 0) | ~self.live[d]] = np.nan
+        return out.reshape(shape)
+
+    def cdfs(self, xs) -> np.ndarray:
+        """(digests, probes) CDFs, midpoint rule for ties
+        (MergingDigest.java:559-695): the scalar ``TDigest.cdf`` walk,
+        re-expressed.  A NaN or infinite x on a live row raises
+        ValueError."""
+        x = self._probes(xs)
+        bad = self.live[:, None] & ~np.isfinite(x)
+        if bad.any():
+            raise ValueError(f"Invalid value: {x[bad][0]}")
+        shape = x.shape
+        d = np.repeat(np.arange(shape[0]), shape[1])
+        x = x.ravel()
+        m, w = self.mean, self.weight
+        n, o = self.count[d], self.start[d]
+        total, lo, hi = self.total[d], self.lo[d], self.hi[d]
+        # weightSoFar before centroid i, and the weight of a run of
+        # equal means summed from the run's start, as the scalar walk
+        # accumulates them
+        wsf = np.zeros_like(w)
+        wsf[1:] = _seg_cumsum(w, self._segs)[:-1]
+        wsf[self.start] = 0.0
+        c = self._owner.size
+        new = np.ones(c, bool)
+        new[1:] = m[1:c] != m[:c - 1]
+        new[self.start[self.count > 0]] = True
+        rs = np.flatnonzero(new)
+        rl = np.diff(np.append(rs, c))
+        run = _seg_cumsum(w, _segments(rs[rl > 1], rl[rl > 1]))
+        j0 = self._search(m, d, x, "left")
+        j1 = self._search(m, d, x, "right")
+        # interior interpolation (non-tie): m[it] < x < m[it+1]
+        it = o + np.clip(j0 - 1, 0, np.maximum(n - 2, 0))
+        li, ri, wl, wr = m[it], m[it + 1], w[it], w[it + 1]
+        last = o + n - 1
+        w0, m0, wn, mn = w[o], m[o], w[last], m[last]
+        left_excl = np.where(wl == 1, 0.5, 0.0)
+        right_excl = np.where((wr == 1) & (wl != 1), 0.5, 0.0)
+        dw = (wl + wr) / 2
+        dw_no_single = dw - left_excl - right_excl
+        base = wsf[it] + wl / 2 + left_excl
+        with np.errstate(invalid="ignore", divide="ignore"):
+            out = (base + dw_no_single * (x - li) / (ri - li)) / total
+            # fp-madness guard (:678-684): zero-width gap
+            out = np.where(ri - li > 0, out, (wsf[it] + dw) / total)
+            out = np.where((wl == 1) & (wr == 1), (wsf[it] + 1) / total,
+                           out)
+            # tie: x lands on a run of equal means [j0, j1) — half credit
+            run_w = np.where(j1 > j0, run[o + np.minimum(j1, n) - 1], 0.0)
+            out = np.where(j1 > j0, np.where(
+                j0 >= n - 1, 1 - 0.5 / total,
+                (wsf[o + np.minimum(j0, n - 1)] + run_w / 2) / total), out)
+            # right tail: x > m[n-1] (and not past max)
+            rt = 1 - (1 + (hi - x) / (hi - mn) * (wn / 2 - 1)) / total
+            rt = np.where(hi - mn > 0, rt, 1.0)
+            rt = np.where(x == hi, 1 - 0.5 / total, rt)
+            out = np.where((x > mn) & (j1 == j0), rt, out)
+            # left tail: x < m[0]
+            lt = (1 + (x - lo) / (m0 - lo) * (w0 / 2 - 1)) / total
+            lt = np.where(m0 - lo > 0, lt, 0.0)
+            lt = np.where(x == lo, 0.5 / total, lt)
+            out = np.where(x < m0, lt, out)
+            # one centroid (:568-580)
+            width = hi - lo
+            one = np.where((x >= lo) & (x <= hi) & (x - lo > width),
+                           np.where(width > 0, (x - lo) / width, x * 0.0),
+                           0.5)
+        out = np.where(n == 1, one, out)
+        # outside the observed range
+        out = np.where(x < lo, 0.0, out)
+        out = np.where(x > hi, 1.0, out)
+        out[(n == 0) | ~self.live[d]] = np.nan
+        return out.reshape(shape)
+
+    def trimmed_means(self, q0, q1) -> np.ndarray:
+        """Per-digest mean of the samples between rank-quantiles q0 and
+        q1 (scalars, or one per digest): each centroid's weight is
+        clipped to the [q0*N, q1*N] rank window by cumulative rank.
+        Unless 0 <= q0 < q1 <= 1 on every live row, ValueError."""
+        q0, q1 = (np.broadcast_to(np.asarray(q, dtype=np.float64),
+                                  self.count.shape) for q in (q0, q1))
+        if (self.live & ~((0 <= q0) & (q0 < q1) & (q1 <= 1))).any():
+            raise ValueError("need 0 <= q0 < q1 <= 1")
+        c, own = self._owner.size, self._owner
+        right = _seg_cumsum(self.weight, self._segs)[:c]
+        left = right - self.weight[:c]
+        take = np.clip(np.minimum(right, (q1 * self.total)[own])
+                       - np.maximum(left, (q0 * self.total)[own]), 0, None)
+        tw = self._sums(take)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            # an infinite mean outside the window gives inf * 0
+            out = self._sums(self.mean[:c] * take) / tw
+        out[(tw <= 0) | (self.count == 0) | ~self.live] = np.nan
+        return out
 
 
 def _sort_ties_stable(x: np.ndarray) -> np.ndarray:

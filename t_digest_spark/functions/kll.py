@@ -24,7 +24,7 @@ import numpy as np
 from pyspark.sql.types import ArrayType, DoubleType
 
 from ..operators.aggregate import aggregate_sketches, object_codec
-from ..operators.extract import _probe
+from ..operators.extract import _per_row, _probe
 
 __all__ = ["KLLSketch", "kll_aggregate", "kll_quantiles_of"]
 
@@ -229,5 +229,5 @@ def kll_aggregate(df, value_col: str, group_cols=(), k: int = 200,
 def kll_quantiles_of(kll_col, qs):
     """array<double> of quantiles from a KLL blob column."""
     qvs = [float(q) for q in qs]
-    return _probe(ArrayType(DoubleType()), KLLSketch.from_bytes,
-                  lambda sk: sk.quantiles(qvs).tolist(), None)(kll_col)
+    return _probe(ArrayType(DoubleType()), _per_row(
+        KLLSketch.from_bytes, lambda sk: sk.quantiles(qvs).tolist()))(kll_col)

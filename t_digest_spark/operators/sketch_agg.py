@@ -24,7 +24,7 @@ from ..functions.sketches import (
     BloomFilter, CountMinSketch, HyperLogLog, sketch_from_bytes,
 )
 from .aggregate import aggregate_sketches, object_codec
-from .extract import _probe
+from .extract import _per_row, _probe
 
 __all__ = [
     "sketch_aggregate", "hll_estimate", "cm_estimates", "bloom_contains",
@@ -92,27 +92,25 @@ def sketch_aggregate(
 # ---------------------------------------------------------------------
 
 def hll_estimate(sketch: Column | str) -> Column:
-    return _probe(DoubleType(), sketch_from_bytes,
-                  lambda sk: float(sk.estimate()), np.nan)(sketch)
+    return _probe(DoubleType(), _per_row(
+        sketch_from_bytes, lambda sk: float(sk.estimate())))(sketch)
 
 
 def cm_estimates(sketch: Column | str, hash_array: Column) -> Column:
     """Point estimates for a column of item-hash arrays (build the hash
     array with ``F.array(*[hashed(F.lit(v)) for v in items])`` so the
     probe uses the same JVM hash as the build)."""
-    return _probe(
-        ArrayType(LongType()), sketch_from_bytes,
+    return _probe(ArrayType(LongType()), _per_row(
+        sketch_from_bytes,
         lambda sk, hs: [int(x) for x in sk.estimate_hashes(
-            np.asarray(hs, dtype=np.int64))],
-        None)(sketch, hash_array)
+            np.asarray(hs, dtype=np.int64))]))(sketch, hash_array)
 
 
 def bloom_contains(sketch: Column | str, hash_array: Column) -> Column:
-    return _probe(
-        ArrayType(BooleanType()), sketch_from_bytes,
+    return _probe(ArrayType(BooleanType()), _per_row(
+        sketch_from_bytes,
         lambda sk, hs: [bool(x) for x in sk.contains_hashes(
-            np.asarray(hs, dtype=np.int64))],
-        None)(sketch, hash_array)
+            np.asarray(hs, dtype=np.int64))]))(sketch, hash_array)
 
 
 def distinct_count_approx(df: DataFrame, item_col: str,

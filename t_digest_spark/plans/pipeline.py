@@ -30,6 +30,7 @@ import os
 import time
 from typing import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..core import TDigest
@@ -55,6 +56,7 @@ class DigestCheckpointPipeline:
         self.compression = compression
         self.scale = scale
         self.files_per_batch = files_per_batch
+        self._schema = None
 
     # -- paths ---------------------------------------------------------
     @property
@@ -69,19 +71,24 @@ class DigestCheckpointPipeline:
     def _input_files(self) -> list[str]:
         return sorted(self.spark.read.parquet(self.input_path).inputFiles())
 
-    def _done_files(self) -> set[str]:
-        if not self._partials_exist():
-            return set()
-        rows = (self.spark.read.parquet(self.partials_path)
-                .select(_FILE_COL).distinct().collect())
-        return {r[0] for r in rows}
+    def _partials(self) -> DataFrame:
+        """The checkpointed partials, read with the schema learned on
+        this object's first read: inferring it again runs a footer job
+        on every read.  The files are listed on each call, so partials
+        appended since stay visible."""
+        reader = self.spark.read
+        if self._schema is not None:
+            reader = reader.schema(self._schema)
+        df = reader.parquet(self.partials_path)
+        self._schema = df.schema
+        return df
 
-    def _partials_exist(self) -> bool:
+    def _done_files(self) -> set[str]:
         try:
-            self.spark.read.parquet(self.partials_path).limit(1).collect()
-            return True
-        except Exception:  # noqa: BLE001 — missing path
-            return False
+            partials = self._partials()
+        except AnalysisException:  # no partials written yet
+            return set()
+        return {r[0] for r in partials.select(_FILE_COL).distinct().collect()}
 
     def _write_lineage(self, state: dict) -> None:
         os.makedirs(self.ckpt, exist_ok=True)
@@ -147,7 +154,7 @@ class DigestCheckpointPipeline:
     def metrics(self) -> DataFrame:
         """Per-(file, group) checkpoint metrics: rows, centroid counts,
         min/max, serialized size."""
-        return self.spark.read.parquet(self.partials_path).select(
+        return self._partials().select(
             _FILE_COL, *self.group_cols, "rows", "centroids",
             "v_min", "v_max", "digest_bytes")
 
@@ -155,8 +162,8 @@ class DigestCheckpointPipeline:
     def finalize(self, tree: bool = False) -> DataFrame:
         """Merge checkpointed partials into one digest row per group.
         No rescan of the input."""
-        partials = self.spark.read.parquet(self.partials_path) \
-            .select(*self.group_cols, DIGEST_FIELD, "rows")
+        partials = self._partials().select(*self.group_cols, DIGEST_FIELD,
+                                           "rows")
         if tree:
             return tree_merge(partials, self.group_cols, self.compression,
                               self.scale)

@@ -344,8 +344,6 @@ def turn_digests_clustered(transcripts: DataFrame,
     in_schema = transcripts.schema
     need = {"turn_idx", "ts"} | {
         c for c in group_cols if c != "ts_hour"}
-    if "text_len" in metrics:
-        need.add("text")
     # the kernel only needs conv BOUNDARIES, not identities — ship an
     # 8-byte xxhash64 of conv_id across Arrow instead of the string
     # (the widest column otherwise).  A hash collision between two
@@ -354,9 +352,13 @@ def turn_digests_clustered(transcripts: DataFrame,
     # sortedness guard in _clustered_lag (ValueError), so the failure
     # mode is a spurious error with ~n_adjacent/2^64 probability, never
     # silent conv merging.
+    # text_len is length(text) in Catalyst, as turn_metrics has it, so
+    # the text itself never crosses Arrow
     narrow = transcripts.select(
         F.xxhash64("conv_id").alias("conv_id"),
-        *[f.name for f in in_schema.fields if f.name in need])
+        *[f.name for f in in_schema.fields if f.name in need],
+        *([F.length("text").cast("double").alias("__text_len")]
+          if "text_len" in metrics else []))
     out_schema = StructType(
         [StructField("metric", StringType(), False)]
         + [StructField(c, in_schema["ts"].dataType if c == "ts_hour"
@@ -381,9 +383,7 @@ def turn_digests_clustered(transcripts: DataFrame,
                 if m == "latency_s":
                     val = pa.array(lat, type=pa.float64())
                 elif m == "text_len":
-                    val = pc.cast(
-                        pc.utf8_length(b.column(names.index("text"))),
-                        pa.float64())
+                    val = b.column(names.index("__text_len"))
                 else:
                     raise ValueError(f"unknown metric {m!r}")
                 accs[m].update(pa.RecordBatch.from_arrays(

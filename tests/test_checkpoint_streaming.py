@@ -521,3 +521,44 @@ def test_expire_retains_null_expiry_rows(spark):
                                      "k long, w double")
     kept = sorted(r.k for r in _expire(all_null, "w", 60.0).collect())
     assert kept == [1, 2]
+
+
+def test_finalize_reads_partials_without_inference(spark, workdir):
+    """Once the pipeline has read its partials, building ``finalize()``
+    again (flat or tree) starts no Spark job: the partials' schema is
+    not inferred a second time.  The read gives the rows an inferring
+    read gives, and partials appended later stay visible."""
+    inp = os.path.join(workdir, "input3.parquet")
+    rng = np.random.default_rng(3)
+    spark.createDataFrame(
+        [("g%d" % (i % 3), float(v))
+         for i, v in enumerate(rng.uniform(size=3_000))],
+        "g string, v double").repartition(4) \
+        .write.mode("overwrite").parquet(inp)
+    pipe = DigestCheckpointPipeline(spark, inp, "v", ["g"],
+                                    os.path.join(workdir, "ckpt3"),
+                                    files_per_batch=2)
+    pipe.run_partials()
+    first = {r.g: r.rows for r in pipe.finalize().collect()}
+
+    sc = spark.sparkContext
+    sc.setJobGroup("finalize-build", "builds only", False)
+    try:
+        flat = pipe.finalize()
+        tree = pipe.finalize(tree=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("finalize-build")) \
+        == []
+
+    cols = ["__source_file", "g", "digest", "rows"]
+    inferred = spark.read.parquet(pipe.partials_path).select(cols).collect()
+    assert sorted(pipe._partials().select(cols).collect()) \
+        == sorted(inferred)
+    assert {r.g: r.rows for r in flat.collect()} == first
+    assert {r.g: r.rows for r in tree.collect()} == first
+
+    # a partial appended after the schema was learned is read too
+    spark.read.parquet(pipe.partials_path).limit(1) \
+        .write.mode("append").parquet(pipe.partials_path)
+    assert pipe._partials().count() == len(inferred) + 1

@@ -391,6 +391,56 @@ def test_turn_metrics_clustered_equals_window(spark, tmp_path):
         assert ra == rb, (ra, rb)
 
 
+def _utf8_transcripts(spark, path):
+    """One parquet file of conv-clustered turns whose texts mix empty
+    strings, multi-byte UTF-8 and characters outside the BMP."""
+    import datetime as dt
+
+    texts = ["", "héllo", "日本語のテキスト", "🙂🙂 ok", "a", "naïve café",
+             "ß" * 40, "", "Ωmega – “quotes”", "x" * 300]
+    rng = np.random.default_rng(9)
+    t0 = dt.datetime(2026, 1, 1)
+    rows = []
+    for c in range(60):
+        ts = t0 + dt.timedelta(minutes=int(rng.integers(0, 600)))
+        for i in range(int(rng.integers(1, 7))):
+            ts += dt.timedelta(seconds=int(rng.integers(1, 90)))
+            rows.append((f"c{c:03d}", i, ["user", "assistant"][i % 2],
+                         None, texts[int(rng.integers(len(texts)))], ts))
+    spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, tool string, "
+              "text string, ts timestamp") \
+        .coalesce(1).write.parquet(path)
+    return rows
+
+
+def test_fused_text_len_never_crosses_arrow(spark, tmp_path):
+    """The fused kernel's text_len is length(text) computed in Catalyst:
+    the mapInArrow input has no text column, and the digests are the
+    bytes the engine builds from Python's code-point lengths."""
+    import re
+
+    from t_digest_spark.sources.tables import turn_digests_clustered
+
+    path = str(tmp_path / "utf8.parquet")
+    rows = _utf8_transcripts(spark, path)
+    fused = turn_digests_clustered(spark.read.parquet(path),
+                                   ("latency_s", "text_len"), ("role",))
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    arrow_in = [ln for ln in plan.splitlines() if "MapInArrow" in ln]
+    assert arrow_in
+    assert not any(re.search(r"\btext#", ln) for ln in arrow_in), arrow_in
+
+    got = {r.role: (r.rows, bytes(r.digest)) for r in
+           fused.where(F.col("metric") == "text_len").collect()}
+    want = tdigest_aggregate(
+        spark.createDataFrame([(r[2], float(len(r[4]))) for r in rows],
+                              "role string, text_len double").coalesce(1),
+        "text_len", ["role"])
+    assert got == {r.role: (r.rows, bytes(r.digest))
+                   for r in want.collect()}
+
+
 def test_turn_metrics_clustered_rejects_unsorted(spark):
     from t_digest_spark.sources.tables import turn_metrics_clustered
 
