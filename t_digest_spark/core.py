@@ -43,7 +43,7 @@ import numpy as np
 
 from .scale import K_2, get_scale
 
-__all__ = ["TDigest", "merge_digests", "merge_blobs",
+__all__ = ["TDigest", "merge_digests", "merge_blobs", "merge_blob_groups",
            "try_singleton_blob"]
 
 _VERBOSE_ENCODING = 1
@@ -832,6 +832,75 @@ def _be(buf: np.ndarray, pos: np.ndarray, dtype: str, count: int = 1):
     return out if count > 1 else out.reshape(-1)
 
 
+def _decode(blobs):
+    """``(live, n, lo, hi, comp, nbytes, mean, weight)`` of a pyarrow
+    ``binary`` or ``large_binary`` array of VERBOSE/SMALL blobs
+    (MergingDigest.java:898-936), read from its buffers: ``live`` per
+    row, the header fields and blob length per live row, and every live
+    row's centroids, in row order, as float64."""
+    d = len(blobs)
+    _, offsets, data = blobs.buffers()
+    odt = np.dtype(np.int64 if str(blobs.type) == "large_binary"
+                   else np.int32)
+    off = (np.frombuffer(offsets, odt, d + 1, blobs.offset * odt.itemsize)
+           .astype(np.int64) if d else np.zeros(1, np.int64))
+    buf = np.frombuffer(data, np.uint8) if data is not None \
+        else np.empty(0, np.uint8)
+    live = np.ones(d, bool) if blobs.null_count == 0 \
+        else blobs.is_valid().to_numpy(zero_copy_only=False)
+    s = off[:-1][live]
+    size = off[1:][live] - s
+    if (size < 30).any():
+        raise ValueError("truncated digest blob")
+    enc = _be(buf, s, ">i4")
+    verbose = enc == _VERBOSE_ENCODING
+    small = enc == _SMALL_ENCODING
+    if not (verbose | small).all():
+        raise ValueError("Invalid serialized digest format "
+                         f"{enc[~(verbose | small)][0]}")
+    head = np.where(verbose, 32, 30)
+    width = np.where(verbose, 16, 8)
+    if (size < head).any():
+        raise ValueError("truncated digest blob")
+    n = np.empty(s.size, np.int64)
+    comp = np.empty(s.size)
+    n[verbose] = _be(buf, s[verbose] + 28, ">i4")
+    n[small] = _be(buf, s[small] + 28, ">i2")
+    comp[verbose] = _be(buf, s[verbose] + 20, ">f8")
+    comp[small] = _be(buf, s[small] + 20, ">f4")
+    if ((n < 0) | (head + width * n > size)).any():
+        raise ValueError("truncated digest blob")
+    first = np.zeros(s.size, np.int64)
+    np.cumsum(n[:-1], out=first[1:])
+    if verbose.all() and (s % 8 == s[:1] % 8).all():
+        # every pair is two slots of one big-endian float64 view
+        r = int(s[0] % 8) if s.size else 0
+        slots = np.frombuffer(buf, ">f8", (buf.size - r) // 8, r)
+        at = np.arange(0, 2 * int(n.sum()), 2)
+        at += np.repeat((s + 32 - r) // 8 - 2 * first, n)
+        weight = slots[at]
+        at += 1
+        mean = slots[at]
+        del at
+        # swap the gathered copies in place, then read them natively
+        mean, weight = (x.byteswap(inplace=True).view(
+            x.dtype.newbyteorder()) for x in (mean, weight))
+        return (live, n, _be(buf, s + 4, ">f8"), _be(buf, s + 12, ">f8"),
+                comp, size, mean, weight)
+    # byte offset of every centroid pair, in row order
+    pos = np.repeat(s + head - width * first, n) \
+        + np.repeat(width, n) * np.arange(int(n.sum()))
+    mean = np.empty(pos.size)
+    weight = np.empty(pos.size)
+    wide = np.repeat(verbose, n)
+    for rows, dtype in ((wide, ">f8"), (~wide, ">f4")):
+        pairs = _be(buf, pos[rows], dtype, 2)
+        weight[rows] = pairs[:, 0]
+        mean[rows] = pairs[:, 1]
+    return (live, n, _be(buf, s + 4, ">f8"), _be(buf, s + 12, ">f8"), comp,
+            size, mean, weight)
+
+
 class DigestBatch:
     """Many digests in one flat centroid layout, read together.
 
@@ -894,50 +963,7 @@ class DigestBatch:
         VERBOSE/SMALL blobs (MergingDigest.java:898-936) from its
         buffers: no ``bytes`` object per row.  A NULL row is not
         live."""
-        d = len(blobs)
-        _, offsets, data = blobs.buffers()
-        odt = np.dtype(np.int64 if str(blobs.type) == "large_binary"
-                       else np.int32)
-        off = (np.frombuffer(offsets, odt, d + 1, blobs.offset * odt.itemsize)
-               .astype(np.int64) if d else np.zeros(1, np.int64))
-        buf = np.frombuffer(data, np.uint8) if data is not None \
-            else np.empty(0, np.uint8)
-        live = np.ones(d, bool) if blobs.null_count == 0 \
-            else blobs.is_valid().to_numpy(zero_copy_only=False)
-        s = off[:-1][live]
-        size = off[1:][live] - s
-        if (size < 30).any():
-            raise ValueError("truncated digest blob")
-        enc = _be(buf, s, ">i4")
-        verbose = enc == _VERBOSE_ENCODING
-        small = enc == _SMALL_ENCODING
-        if not (verbose | small).all():
-            raise ValueError("Invalid serialized digest format "
-                             f"{enc[~(verbose | small)][0]}")
-        head = np.where(verbose, 32, 30)
-        width = np.where(verbose, 16, 8)
-        if (size < head).any():
-            raise ValueError("truncated digest blob")
-        n = np.empty(s.size, np.int64)
-        comp = np.empty(s.size)
-        n[verbose] = _be(buf, s[verbose] + 28, ">i4")
-        n[small] = _be(buf, s[small] + 28, ">i2")
-        comp[verbose] = _be(buf, s[verbose] + 20, ">f8")
-        comp[small] = _be(buf, s[small] + 20, ">f4")
-        if ((n < 0) | (head + width * n > size)).any():
-            raise ValueError("truncated digest blob")
-        # byte offset of every centroid pair, in row order
-        first = np.zeros(s.size, np.int64)
-        np.cumsum(n[:-1], out=first[1:])
-        pos = np.repeat(s + head - width * first, n) \
-            + np.repeat(width, n) * np.arange(int(n.sum()))
-        mean = np.empty(pos.size)
-        weight = np.empty(pos.size)
-        wide = np.repeat(verbose, n)
-        for rows, dtype in ((wide, ">f8"), (~wide, ">f4")):
-            pairs = _be(buf, pos[rows], dtype, 2)
-            weight[rows] = pairs[:, 0]
-            mean[rows] = pairs[:, 1]
+        live, n, lo, hi, comp, size, mean, weight = _decode(blobs)
 
         def full(v, fill, dtype=np.float64):
             out = np.full(live.size, fill, dtype)
@@ -945,8 +971,7 @@ class DigestBatch:
             return out
 
         return cls(mean, weight, full(n, 0, np.int64), live,
-                   full(_be(buf, s + 4, ">f8"), np.nan),
-                   full(_be(buf, s + 12, ">f8"), np.nan),
+                   full(lo, np.nan), full(hi, np.nan),
                    # TDigest(compression) lifts a compression below 10
                    full(np.where(comp < 10, 10.0, comp), np.nan),
                    full(size, 0, np.int64))
@@ -1321,3 +1346,304 @@ def merge_blobs(blobs, compression: float | None = None, scale=None,
     """
     return _merge_parts(map(_unpack, blobs), compression,
                         K_2 if scale is None else scale, buffer_size)
+
+
+# merge_blob_groups merges its groups in slices of about this many blob
+# bytes (a VERBOSE centroid is 16): 2^17 centroids' worth
+_SLICE_BYTES = 1 << 21
+# ... and runs its elementwise steps and block sorts over at most this
+# many centroids at a time
+_BLOCK = 1 << 16
+
+
+def _argsort_stable(x: np.ndarray) -> np.ndarray:
+    """``np.argsort(x, kind="stable")`` at introsort speed: only equal
+    values (0.0 and -0.0 among them) and the NaNs sorted last can come
+    out of input order, so their indices are put back in order."""
+    o = np.argsort(x)
+    v = x[o]
+    tie = v[1:] == v[:-1]
+    if tie.any():
+        run = np.cumsum(np.r_[True, ~tie])
+        t = np.flatnonzero(np.r_[tie, False] | np.r_[False, tie])
+        o[t] = np.sort(run[t] * x.size + o[t]) % x.size
+    if v.size and v[-1] != v[-1]:
+        nan = np.isnan(v)
+        o[nan] = np.sort(o[nan])
+    return o
+
+
+def _sort_groups(mean, weight, start, length, runs) -> None:
+    """Stable-sort each segment ``[start, start + length)`` of ``mean``
+    in place, carrying ``weight`` along; ``runs`` is the number of
+    sorted runs (blobs) the segment is made of.  A segment of many runs
+    sorts on its own (introsort, ``_argsort_stable``); those of a few
+    runs, which the stable sort merges in about linear time, sort
+    together in 2-D blocks of similar length (within 25%), one
+    NaN-padded row each, a fixed number of NumPy calls per block."""
+    few = runs <= 4
+    for a, n in zip(start[~few].tolist(), length[~few].tolist()):
+        o = _argsort_stable(mean[a:a + n])
+        mean[a:a + n] = mean[a:a + n][o]
+        weight[a:a + n] = weight[a:a + n][o]
+    start, length = start[few], length[few]
+    step = 1 << np.maximum(np.log2(np.maximum(length, 1)).astype(np.int64)
+                           - 2, 0)
+    width = -(-length // step) * step
+    for w in np.unique(width).tolist():
+        rows = np.flatnonzero(width == w)
+        for part in np.array_split(rows, -(-rows.size * w // _BLOCK)):
+            _sort_block(mean, weight, start[part], length[part], w)
+
+
+def _sort_block(mean, weight, st, ln, w: int) -> None:
+    """``_sort_groups``' stable sort of the segments ``[st, st + ln)``
+    as the NaN-padded rows of one (len(st), w) block."""
+    valid = np.arange(w) < ln[:, None]
+    at = np.repeat(st - np.cumsum(ln) + ln, ln) + np.arange(ln.sum())
+    block = np.full(valid.shape, np.nan)
+    block[valid] = mean[at]
+    src = (np.argsort(block, kind="stable") + st[:, None])[valid]
+    mean[at] = mean[src]
+    weight[at] = weight[src]
+
+
+def _horizon(keys: np.ndarray, rank: np.ndarray,
+             x: np.ndarray) -> np.ndarray:
+    """Per probe, the count of ``keys`` up to ``(rank, x)``: keys are
+    ``(group rank, csum)`` pairs as complex numbers, which NumPy orders
+    real part first, so one ``searchsorted`` (side="right") answers
+    every group's own search of its prefix sums."""
+    probe = np.empty(x.size, np.complex128)
+    probe.real = rank
+    probe.imag = x
+    return keys.searchsorted(probe, "right")
+
+
+def _first_over(x: np.ndarray, lo: np.ndarray, hi: np.ndarray,
+                limit: np.ndarray) -> np.ndarray:
+    """Per window ``[lo[i], hi[i]]`` of ``x``, the first index j with
+    ``x[j] > limit[i]``; every window must hold one."""
+    width = hi - lo + 1
+    j = np.repeat(lo - np.cumsum(width) + width, width) \
+        + np.arange(int(width.sum()))
+    who = np.repeat(np.arange(lo.size), width)
+    over = np.flatnonzero(x[j] > limit[who])
+    return j[over[np.r_[True, who[over[1:]] != who[over[:-1]]]]]
+
+
+def _first_min(x: np.ndarray, grp: np.ndarray, size: int) -> np.ndarray:
+    """Per group of the non-decreasing ids ``grp``, the first ``x``
+    equal to the group's minimum, as Python's running ``min`` over the
+    group picks it (a tie keeps the earlier value, so of -0.0 and 0.0
+    the first wins); +inf for a group with no value."""
+    out = np.full(size, np.inf)
+    np.minimum.at(out, grp, x)
+    hit = np.flatnonzero(x == out[grp])
+    hit = hit[np.r_[True, grp[hit[1:]] != grp[hit[:-1]]]] if hit.size \
+        else hit
+    out[grp[hit]] = x[hit]
+    return out
+
+
+def merge_blob_groups(blobs, offsets, compression: float = 100.0,
+                      scale=K_2):
+    """Merge every group of serialized digests at once: ``blobs`` is a
+    pyarrow binary array of VERBOSE/SMALL blobs in group order, group
+    ``g`` is ``blobs[offsets[g]:offsets[g + 1]]``, and the result is a
+    pyarrow binary array of one VERBOSE blob per group, byte for byte
+    ``merge_blobs(group, compression, scale).to_bytes()``.
+
+    The steps of ``_merge_parts`` + ``_merge_pass``, for every group in
+    one flat centroid layout: decode (``_decode``), a stable sort of
+    each group that is not already in order, the group's total and
+    prefix sums as the scalar path sums them (``_segments``), ``cap2``
+    and ``excess`` over the whole layout, then the greedy sweep of
+    ``_cluster_starts`` run in lockstep: one iteration advances every
+    group's current cluster, so the loop runs as many times as the
+    longest group has clusters, each a fixed number of NumPy calls.
+    The scalar sweep stays as the single-digest path and this kernel's
+    oracle (tests/test_batch_merge.py).  Groups are merged in slices of
+    about ``_SLICE_BYTES`` of blobs, so the temporaries stay a few
+    times the slice's centroids, whatever the input's size."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    scale = get_scale(scale)
+    comp = float(compression)
+    comp = 10.0 if comp < 10 else comp   # as TDigest(compression)
+    offsets = np.asarray(offsets, np.int64)
+    if blobs.null_count:
+        raise ValueError("cannot merge a NULL digest blob")
+    size = np.zeros(len(blobs) + 1, np.int64)
+    np.cumsum(pc.binary_length(blobs).to_numpy(), out=size[1:])
+    cut = size[offsets[1:]] // _SLICE_BYTES
+    cut = np.r_[0, np.flatnonzero(np.diff(cut)) + 1, offsets.size - 1]
+    out = [_merge_groups(blobs.slice(offsets[a], offsets[b] - offsets[a]),
+                         offsets[a:b + 1] - offsets[a], comp, scale)
+           for a, b in zip(cut[:-1].tolist(), cut[1:].tolist())]
+    return out[0] if len(out) == 1 else pa.concat_arrays(out)
+
+
+def _merge_groups(blobs, offsets, comp: float, scale):
+    """``merge_blob_groups`` over one slice of groups, at the public
+    compression ``comp``."""
+    import pyarrow as pa
+
+    ngroups = offsets.size - 1
+    _, nb, lo, hi, _, _, mean, weight = _decode(blobs)
+    bgrp = np.repeat(np.arange(ngroups), np.diff(offsets))
+    # the header extremes: the parts' recorded min/max (empty parts
+    # skipped, NaN never wins), as _merge_parts takes them
+    part = nb > 0
+    mn = _first_min(np.where(np.isnan(lo[part]), np.inf, lo[part]),
+                    bgrp[part], ngroups)
+    mx = -_first_min(np.where(np.isnan(hi[part]), np.inf, -hi[part]),
+                     bgrp[part], ngroups)
+    # group g's centroids are mean[cstart[g]:cend[g]], in blob order
+    cn = np.zeros(nb.size + 1, np.int64)
+    np.cumsum(nb, out=cn[1:])
+    cstart, cend = cn[offsets[:-1]], cn[offsets[1:]]
+    count = cend - cstart
+    c = mean.size
+    some = np.flatnonzero(count > 0)
+    full = cstart[some]
+    # an all-unit group's total and prefix sums are exact integers;
+    # other groups sum their weights as the scalar path does, the total
+    # in input order (_append), the prefix sums after the sort
+    unit = np.ones(ngroups, bool)
+    unit[some] = np.logical_and.reduceat(weight == 1.0, full)
+    total = count.astype(np.float64)
+    segs = [(np.flatnonzero(~unit)[rows], idx) for rows, idx in
+            _segments(cstart[~unit], count[~unit])]
+    for rows, idx in segs:
+        total[rows] = weight[idx].sum(axis=1)
+    # stable sort of each group whose concatenated means are out of
+    # order (a one-blob group never is)
+    down = np.zeros(c, bool)
+    down[1:] = ~(mean[1:] >= mean[:-1])
+    down[full] = False
+    todo = some[np.logical_or.reduceat(down, full)] if c else some
+    del down
+    _sort_groups(mean, weight, cstart[todo], count[todo],
+                 np.diff(offsets)[todo])
+    csum = np.arange(1.0, c + 1.0)
+    csum -= np.repeat(cstart.astype(np.float64), count)
+    for rows, idx in segs:
+        csum[idx] = np.cumsum(weight[idx], axis=1)
+    del segs
+    # per-group normalizer from the scalar scale function; cap2 and
+    # excess elementwise with each centroid's group total
+    norm = np.ones(ngroups)
+    norm[some] = [scale.normalizer(comp, t) for t in total[some].tolist()]
+    # with the all-singletons early exit's test: a group sweeps only if
+    # some adjacent pair w[j-1] + w[j] <= cap2[j] at local j >= 2
+    cap2, excess, pair = np.empty(c), np.empty(c), np.zeros(c, bool)
+    for a in range(0, c, _BLOCK):
+        b = min(a + _BLOCK, c)
+        own = cend.searchsorted(np.arange(a, b), "right")
+        t = total[own]
+        cap2[a:b] = t * scale.max_size(csum[a:b] / t, norm[own])
+        excess[a:b] = csum[a:b] - cap2[a:b]
+        j = max(a, 1)
+        pair[j:b] = weight[j - 1:b - 1] + weight[j:b] <= cap2[j:b]
+    pair[full] = False
+    pair[np.minimum(full + 1, c - 1)] = False
+    sweeps = count > 2
+    sweeps[some] &= np.logical_or.reduceat(pair, full) if c else False
+    del pair
+    # the search keys of the sweeping groups that are not all-unit:
+    # (rank, csum) pairs, so one searchsorted finds each group's own
+    # horizon (_horizon)
+    g = np.flatnonzero(sweeps)
+    other = g[~unit[g]]
+    klen = count[other]
+    kbase = np.zeros(g.size, np.int64)
+    kbase[~unit[g]] = np.cumsum(klen) - klen
+    krank = np.zeros(g.size, np.int64)
+    krank[~unit[g]] = np.arange(other.size)
+    keys = np.empty(int(klen.sum()), np.complex128)
+    keys.real = np.repeat(np.arange(other.size), klen)
+    keys.imag = csum[np.repeat(cstart[other] - kbase[~unit[g]], klen)
+                     + np.arange(keys.size)]
+    del csum
+    is_start = np.ones(c, bool)
+    is_start[np.repeat(sweeps, count)] = False
+    is_start[full] = True
+    is_start[(cend - 1)[count > 1]] = True
+    # the sweeping groups' state, one column each: start of the group,
+    # current cluster start s, last s allowed, unit flag, and the
+    # group's rank and start in the keys
+    state = np.stack([cstart[g], np.ones(g.size, np.int64), count[g] - 2,
+                      unit[g], krank, kbase])
+    while state.shape[1]:
+        base, s, last, is_unit, krank, kbase = state
+        is_unit = is_unit.astype(bool)
+        at = base + s
+        is_start[at] = True
+        cap0 = cap2[at - 1]
+        w_start = s.astype(np.float64)
+        hi = np.floor(w_start + cap0).astype(np.int64) - 1
+        nu = np.flatnonzero(~is_unit)
+        if nu.size:
+            w_start[nu] = keys.imag[kbase[nu] + s[nu] - 1]
+            hi[nu] = _horizon(keys, krank[nu], w_start[nu] + cap0[nu]) \
+                - kbase[nu] - 1
+        hi = np.minimum(hi, last)
+        one = (hi <= s) | (excess[at + 1] > w_start)
+        run = ~one & (excess[base + np.maximum(hi, s)] <= w_start)
+        nxt = np.where(run, hi + 1, s + 1)
+        scan = np.flatnonzero(~(one | run))
+        if scan.size:
+            # the window scan: the first j in (s+1, hi] whose excess
+            # passes the cluster's start weight caps the run
+            nxt[scan] = _first_over(excess, at[scan] + 2, base[scan]
+                                    + hi[scan], w_start[scan]) - base[scan]
+        state[1] = nxt
+        state = state[:, nxt <= last]
+    del keys, cap2, excess
+    starts = np.flatnonzero(is_start)
+    del is_start
+    # the segment sums and clamp of _merge_pass, over every group
+    ends = np.append(starts[1:], c)[:starts.size]
+    single = (ends - starts) == 1
+    b1, b2 = mean[starts], mean[ends - 1]
+    seg_w = np.add.reduceat(weight, starts) if c else weight
+    mean *= weight
+    out_mean = np.add.reduceat(mean, starts) / seg_w if c else mean
+    del mean, weight
+    out_mean[single] = b1[single]
+    out_mean = np.clip(out_mean, np.minimum(b1, b2), np.maximum(b1, b2))
+    nout = starts.searchsorted(cend) - starts.searchsorted(cstart)
+    del b1, b2, ends, single, starts
+    first = np.cumsum(nout) - nout
+    has = (nout > 0) & (total > 0)
+    m0 = out_mean[first[has]]
+    ml = out_mean[(first + nout - 1)[has]]
+    mn[has] = np.where(m0 < mn[has], m0, mn[has])
+    mx[has] = np.where(ml > mx[has], ml, mx[has])
+    # one buffer of 16-byte rows: each blob is a two-row header, then
+    # one (weight, mean) row per centroid
+    head = np.empty(ngroups, np.dtype([("enc", ">i4"), ("min", ">f8"),
+                                       ("max", ">f8"), ("comp", ">f8"),
+                                       ("n", ">i4")]))
+    head["enc"] = _VERBOSE_ENCODING
+    head["min"] = mn
+    head["max"] = mx
+    head["comp"] = comp
+    head["n"] = nout
+    out = np.empty((2 * ngroups + out_mean.size, 16), np.uint8)
+    hrow = 2 * np.arange(ngroups) + first
+    out[hrow] = head.view(np.uint8).reshape(-1, 2, 16)[:, 0]
+    out[hrow + 1] = head.view(np.uint8).reshape(-1, 2, 16)[:, 1]
+    pairs = np.empty((out_mean.size, 2), ">f8")
+    pairs[:, 0] = seg_w
+    pairs[:, 1] = out_mean
+    out[np.repeat(hrow + 2 - first, nout)
+        + np.arange(out_mean.size)] = pairs.view(np.uint8).reshape(-1, 16)
+    if out.size >= 1 << 31:
+        raise OverflowError("merged digests exceed 2 GiB")
+    boff = np.zeros(ngroups + 1, np.int32)
+    boff[1:] = np.cumsum(32 + 16 * nout)
+    return pa.BinaryArray.from_buffers(
+        pa.binary(), ngroups, [None, pa.py_buffer(boff), pa.py_buffer(out)])

@@ -12,9 +12,10 @@ Execution model (SURVEY.md §3.2, designed for 100 TB inputs):
            100 TB of raw rows never shuffle; only sketches do.
 
   stage 2  ``_merge_sketches`` — repartition(keys) over the tiny sketch
-           table + a whole-partition mapInArrow merge (for digests,
-           MergingDigest.add(List) semantics: one concatenated merge
-           pass per group).
+           table + a whole-partition mapInArrow merge that hands every
+           group of the partition to the codec at once (for digests,
+           ``core.merge_blob_groups``: MergingDigest.add(List)
+           semantics, every group's merge pass run in lockstep).
 
   optional ``tree_merge`` — for extreme partition counts (10^5+ partials
            per key) an intermediate salt level bounds any single reduce
@@ -45,7 +46,8 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, LongType, StructField, StructType
 
-from ..core import TDigest, merge_blobs, try_singleton_blob
+from ..core import TDigest, merge_blob_groups, merge_blobs, \
+    try_singleton_blob
 
 __all__ = [
     "partial_digests",
@@ -204,9 +206,13 @@ class SketchCodec(NamedTuple):
     ``new() -> sketch``; ``update(sketch, values, weights)`` takes NumPy
     slices of one group's rows (``weights`` is None for unweighted
     aggregates); ``to_bytes(sketch)`` is the stage-1 partial blob;
-    ``merge_blobs(list[bytes]) -> bytes`` is the stage-2 result, and is
-    called with ``[]`` for a global aggregate over no input.  The
-    optional ``pack(values) -> bytes | None`` serializes a small
+    ``merge_blobs(blobs, offsets)`` is stage 2 for a whole partition:
+    ``blobs`` is a pyarrow binary array of partials in group order,
+    group ``g`` is ``blobs[offsets[g]:offsets[g + 1]]`` (a global
+    aggregate over no input is one group of none), and the result is a
+    binary array of one merged blob per group.  Called with a list of
+    blobs and no offsets, it merges them as one group into ``bytes``.
+    The optional ``pack(values) -> bytes | None`` serializes a small
     unweighted group without building a sketch (None declines).  A key
     parks up to ``chunk_rows`` rows before they reach ``update``."""
 
@@ -214,24 +220,40 @@ class SketchCodec(NamedTuple):
     new: Callable[[], object]
     update: Callable[[object, np.ndarray, np.ndarray | None], None]
     to_bytes: Callable[[object], bytes]
-    merge_blobs: Callable[[list], bytes]
+    merge_blobs: Callable
     pack: Callable[[np.ndarray], bytes | None] | None = None
     chunk_rows: int = DEFAULT_BUFFER
 
 
+def _grouped(merge: Callable) -> Callable:
+    """A codec's ``merge_blobs`` from its batch kernel ``merge(blobs,
+    offsets)``; a call with a list of blobs and no offsets merges them
+    as one group into ``bytes``."""
+    def merge_blobs(blobs, offsets=None):
+        import pyarrow as pa
+
+        if offsets is not None:
+            return merge(blobs, offsets)
+        one = merge(pa.array(blobs, pa.binary()), np.array([0, len(blobs)]))
+        return one[0].as_py()
+
+    return merge_blobs
+
+
 def digest_codec(compression: float, scale: str,
                  buffer_size: int = DEFAULT_BUFFER) -> SketchCodec:
-    """The t-digest: uncompressed VERBOSE partials, one
-    ``core.merge_blobs`` pass per key in stage 2, and the bit-identical
-    singleton packing (``core.try_singleton_blob``) for small keys."""
+    """The t-digest: uncompressed VERBOSE partials, every key of a
+    stage-2 partition merged at once by ``core.merge_blob_groups``, and
+    the bit-identical singleton packing (``core.try_singleton_blob``)
+    for small keys."""
     return SketchCodec(
         DIGEST_FIELD,
         new=lambda: TDigest(compression, buffer_size=buffer_size,
                             scale=scale),
         update=lambda d, v, w: d.add_batch(v, w),
         to_bytes=lambda d: d.to_bytes(compress=False),
-        merge_blobs=lambda blobs: merge_blobs(
-            blobs, compression=compression, scale=scale).to_bytes(),
+        merge_blobs=_grouped(lambda blobs, offsets: merge_blob_groups(
+            blobs, offsets, compression, scale)),
         pack=lambda v: try_singleton_blob(v, compression, buffer_size,
                                           scale),
         chunk_rows=buffer_size)
@@ -240,14 +262,22 @@ def digest_codec(compression: float, scale: str,
 def object_codec(field: str, new: Callable[[], object], update,
                  from_bytes: Callable[[bytes], object]) -> SketchCodec:
     """Codec for a sketch class with ``to_bytes`` and an in-place
-    ``merge`` (KLL, histograms, count-min, Bloom, HLL)."""
-    def merge(blobs: list) -> bytes:
-        out = from_bytes(blobs[0]) if blobs else new()
-        for b in blobs[1:]:
-            out.merge(from_bytes(b))
-        return out.to_bytes()
+    ``merge`` (KLL, histograms, count-min, Bloom, HLL): stage 2 merges
+    each group's blobs in turn."""
+    def merge(blobs, offsets):
+        import pyarrow as pa
 
-    return SketchCodec(field, new, update, lambda sk: sk.to_bytes(), merge)
+        vals = blobs.to_pylist()
+        out = []
+        for a, b in zip(offsets[:-1].tolist(), offsets[1:].tolist()):
+            sk = from_bytes(vals[a]) if b > a else new()
+            for v in vals[a + 1:b]:
+                sk.merge(from_bytes(v))
+            out.append(sk.to_bytes())
+        return pa.array(out, pa.binary())
+
+    return SketchCodec(field, new, update, lambda sk: sk.to_bytes(),
+                       _grouped(merge))
 
 
 def _sketch_schema(df: DataFrame, group_cols: Sequence[str],
@@ -572,15 +602,17 @@ class SketchAccumulator:
 
 
 def _partition_merge_gen(codec: SketchCodec, group_cols: Sequence[str]):
-    """Whole-partition stage-2 merge kernel: accumulate (key -> blobs)
-    across the partition's Arrow batches, merge each key once at the
-    end, emit one RecordBatch.  One Python round-trip per REDUCER
-    PARTITION instead of one grouped pandas call per GROUP — profiled on
-    the scaling job the per-group path cost ~10 ms/group (pandas
-    construction + Arrow conversion per group), dominating the whole
-    reduce stage at P=256 partials x K~3k keys.  With no group columns
-    it emits exactly one row, even over no input (an empty sketch with
-    ``rows == 0``)."""
+    """Whole-partition stage-2 merge kernel: group the partition's
+    partial rows by key, hand every group to ``codec.merge_blobs`` in
+    one call, emit one RecordBatch.  One Python round-trip per REDUCER
+    PARTITION instead of one grouped pandas call per GROUP (profiled on
+    the scaling job the per-group path cost ~10 ms/group), and one
+    batch merge instead of one per key (the digest codec's kernel runs
+    every key's merge pass in lockstep).  Raw groups of one canonical
+    key (NaN, 0.0 and -0.0, nested values) are concatenated into one
+    group in the order they come.  With no group columns the whole
+    partition is one group, so exactly one row is emitted, even over no
+    input (an empty sketch with ``rows == 0``)."""
     group_cols = list(group_cols)
     n_keys = len(group_cols)
 
@@ -588,44 +620,52 @@ def _partition_merge_gen(codec: SketchCodec, group_cols: Sequence[str]):
         import pyarrow as pa
 
         batches = [b for b in batches if b.num_rows]
-        names = group_cols + [codec.field, "rows"]
-        if n_keys == 0:
-            blobs = [b for rb in batches for b in rb.column(0).to_pylist()]
-            rows = sum(int(np.sum(rb.column(1).to_numpy()))
-                       for rb in batches)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([codec.merge_blobs(blobs)], type=pa.binary()),
-                 pa.array([rows], type=pa.int64())], names=names)
+        if n_keys and not batches:
             return
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches)  # sketch rows — tiny vs raw
-        key_fields = [tbl.schema.field(i) for i in range(n_keys)]
-        needs_canon = any(_needs_canon(f.type) for f in key_fields)
-        bcol = tbl.column(n_keys).to_pylist()
-        rcol = tbl.column(n_keys + 1).to_numpy(zero_copy_only=False)
-        blobs: dict[tuple, list] = {}
-        rows: dict[tuple, int] = {}
-        origs: dict[tuple, tuple] = {}
-        order, groups = _groups([tbl.column(i).combine_chunks()
-                                 for i in range(n_keys)])
-        for raw, s, e in groups:
-            idx = order[s:e]
-            key = _canon_key(raw) if needs_canon else raw
-            if key not in blobs:
-                blobs[key] = []
-                rows[key] = 0
-                origs[key] = _norm_orig(raw) if needs_canon else raw
-            blobs[key].extend(bcol[j] for j in idx)
-            rows[key] += int(rcol[idx].sum())
-        keys = list(blobs)
-        arrays = [pa.array([origs[k][i] for k in keys],
-                           type=key_fields[i].type)
-                  for i in range(n_keys)]
-        arrays.append(pa.array([codec.merge_blobs(blobs[k]) for k in keys],
-                               type=pa.binary()))
-        arrays.append(pa.array([rows[k] for k in keys], type=pa.int64()))
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+
+        def column(i, typ=None):
+            cols = [b.column(i) for b in batches]
+            return cols[0] if len(cols) == 1 else \
+                pa.chunked_array(cols, typ).combine_chunks()
+
+        key_cols = [column(i) for i in range(n_keys)]
+        blobs = column(n_keys, pa.binary())
+        rows = column(n_keys + 1, pa.int64()).to_numpy()
+        del batches  # the partials now live in ``blobs`` alone
+        order = np.arange(len(blobs))
+        sizes = [len(blobs)]
+        arrays = []
+        if n_keys:
+            order, groups = _groups(key_cols)
+            if any(_needs_canon(c.type) for c in key_cols):
+                spans: dict[tuple, list] = {}
+                origs: dict[tuple, tuple] = {}
+                for raw, s, e in groups:
+                    key = _canon_key(raw)
+                    if key not in spans:
+                        spans[key] = []
+                        origs[key] = _norm_orig(raw)
+                    spans[key].append(order[s:e])
+                order = np.concatenate([i for lst in spans.values()
+                                        for i in lst])
+                sizes = [sum(i.size for i in lst) for lst in spans.values()]
+                arrays = [pa.array([k[i] for k in origs.values()],
+                                   type=c.type)
+                          for i, c in enumerate(key_cols)]
+            else:
+                sizes = [e - s for _, s, e in groups]
+                first = order[[s for _, s, _ in groups]]
+                arrays = [c.take(first) for c in key_cols]
+            blobs = blobs.take(order)
+        offsets = np.zeros(len(sizes) + 1, np.int64)
+        np.cumsum(sizes, out=offsets[1:])
+        arrays.append(codec.merge_blobs(blobs, offsets))
+        csum = np.zeros(rows.size + 1, np.int64)
+        np.cumsum(rows[order], out=csum[1:])
+        arrays.append(pa.array(csum[offsets[1:]] - csum[offsets[:-1]],
+                               type=pa.int64()))
+        yield pa.RecordBatch.from_arrays(
+            arrays, names=group_cols + [codec.field, "rows"])
 
     return gen
 
@@ -694,8 +734,20 @@ def _level1_codec(compression: float, scale: str) -> SketchCodec:
     passes through as is — no decode, merge or re-encode, since a group
     of one cuts no fan-in."""
     codec = digest_codec(2 * compression, scale)
-    return codec._replace(merge_blobs=lambda blobs: blobs[0]
-                          if len(blobs) == 1 else codec.merge_blobs(blobs))
+
+    def merge(blobs, offsets):
+        import pyarrow as pa
+
+        n = np.diff(offsets)
+        many = np.flatnonzero(n > 1)
+        merged = codec.merge_blobs(
+            blobs.filter(pa.array(np.repeat(n > 1, n))),
+            np.r_[0, np.cumsum(n[many])])
+        pick = offsets[:-1].copy()
+        pick[many] = len(blobs) + np.arange(many.size)
+        return pa.concat_arrays([blobs, merged]).take(pick)
+
+    return codec._replace(merge_blobs=_grouped(merge))
 
 
 def tree_merge(
