@@ -25,7 +25,8 @@ Execution model (SURVEY.md §3.2, designed for 100 TB inputs):
            nothing in correctness.
 
 A sketch family plugs in through a ``SketchCodec``; the engine owns
-the group keys (canonical NaN / -0.0 / nested keys), chunk parking,
+the group keys (both stages group as Spark's ``groupBy``, on key
+columns made canonical in Arrow by ``_canonical``), chunk parking,
 the NULL/NaN value and weight filter, and the exchange.
 
 Skewed group keys (e.g. hot conv_id / role values) are a non-issue in
@@ -65,51 +66,10 @@ __all__ = [
 
 DIGEST_FIELD = "digest"
 
-# Group keys are grouped in Python dicts inside the Arrow kernels, so
-# they must be canonicalized to match Spark groupBy semantics first:
-# NaN keys group together (hash(nan) is id-based on py3.10+, so two
-# NaNs decoded from different Arrow batches would otherwise never
-# merge), -0.0 groups with 0.0, and array/map-typed keys arrive as
-# unhashable lists/dicts from to_pylist.
-_NAN_KEY = object()
-
-
-def _canon_key_val(v):
-    if isinstance(v, float):
-        if v != v:
-            return _NAN_KEY
-        if v == 0.0:
-            return 0.0  # fold -0.0 into 0.0, like Spark's grouping
-        return v
-    if isinstance(v, list):
-        return tuple(_canon_key_val(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, _canon_key_val(x)) for k, x in v.items()))
-    return v
-
-
-def _canon_key(key: tuple) -> tuple:
-    return tuple(_canon_key_val(v) for v in key)
-
-
-def _norm_orig_val(v):
-    """Normalize a RAW group-key value for output: fold -0.0 into 0.0
-    (recursively through lists/dicts) so the emitted key matches
-    Spark's normalized groupBy output deterministically — a group
-    containing both -0.0 and 0.0 must not surface whichever raw form a
-    partition saw first.  NaN passes through unchanged (the canonical
-    key already unifies NaNs; NaN itself is the correct output)."""
-    if isinstance(v, float):
-        return 0.0 if v == 0.0 else v
-    if isinstance(v, list):
-        return [_norm_orig_val(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _norm_orig_val(x) for k, x in v.items()}
-    return v
-
-
-def _norm_orig(key: tuple) -> tuple:
-    return tuple(_norm_orig_val(v) for v in key)
+# The one NaN object every NaN group key decodes to: keys are grouped
+# in Python dicts, and hash(nan) is id-based on Python 3.10+, so NaN
+# keys decoded from two Arrow batches are equal only as one object.
+_NAN = float("nan")
 
 
 def _shuffle_partitions(df: DataFrame) -> int:
@@ -288,16 +248,45 @@ def _sketch_schema(df: DataFrame, group_cols: Sequence[str],
            StructField("rows", LongType(), False)])
 
 
-def _needs_canon(t) -> bool:
-    """Whether keys of Arrow type ``t`` can need canonicalization
-    (floats: NaN/-0.0 folding; nested: unhashable), looking through a
-    dictionary type to its values."""
+def _canonical(col):
+    """Key column ``col`` with the values Spark's ``groupBy`` groups
+    by, so that Arrow hashes equal keys alike: -0.0 folds into 0.0 and
+    every NaN payload becomes one NaN, in float columns, float
+    dictionaries (decoded: a canonical dictionary could hold one value
+    twice) and the float children of list and struct columns."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    if pa.types.is_dictionary(t):
-        t = t.value_type
-    return (pa.types.is_floating(t) or pa.types.is_nested(t)
-            or pa.types.is_decimal(t))
+    t = col.type
+    if pa.types.is_floating(t):
+        col = pc.add(col, pa.scalar(0.0, t))  # -0.0 + 0.0 is 0.0
+        return pc.if_else(pc.is_nan(col), pa.scalar(_NAN, t), col)
+    if pa.types.is_dictionary(t) and pa.types.is_floating(t.value_type):
+        return _canonical(col.dictionary_decode())
+    if pa.types.is_list(t):
+        off = col.offsets
+        start, end = off[0].as_py(), off[-1].as_py()
+        return pa.ListArray.from_arrays(
+            pc.subtract(off, off[0]),
+            _canonical(col.values.slice(start, end - start)), t,
+            mask=col.is_null())
+    if pa.types.is_struct(t):
+        return pa.StructArray.from_arrays(
+            [_canonical(c) for c in col.flatten()], fields=list(t),
+            mask=col.is_null())
+    return col
+
+
+def _hashable(v):
+    """A nested key value from ``to_pylist`` as a dict key: lists and
+    structs become tuples, NaN becomes ``_NAN``."""
+    if isinstance(v, float):
+        return _NAN if v != v else v
+    if isinstance(v, (list, tuple)):
+        return tuple(_hashable(x) for x in v)
+    if isinstance(v, dict):
+        return tuple(_hashable(x) for x in v.values())
+    return v
 
 
 # combined group codes stay below this; past it they are renumbered
@@ -305,15 +294,15 @@ _CODE_SPACE = 1 << 62
 
 
 def _groups(key_cols: list, ok: np.ndarray | None = None):
-    """Group rows by their Arrow key columns: returns ``(order,
-    groups)`` where ``order`` stably sorts the rows by group and
-    ``groups`` lists ``(raw key tuple, start, end)`` slices of it,
+    """Group rows by their canonical Arrow key columns (``_canonical``):
+    returns ``(order, groups)`` where ``order`` stably sorts the rows by
+    group and ``groups`` lists ``(key tuple, start, end)`` slices of it,
     skipping rows where ``ok`` is False.  The group-id step of both
     stages: each key column is dictionary-encoded (C kernel), the codes
     combine into one integer per row, and one stable sort makes every
     group a contiguous slice, so Python touches each GROUP, never each
-    row.  Raw keys are not canonical: NaN or 0.0/-0.0 may come back as
-    several groups."""
+    row.  Key tuples are dict keys that equal the same key's tuple from
+    any other batch: NaN is ``_NAN`` and nested values are tuples."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -330,25 +319,18 @@ def _groups(key_cols: list, ok: np.ndarray | None = None):
             # scalar .as_py() (which dominated profiles at high
             # per-batch group cardinality)
             dict_vals = enc.dictionary.to_pylist()
+            if pa.types.is_floating(enc.dictionary.type):
+                dict_vals = [_NAN if v != v else v for v in dict_vals]
         except pa.lib.ArrowNotImplementedError:
             # nested (array/map/struct) key columns have no Arrow
             # dictionary kernel — encode in Python.  Cold path:
             # it only runs for nested-typed GROUP columns, whose
             # per-batch cardinality is small by grouping contract.
-            vals = col.to_pylist()
             code_of: dict = {}
-            codes = np.empty(len(vals), dtype=np.int64)
-            dict_vals = []
-            for j, v in enumerate(vals):
-                if v is None:
-                    codes[j] = -1
-                    continue
-                ck = _canon_key_val(v)
-                c = code_of.get(ck)
-                if c is None:
-                    c = code_of[ck] = len(dict_vals)
-                    dict_vals.append(v)
-                codes[j] = c
+            codes = np.array(
+                [-1 if v is None else code_of.setdefault(v, len(code_of))
+                 for v in map(_hashable, col.to_pylist())], np.int64)
+            dict_vals = list(code_of)
         card = len(dict_vals) + 1
         if combined is None:
             combined, space = codes + 1, card
@@ -454,12 +436,6 @@ class SketchAccumulator:
         self.has_weight = has_weight
         self.acc: dict[tuple, object] = {}
         self.counts: dict[tuple, int] = {}
-        # canon key -> first-seen original values, for emission
-        self._orig: dict[tuple, tuple] = {}
-        # whether any key column's type can need canonicalization —
-        # decided from the first batch's Arrow schema; string/int/
-        # timestamp keys skip the per-group canon+norm entirely
-        self._needs_canon: bool | None = None
         self.key_schema: list = [None] * self.n_keys
         # per-key deferred chunks: when a batch spans many groups the
         # per-group slices are tiny (tens of rows) and a sketch update's
@@ -521,10 +497,6 @@ class SketchAccumulator:
                 w = pc.fill_null(w, 0)
             weights = w.to_numpy(zero_copy_only=False)
             ok &= weights > 0
-        if self._needs_canon is None and n_keys:
-            self._needs_canon = any(
-                _needs_canon(batch.schema.field(i).type)
-                for i in range(n_keys))
 
         if n_keys == 0:
             v = values[ok] if not ok.all() else values
@@ -536,17 +508,11 @@ class SketchAccumulator:
             return
         for i in range(n_keys):
             self.key_schema[i] = batch.schema.field(i)
-        order, groups = _groups([batch.column(i) for i in range(n_keys)],
-                                ok)
+        order, groups = _groups(
+            [_canonical(batch.column(i)) for i in range(n_keys)], ok)
         sorted_values = values[order]
         sorted_weights = weights[order] if weights is not None else None
-        needs_canon = self._needs_canon
-        for raw, s, e in groups:
-            if needs_canon:
-                key = _canon_key(raw)
-                self._orig.setdefault(key, _norm_orig(raw))
-            else:
-                key = raw
+        for key, s, e in groups:
             # .copy() so the parked chunk doesn't pin this batch's full
             # sorted array until flush time
             self._push(key, sorted_values[s:e].copy(),
@@ -587,8 +553,7 @@ class SketchAccumulator:
         for i, c in enumerate(self.group_cols):
             typ = self.key_schema[i].type \
                 if self.key_schema[i] is not None else None
-            arrays.append(pa.array(
-                [self._orig.get(k, k)[i] for k in keys], type=typ))
+            arrays.append(pa.array([k[i] for k in keys], type=typ))
             names.append(c)
         arrays.append(pa.array(
             [fast[k] if k in fast else self.codec.to_bytes(self.acc[k])
@@ -608,9 +573,9 @@ def _partition_merge_gen(codec: SketchCodec, group_cols: Sequence[str]):
     PARTITION instead of one grouped pandas call per GROUP (profiled on
     the scaling job the per-group path cost ~10 ms/group), and one
     batch merge instead of one per key (the digest codec's kernel runs
-    every key's merge pass in lockstep).  Raw groups of one canonical
-    key (NaN, 0.0 and -0.0, nested values) are concatenated into one
-    group in the order they come.  With no group columns the whole
+    every key's merge pass in lockstep).  Keys group as in stage 1
+    (``_canonical``, then ``_groups``), and each group's output key is
+    taken from the canonical columns.  With no group columns the whole
     partition is one group, so exactly one row is emitted, even over no
     input (an empty sketch with ``rows == 0``)."""
     group_cols = list(group_cols)
@@ -628,7 +593,7 @@ def _partition_merge_gen(codec: SketchCodec, group_cols: Sequence[str]):
             return cols[0] if len(cols) == 1 else \
                 pa.chunked_array(cols, typ).combine_chunks()
 
-        key_cols = [column(i) for i in range(n_keys)]
+        key_cols = [_canonical(column(i)) for i in range(n_keys)]
         blobs = column(n_keys, pa.binary())
         rows = column(n_keys + 1, pa.int64()).to_numpy()
         del batches  # the partials now live in ``blobs`` alone
@@ -637,25 +602,9 @@ def _partition_merge_gen(codec: SketchCodec, group_cols: Sequence[str]):
         arrays = []
         if n_keys:
             order, groups = _groups(key_cols)
-            if any(_needs_canon(c.type) for c in key_cols):
-                spans: dict[tuple, list] = {}
-                origs: dict[tuple, tuple] = {}
-                for raw, s, e in groups:
-                    key = _canon_key(raw)
-                    if key not in spans:
-                        spans[key] = []
-                        origs[key] = _norm_orig(raw)
-                    spans[key].append(order[s:e])
-                order = np.concatenate([i for lst in spans.values()
-                                        for i in lst])
-                sizes = [sum(i.size for i in lst) for lst in spans.values()]
-                arrays = [pa.array([k[i] for k in origs.values()],
-                                   type=c.type)
-                          for i, c in enumerate(key_cols)]
-            else:
-                sizes = [e - s for _, s, e in groups]
-                first = order[[s for _, s, _ in groups]]
-                arrays = [c.take(first) for c in key_cols]
+            sizes = [e - s for _, s, e in groups]
+            first = order[[s for _, s, _ in groups]]
+            arrays = [c.take(first) for c in key_cols]
             blobs = blobs.take(order)
         offsets = np.zeros(len(sizes) + 1, np.int64)
         np.cumsum(sizes, out=offsets[1:])

@@ -2,6 +2,8 @@
 independence, tree merge, extraction UDFs, transcripts source
 (SURVEY.md §5 "Spark-level tests")."""
 
+from decimal import Decimal
+
 import numpy as np
 import pytest
 
@@ -603,11 +605,12 @@ FAMILIES = ["digest", "kll", "histogram", "hll", "cm", "bloom"]
 
 @pytest.mark.parametrize("family", FAMILIES)
 def test_nan_and_negzero_group_keys(spark, family):
-    """Group-key canonicalization (operators/aggregate._canon_key):
-    NaN keys form ONE group across Arrow batches/partitions (Spark
-    groupBy semantics; a naive Python dict would split them because
-    hash(nan) is id-based), and -0.0 groups with 0.0 under the key
-    0.0 — for every sketch family, not only the digest."""
+    """Group-key canonicalization (operators/aggregate._canonical and
+    its shared ``_NAN``): NaN keys form ONE group across Arrow
+    batches/partitions (Spark groupBy semantics; a naive Python dict
+    would split them because hash(nan) is id-based), and -0.0 groups
+    with 0.0 under the key 0.0 — for every sketch family, not only the
+    digest."""
     agg, field, size = _family_aggs()[family]
     rows = [(float("nan"), float(i)) for i in range(10)]
     rows += [(0.0, 100.0), (-0.0, 200.0)]
@@ -630,9 +633,9 @@ def test_nan_and_negzero_group_keys(spark, family):
 @pytest.mark.parametrize("family", FAMILIES)
 def test_array_typed_group_keys(spark, family):
     """Array-typed group columns: Arrow has no dictionary_encode kernel
-    for nested types, so stage 1 takes the Python-encoding fallback;
-    stage 2's canon-key dict must treat the (unhashable) lists as
-    tuples.  Result must match Spark groupBy semantics."""
+    for nested types, so both stages take the Python-encoding fallback,
+    which must treat the (unhashable) lists as tuples.  Result must
+    match Spark groupBy semantics."""
     agg, field, size = _family_aggs()[family]
     rows = [([1, 2], float(i)) for i in range(6)]
     rows += [([3], 7.0), ([3], 9.0), (None, 5.0)]
@@ -694,6 +697,132 @@ def test_dictionary_typed_float_group_keys():
     assert out["rows"] == [2, 2, 2], out
     g = out["g"]
     assert g[0] != g[0] and [str(x) for x in g[1:]] == ["0.0", "1.0"], out
+
+
+# non-default NaN payloads: quiet with a payload bit, negative quiet,
+# and signalling
+NAN_PAYLOADS = (0x7ff8000000000001, 0xfff8000000000000, 0x7ff0000000000001)
+
+
+def _nan_bits(col) -> set:
+    """The distinct bit patterns of the NaNs in a float64 column."""
+    v = np.asarray(col.to_numpy(zero_copy_only=False), np.float64)
+    return set(v[np.isnan(v)].view(np.uint64).tolist())
+
+
+def _payload_keys(bits):
+    """A float64 Arrow column holding exactly these bit patterns."""
+    import pyarrow as pa
+
+    return pa.array(np.array(bits, np.uint64).view(np.float64))
+
+
+def test_nan_payloads_one_group_across_batches():
+    """Every NaN payload is one key in both stages: across two Arrow
+    batches fed to one SketchAccumulator, and across two batches of raw
+    partials fed to the stage-2 merge kernel."""
+    import pyarrow as pa
+
+    from t_digest_spark.operators.aggregate import (
+        SketchAccumulator, _partition_merge_gen, digest_codec,
+    )
+
+    one = 0x3ff0000000000000  # 1.0
+    batches = [_payload_keys([NAN_PAYLOADS[0], one, NAN_PAYLOADS[1]]),
+               _payload_keys([NAN_PAYLOADS[2], one, 0x7ff8000000000000])]
+    assert len(_nan_bits(pa.concat_arrays(batches))) >= 3
+    codec = digest_codec(100.0, "K_2")
+    acc = SketchAccumulator(codec, ["g"])
+    for g in batches:
+        acc.update(pa.RecordBatch.from_arrays(
+            [g, pa.array([1.0, 2.0, 3.0])], names=["g", "v"]))
+    out = acc.finish().to_pydict()
+    nan_rows = [r for g, r in zip(out["g"], out["rows"]) if g != g]
+    assert nan_rows == [4] and sorted(out["rows"]) == [2, 4], out
+
+    blob = bytes(out["digest"][0])
+    parts = [pa.RecordBatch.from_arrays(
+        [g, pa.array([blob] * 3, pa.binary()), pa.array([1, 1, 1])],
+        names=["g", "digest", "rows"]) for g in batches]
+    (merged,) = _partition_merge_gen(codec, ["g"])(iter(parts))
+    merged = merged.to_pydict()
+    nan_rows = [r for g, r in zip(merged["g"], merged["rows"]) if g != g]
+    assert nan_rows == [4] and sorted(merged["rows"]) == [2, 4], merged
+
+
+@pytest.mark.parametrize("family", FAMILIES)
+def test_nan_payloads_one_group_across_partitions(spark, family, tmp_path):
+    """NaN keys with non-default payloads, written by pyarrow to two
+    Parquet files (so the payloads reach the Arrow kernels), come out as
+    ONE NaN group through every family's two-stage aggregate."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    agg, field, size = _family_aggs()[family]
+    zero, one = 0x0000000000000000, 0x3ff0000000000000
+    files = [[NAN_PAYLOADS[0], NAN_PAYLOADS[0], one, zero],
+             [NAN_PAYLOADS[1], NAN_PAYLOADS[2], one, 0x8000000000000000]]
+    bits = set()
+    n = 0
+    for i, keys in enumerate(files):
+        path = str(tmp_path / f"part-{i}.parquet")
+        pq.write_table(pa.table({
+            "g": _payload_keys(keys),
+            "v": pa.array(np.arange(n, n + len(keys), dtype=np.float64))}),
+            path, use_dictionary=False)
+        n += len(keys)
+        bits |= _nan_bits(pq.read_table(path).column("g"))
+    assert len(bits) >= 3
+    df = spark.read.parquet(str(tmp_path))
+    assert df.rdd.getNumPartitions() == 2
+    out = agg(df, ["g"]).collect()
+    assert sorted((r.g != r.g, r.rows) for r in out) == \
+        [(False, 2), (False, 2), (True, 4)]
+    assert all(str(r.g) != "-0.0" for r in out)
+    for r in out:
+        assert size(bytes(r[field])) == r.rows
+
+
+def _key_str(v) -> str:
+    """A group key as a comparable string (NaN equals NaN, -0.0 shows)."""
+    if isinstance(v, (list, tuple)):  # arrays, and structs as Rows
+        return "(" + ", ".join(_key_str(x) for x in v) + ")"
+    return repr(v)
+
+
+_NAN = float("nan")
+_TYPED_KEYS = {
+    "array<double>": [[0.0, 1.0], [-0.0, 1.0], [_NAN, 2.0], [-_NAN, 2.0],
+                      [-0.0], [0.0], [], None],
+    "struct<a double, b double, c int>": [
+        (0.0, _NAN, 1), (-0.0, -_NAN, 1), (-0.0, 1.0, None),
+        (0.0, 1.0, None), (1.5, 0.0, 2), None],
+    "float": [0.0, -0.0, _NAN, -_NAN, 1.5, 1.5, None],
+    "decimal(10,2)": [Decimal("0.00"), Decimal("1.25"), Decimal("1.25"),
+                      Decimal("-3.10"), None],
+}
+
+
+@pytest.mark.parametrize("key_type", list(_TYPED_KEYS))
+@pytest.mark.parametrize("family", FAMILIES)
+def test_typed_group_keys_match_spark_groupby(spark, family, key_type):
+    """Nested keys with -0.0 and NaN children, float keys and decimal
+    keys group exactly as Spark's own groupBy().count() does, keep their
+    input type, and never surface -0.0 as an output key."""
+    agg, field, size = _family_aggs()[family]
+    keys = _TYPED_KEYS[key_type]
+    rows = [(k, float(i)) for i, k in enumerate(keys * 2)]
+    df = spark.createDataFrame(rows, f"g {key_type}, v double") \
+        .repartition(3)
+    res = agg(df, ["g"])
+    assert res.schema["g"].dataType == df.schema["g"].dataType
+    out = res.collect()
+    want = sorted((_key_str(r.g), r["count"])
+                  for r in df.groupBy("g").count().collect())
+    assert sorted((_key_str(r.g), r.rows) for r in out) == want
+    assert not any("-0.0" in _key_str(r.g) for r in out)
+    for r in out:
+        assert size(bytes(r[field])) == r.rows
 
 
 def test_singleton_blob_bit_identical():
