@@ -25,9 +25,12 @@ Execution model (SURVEY.md §3.2, designed for 100 TB inputs):
            nothing in correctness.
 
 A sketch family plugs in through a ``SketchCodec``; the engine owns
-the group keys (both stages group as Spark's ``groupBy``, on key
-columns made canonical in Arrow by ``_canonical``), chunk parking,
-the NULL/NaN value and weight filter, and the exchange.
+the group keys, chunk parking, the NULL/NaN value and weight filter,
+and the exchange.  Both stages group rows by their keys alone
+(``_groups``, as Spark's ``groupBy``, on key columns made canonical in
+Arrow by ``_canonical``), and a global aggregate is one more group:
+the group of every row.  Stage 1 filters values after grouping, so one
+grouping of a batch serves every value column fed from it.
 
 Skewed group keys (e.g. hot conv_id / role values) are a non-issue in
 stage 1 — each partition emits at most one sketch per key regardless of
@@ -170,11 +173,10 @@ class SketchCodec(NamedTuple):
     ``blobs`` is a pyarrow binary array of partials in group order,
     group ``g`` is ``blobs[offsets[g]:offsets[g + 1]]`` (a global
     aggregate over no input is one group of none), and the result is a
-    binary array of one merged blob per group.  Called with a list of
-    blobs and no offsets, it merges them as one group into ``bytes``.
-    The optional ``pack(values) -> bytes | None`` serializes a small
-    unweighted group without building a sketch (None declines).  A key
-    parks up to ``chunk_rows`` rows before they reach ``update``."""
+    binary array of one merged blob per group.  The optional
+    ``pack(values) -> bytes | None`` serializes a small unweighted group
+    without building a sketch (None declines).  A key parks up to
+    ``chunk_rows`` rows before they reach ``update``."""
 
     field: str
     new: Callable[[], object]
@@ -183,21 +185,6 @@ class SketchCodec(NamedTuple):
     merge_blobs: Callable
     pack: Callable[[np.ndarray], bytes | None] | None = None
     chunk_rows: int = DEFAULT_BUFFER
-
-
-def _grouped(merge: Callable) -> Callable:
-    """A codec's ``merge_blobs`` from its batch kernel ``merge(blobs,
-    offsets)``; a call with a list of blobs and no offsets merges them
-    as one group into ``bytes``."""
-    def merge_blobs(blobs, offsets=None):
-        import pyarrow as pa
-
-        if offsets is not None:
-            return merge(blobs, offsets)
-        one = merge(pa.array(blobs, pa.binary()), np.array([0, len(blobs)]))
-        return one[0].as_py()
-
-    return merge_blobs
 
 
 def digest_codec(compression: float, scale: str,
@@ -212,8 +199,8 @@ def digest_codec(compression: float, scale: str,
                             scale=scale),
         update=lambda d, v, w: d.add_batch(v, w),
         to_bytes=lambda d: d.to_bytes(compress=False),
-        merge_blobs=_grouped(lambda blobs, offsets: merge_blob_groups(
-            blobs, offsets, compression, scale)),
+        merge_blobs=lambda blobs, offsets: merge_blob_groups(
+            blobs, offsets, compression, scale),
         pack=lambda v: try_singleton_blob(v, compression, buffer_size,
                                           scale),
         chunk_rows=buffer_size)
@@ -236,8 +223,7 @@ def object_codec(field: str, new: Callable[[], object], update,
             out.append(sk.to_bytes())
         return pa.array(out, pa.binary())
 
-    return SketchCodec(field, new, update, lambda sk: sk.to_bytes(),
-                       _grouped(merge))
+    return SketchCodec(field, new, update, lambda sk: sk.to_bytes(), merge)
 
 
 def _sketch_schema(df: DataFrame, group_cols: Sequence[str],
@@ -293,20 +279,24 @@ def _hashable(v):
 _CODE_SPACE = 1 << 62
 
 
-def _groups(key_cols: list, ok: np.ndarray | None = None):
-    """Group rows by their canonical Arrow key columns (``_canonical``):
-    returns ``(order, groups)`` where ``order`` stably sorts the rows by
-    group and ``groups`` lists ``(key tuple, start, end)`` slices of it,
-    skipping rows where ``ok`` is False.  The group-id step of both
-    stages: each key column is dictionary-encoded (C kernel), the codes
-    combine into one integer per row, and one stable sort makes every
-    group a contiguous slice, so Python touches each GROUP, never each
-    row.  Key tuples are dict keys that equal the same key's tuple from
-    any other batch: NaN is ``_NAN`` and nested values are tuples."""
+def _groups(key_cols: list, n: int):
+    """Group ``n`` rows by their canonical Arrow key columns
+    (``_canonical``): returns ``(order, bounds, keys)``, where ``order``
+    stably sorts the rows by group, group ``g`` is the rows
+    ``order[bounds[g]:bounds[g + 1]]``, and ``keys(rows)`` lists the key
+    tuples of the given rows.  With no key columns the ``n`` rows are
+    one group, even when there are none; with key columns and no rows
+    there is no group.  The group-id step of both stages: each key
+    column is dictionary-encoded (C kernel), the codes combine into one
+    integer per row, and one stable sort makes every group a contiguous
+    slice, so Python touches each GROUP, never each row.  Key tuples
+    are dict keys that equal the same key's tuple from any other batch:
+    NaN is ``_NAN`` and nested values are tuples."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    combined = None
+    combined = np.zeros(n, np.int64)
+    space = 1
     codes_list = []
     dicts = []
     for col in key_cols:
@@ -314,13 +304,7 @@ def _groups(key_cols: list, ok: np.ndarray | None = None):
             enc = pc.dictionary_encode(col)
             codes = pc.fill_null(enc.indices, -1).to_numpy(
                 zero_copy_only=False).astype(np.int64)
-            # decode the (small) dictionary once — key tuples then
-            # come from O(1) list indexing, not per-group pyarrow
-            # scalar .as_py() (which dominated profiles at high
-            # per-batch group cardinality)
-            dict_vals = enc.dictionary.to_pylist()
-            if pa.types.is_floating(enc.dictionary.type):
-                dict_vals = [_NAN if v != v else v for v in dict_vals]
+            dicts.append(enc.dictionary)  # decoded by ``keys`` only
         except pa.lib.ArrowNotImplementedError:
             # nested (array/map/struct) key columns have no Arrow
             # dictionary kernel — encode in Python.  Cold path:
@@ -330,45 +314,47 @@ def _groups(key_cols: list, ok: np.ndarray | None = None):
             codes = np.array(
                 [-1 if v is None else code_of.setdefault(v, len(code_of))
                  for v in map(_hashable, col.to_pylist())], np.int64)
-            dict_vals = list(code_of)
-        card = len(dict_vals) + 1
-        if combined is None:
-            combined, space = codes + 1, card
-        else:
-            if space * card >= _CODE_SPACE:
-                # renumber the codes so far densely (order-preserving)
-                # before the product could overflow int64
-                uniq, combined = np.unique(combined, return_inverse=True)
-                space = uniq.size
-            combined = combined * card + (codes + 1)
-            space *= card
+            dicts.append(list(code_of))
+        card = len(dicts[-1]) + 1
+        if space * card >= _CODE_SPACE:
+            # renumber the codes so far densely (order-preserving)
+            # before the product could overflow int64
+            uniq, combined = np.unique(combined, return_inverse=True)
+            space = uniq.size
+        combined = combined * card + (codes + 1)
+        space *= card
         codes_list.append(codes)
-        dicts.append(dict_vals)
-    # code 0 marks the filtered-out rows; the narrowest dtype that holds
-    # the code space lets NumPy's stable sort radix-sort 16-bit codes
-    # (a 262,144-row batch with 9 keys: 14.0 -> 1.7 ms per sort)
-    if ok is not None and not ok.all():
-        combined = np.where(ok, combined + 1, 0)
-    else:
-        combined = combined + 1
-    space += 1
+    # the narrowest dtype that holds the code space lets NumPy's stable
+    # sort radix-sort 16-bit codes (a 262,144-row batch with 9 keys:
+    # 14.0 -> 1.7 ms per sort)
     combined = combined.astype(np.uint16 if space <= 1 << 16 else
                                np.uint32 if space <= 1 << 32 else np.int64)
-
     order = np.argsort(combined, kind="stable")
-    sorted_codes = combined[order]
-    # group boundaries over the sorted codes
-    bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-    starts = np.concatenate(([0], bounds))
-    ends = np.concatenate((bounds, [sorted_codes.size]))
-    keep = sorted_codes[starts] > 0  # drop the filtered-out rows bucket
-    starts, ends = starts[keep], ends[keep]
-    # each group's key, read off its first row one column at a time
-    rows0 = order[starts]
-    keys = zip(*([dict_vals[c] if c >= 0 else None
-                  for c in codes[rows0].tolist()]
-                 for codes, dict_vals in zip(codes_list, dicts)))
-    return order, list(zip(keys, starts.tolist(), ends.tolist()))
+    starts = np.flatnonzero(np.diff(combined[order])) + 1
+    bounds = np.concatenate(([0], starts, [n])) if n or not key_cols \
+        else np.zeros(1, np.int64)
+
+    def keys(rows):
+        # each dictionary is decoded once, into Python values that
+        # index per group (not a pyarrow scalar .as_py() per group)
+        for i, d in enumerate(dicts):
+            if not isinstance(d, list):
+                vals = d.to_pylist()
+                if pa.types.is_floating(d.type):
+                    vals = [_NAN if v != v else v for v in vals]
+                dicts[i] = vals
+        cols = [[d[c] if c >= 0 else None for c in codes[rows].tolist()]
+                for codes, d in zip(codes_list, dicts)]
+        return list(zip(*cols)) if cols else [()] * len(rows)
+
+    return order, bounds, keys
+
+
+def _batch_groups(key_cols: list, n: int):
+    """``_groups`` over a batch's key columns as they come: stage 1's
+    grouping, which a caller feeding one batch to several accumulators
+    computes once and passes to each ``SketchAccumulator.update``."""
+    return _groups([_canonical(c) for c in key_cols], n)
 
 
 def _sketch_partials(narrow: DataFrame, group_cols: Sequence[str],
@@ -422,70 +408,45 @@ class SketchAccumulator:
 
     The stage-1 kernel of every sketch family, also driven directly by
     fused operators (e.g. ``sources.tables.turn_digests_clustered``,
-    which derives its metric batch in the same Python pass): group keys
-    are dictionary-encoded by Arrow C kernels, values reach NumPy
-    zero-copy-ish, Python touches each *group* once per batch, never
-    each row.  Rows whose value is NULL/NaN, or whose weight is NULL,
-    NaN or <= 0, are dropped."""
+    which derives its metric batches in the same Python pass and groups
+    their shared keys once): group keys are dictionary-encoded by Arrow
+    C kernels, values reach NumPy zero-copy-ish, Python touches each
+    *group* once per batch, never each row.  A batch is grouped by its
+    keys first (a global aggregate is one group); then rows whose value
+    is NULL/NaN, or whose weight is NULL, NaN or <= 0, are dropped, and
+    a group with no row left parks nothing."""
 
     def __init__(self, codec: SketchCodec, group_cols: Sequence[str],
                  has_weight: bool = False):
         self.codec = codec
         self.group_cols = list(group_cols)
-        self.n_keys = len(self.group_cols)
         self.has_weight = has_weight
-        self.acc: dict[tuple, object] = {}
-        self.counts: dict[tuple, int] = {}
-        self.key_schema: list = [None] * self.n_keys
-        # per-key deferred chunks: when a batch spans many groups the
-        # per-group slices are tiny (tens of rows) and a sketch update's
-        # fixed cost (for digests: contiguity/NaN/min-max/append)
-        # dominates — so slices are parked here (views, zero copy) and
-        # fed to the sketch in one concatenated call per ~chunk_rows rows
-        self._chunks: dict[tuple, list] = {}
-        self._wchunks: dict[tuple, list] = {}
-        self._chunk_rows: dict[tuple, int] = {}
+        self.key_types: list = []
+        # one record per key, in first-seen order: [sketch or None,
+        # rows fed to it, parked value chunks, parked weight chunks,
+        # parked rows].  When a batch spans many groups the per-group
+        # slices are tiny (tens of rows) and a sketch update's fixed
+        # cost (for digests: contiguity/NaN/min-max/append) dominates —
+        # so slices are parked and fed to the sketch in one
+        # concatenated call per ~chunk_rows rows
+        self.keys: dict[tuple, list] = {}
 
-    def _sketch(self, key: tuple):
-        sk = self.acc.get(key)
+    def _flush(self, rec: list) -> None:
+        """Feed a key record's parked chunks to its sketch."""
+        sk, rows, vals, wts, parked = rec
         if sk is None:
-            sk = self.acc[key] = self.codec.new()
-            self.counts[key] = 0
-        return sk
+            sk = rec[0] = self.codec.new()
+        self.codec.update(sk, _concat(vals), _concat(wts) if wts else None)
+        rec[1:] = rows + parked, [], [], 0
 
-    def _push(self, key: tuple, values, weights) -> None:
-        lst = self._chunks.get(key)
-        if lst is None:
-            lst = self._chunks[key] = []
-            self._chunk_rows[key] = 0
-            if self.has_weight:
-                self._wchunks[key] = []
-        lst.append(values)
-        if weights is not None:
-            self._wchunks[key].append(weights)
-        n = self._chunk_rows[key] + values.size
-        self._chunk_rows[key] = n
-        if n >= self.codec.chunk_rows:
-            self._flush_key(key)
-
-    def _flush_key(self, key: tuple) -> None:
-        lst = self._chunks.pop(key, None)
-        if not lst:
-            return
-        v = lst[0] if len(lst) == 1 else np.concatenate(lst)
-        if self.has_weight:
-            wl = self._wchunks.pop(key)
-            w = wl[0] if len(wl) == 1 else np.concatenate(wl)
-        else:
-            w = None
-        self._chunk_rows.pop(key, None)
-        self.codec.update(self._sketch(key), v, w)
-        self.counts[key] += v.size
-
-    def update(self, batch) -> None:
+    def update(self, batch, grouped=None) -> None:
+        """Add one batch; ``grouped`` is its ``_batch_groups`` result
+        when the caller already grouped the key columns."""
         import pyarrow.compute as pc
 
-        n_keys = self.n_keys
+        n_keys = len(self.group_cols)
+        order, bounds, keys = grouped or _batch_groups(
+            batch.columns[:n_keys], batch.num_rows)
         values = batch.column(n_keys).to_numpy(zero_copy_only=False)
         ok = ~np.isnan(values)  # aggregates ignore NULL/NaN inputs
         weights = None
@@ -497,27 +458,31 @@ class SketchAccumulator:
                 w = pc.fill_null(w, 0)
             weights = w.to_numpy(zero_copy_only=False)
             ok &= weights > 0
-
-        if n_keys == 0:
-            v = values[ok] if not ok.all() else values
-            if v.size == 0:
-                return
-            self.codec.update(self._sketch(()), v,
-                              weights[ok] if weights is not None else None)
-            self.counts[()] += v.size
-            return
-        for i in range(n_keys):
-            self.key_schema[i] = batch.schema.field(i)
-        order, groups = _groups(
-            [_canonical(batch.column(i)) for i in range(n_keys)], ok)
-        sorted_values = values[order]
-        sorted_weights = weights[order] if weights is not None else None
-        for key, s, e in groups:
-            # .copy() so the parked chunk doesn't pin this batch's full
-            # sorted array until flush time
-            self._push(key, sorted_values[s:e].copy(),
-                       sorted_weights[s:e].copy()
-                       if sorted_weights is not None else None)
+        self.key_types = batch.schema.types[:n_keys]
+        # the kept rows' places in group order: group g keeps the kept
+        # rows cut[g]:cut[g + 1], the count of kept rows before its bounds
+        pos = np.flatnonzero(ok[order])
+        cut = np.searchsorted(pos, bounds)
+        live = np.flatnonzero(np.diff(cut))  # groups with a kept row
+        kept = order[pos]
+        values = values[kept]
+        weights = weights[kept] if weights is not None else None
+        for key, s, e in zip(keys(order[bounds[live]]), cut[live].tolist(),
+                             cut[live + 1].tolist()):
+            rec = self.keys.get(key)
+            if rec is None:
+                rec = self.keys[key] = [None, 0, [], [], 0]
+            # copies, so a parked chunk doesn't pin this batch's kept
+            # arrays until flush time
+            rec[2].append(values[s:e].copy())
+            if weights is not None:
+                rec[3].append(weights[s:e].copy())
+            rec[4] += e - s
+            # the global group feeds its sketch once per batch: a KLL
+            # sketch compacts on every update, so its bytes depend on
+            # how its input is chunked
+            if rec[4] >= self.codec.chunk_rows or not n_keys:
+                self._flush(rec)
 
     def finish(self):
         import pyarrow as pa
@@ -530,40 +495,30 @@ class SketchAccumulator:
         # finalize cost (~55 us/key vs ~3 us packed) while provably
         # producing the same bytes.  Keys with a live sketch (already
         # flushed once) or explicit weights use the full path.
-        fast: dict[tuple, bytes] = {}
-        pack = self.codec.pack
-        for key in list(self._chunks):
+        pack = None if self.has_weight else self.codec.pack
+        blobs, rows = [], []
+        for rec in self.keys.values():
             blob = None
-            if pack is not None and not self.has_weight \
-                    and key not in self.acc:
-                lst = self._chunks[key]
-                v = lst[0] if len(lst) == 1 else np.concatenate(lst)
-                blob = pack(v)
+            if pack is not None and rec[0] is None:
+                blob = pack(_concat(rec[2]))
             if blob is None:
-                self._flush_key(key)
-                continue
-            fast[key] = blob
-            self.counts[key] = self._chunk_rows.pop(key)
-            del self._chunks[key]
-        if not self.acc and not fast:
+                if rec[4]:
+                    self._flush(rec)
+                blob = self.codec.to_bytes(rec[0])
+            blobs.append(blob)
+            rows.append(rec[1] + rec[4])
+        if not blobs:
             return None
-        keys = list(self.acc.keys()) + list(fast.keys())
-        arrays = []
-        names = []
-        for i, c in enumerate(self.group_cols):
-            typ = self.key_schema[i].type \
-                if self.key_schema[i] is not None else None
-            arrays.append(pa.array([k[i] for k in keys], type=typ))
-            names.append(c)
-        arrays.append(pa.array(
-            [fast[k] if k in fast else self.codec.to_bytes(self.acc[k])
-             for k in keys],
-            type=pa.binary()))
-        names.append(self.codec.field)
-        arrays.append(pa.array([self.counts[k] for k in keys],
-                               type=pa.int64()))
-        names.append("rows")
-        return pa.RecordBatch.from_arrays(arrays, names=names)
+        arrays = [pa.array([k[i] for k in self.keys], type=t)
+                  for i, t in enumerate(self.key_types)]
+        arrays.append(pa.array(blobs, type=pa.binary()))
+        arrays.append(pa.array(rows, type=pa.int64()))
+        return pa.RecordBatch.from_arrays(
+            arrays, names=self.group_cols + [self.codec.field, "rows"])
+
+
+def _concat(chunks: list) -> np.ndarray:
+    return chunks[0] if len(chunks) == 1 else np.concatenate(chunks)
 
 
 def _partition_merge_gen(codec: SketchCodec, group_cols: Sequence[str]):
@@ -576,8 +531,9 @@ def _partition_merge_gen(codec: SketchCodec, group_cols: Sequence[str]):
     every key's merge pass in lockstep).  Keys group as in stage 1
     (``_canonical``, then ``_groups``), and each group's output key is
     taken from the canonical columns.  With no group columns the whole
-    partition is one group, so exactly one row is emitted, even over no
-    input (an empty sketch with ``rows == 0``)."""
+    partition is ``_groups``' one group, so exactly one row is emitted,
+    even over no input (an empty sketch with ``rows == 0``); a keyed
+    partition with no partial has no group and emits nothing."""
     group_cols = list(group_cols)
     n_keys = len(group_cols)
 
@@ -585,30 +541,23 @@ def _partition_merge_gen(codec: SketchCodec, group_cols: Sequence[str]):
         import pyarrow as pa
 
         batches = [b for b in batches if b.num_rows]
-        if n_keys and not batches:
-            return
 
         def column(i, typ=None):
+            # no batch: an empty column (key columns of no known type
+            # are only ever grouped into no group)
             cols = [b.column(i) for b in batches]
             return cols[0] if len(cols) == 1 else \
-                pa.chunked_array(cols, typ).combine_chunks()
+                pa.concat_arrays(cols) if cols else pa.array([], typ)
 
         key_cols = [_canonical(column(i)) for i in range(n_keys)]
         blobs = column(n_keys, pa.binary())
         rows = column(n_keys + 1, pa.int64()).to_numpy()
         del batches  # the partials now live in ``blobs`` alone
-        order = np.arange(len(blobs))
-        sizes = [len(blobs)]
-        arrays = []
-        if n_keys:
-            order, groups = _groups(key_cols)
-            sizes = [e - s for _, s, e in groups]
-            first = order[[s for _, s, _ in groups]]
-            arrays = [c.take(first) for c in key_cols]
-            blobs = blobs.take(order)
-        offsets = np.zeros(len(sizes) + 1, np.int64)
-        np.cumsum(sizes, out=offsets[1:])
-        arrays.append(codec.merge_blobs(blobs, offsets))
+        order, offsets, _ = _groups(key_cols, len(blobs))
+        if offsets.size == 1:
+            return
+        arrays = [c.take(order[offsets[:-1]]) for c in key_cols]
+        arrays.append(codec.merge_blobs(blobs.take(order), offsets))
         csum = np.zeros(rows.size + 1, np.int64)
         np.cumsum(rows[order], out=csum[1:])
         arrays.append(pa.array(csum[offsets[1:]] - csum[offsets[:-1]],
@@ -696,7 +645,7 @@ def _level1_codec(compression: float, scale: str) -> SketchCodec:
         pick[many] = len(blobs) + np.arange(many.size)
         return pa.concat_arrays([blobs, merged]).take(pick)
 
-    return codec._replace(merge_blobs=_grouped(merge))
+    return codec._replace(merge_blobs=merge)
 
 
 def tree_merge(

@@ -332,8 +332,8 @@ def turn_digests_clustered(transcripts: DataFrame,
     import pyarrow.compute as pc
 
     from ..operators.aggregate import (
-        DEFAULT_BUFFER, DIGEST_FIELD, SketchAccumulator, _merge_partitions,
-        _merge_sketches, digest_codec,
+        DEFAULT_BUFFER, DIGEST_FIELD, SketchAccumulator, _batch_groups,
+        _merge_partitions, _merge_sketches, digest_codec,
     )
     from pyspark.sql.types import BinaryType, LongType, StringType
 
@@ -379,6 +379,7 @@ def turn_digests_clustered(transcripts: DataFrame,
                     keys.append(pc.floor_temporal(ts, unit="hour"))
                 else:
                     keys.append(b.column(names.index(c)))
+            grouped = _batch_groups(keys, b.num_rows)  # one for all metrics
             for m in metrics:
                 if m == "latency_s":
                     val = pa.array(lat, type=pa.float64())
@@ -387,7 +388,7 @@ def turn_digests_clustered(transcripts: DataFrame,
                 else:
                     raise ValueError(f"unknown metric {m!r}")
                 accs[m].update(pa.RecordBatch.from_arrays(
-                    keys + [val], names=group_cols + ["__v"]))
+                    keys + [val], names=group_cols + ["__v"]), grouped)
         for m in metrics:
             rb = accs[m].finish()
             if rb is not None:

@@ -185,8 +185,8 @@ def test_kernel_edges():
 def test_codec_contract():
     """Every codec's ``merge_blobs`` is batch-shaped: the digest codec
     is the kernel, the level-1 codec passes one-blob groups through as
-    is, an object codec merges each group, a global group of none is an
-    empty sketch, and a list of blobs merges as one group to bytes."""
+    is, an object codec merges each group, and a global group of none is
+    an empty sketch."""
     from t_digest_spark.functions.kll import KLLSketch
     from t_digest_spark.operators.aggregate import (
         _level1_codec, digest_codec, object_codec,
@@ -204,8 +204,6 @@ def test_codec_contract():
     assert digest.merge_blobs(arr, offsets).to_pylist() == [
         merge_blobs(blobs[:2], 100.0, "K_2").to_bytes(),
         merge_blobs(blobs[2:], 100.0, "K_2").to_bytes()]
-    assert digest.merge_blobs(blobs[:2]) == \
-        merge_blobs(blobs[:2], 100.0, "K_2").to_bytes()
     level1 = _level1_codec(100.0, "K_2").merge_blobs(arr, offsets)
     assert level1.to_pylist() == [
         merge_blobs(blobs[:2], 200.0, "K_2").to_bytes(), blobs[2]]

@@ -21,10 +21,10 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from t_digest_spark.core import TDigest
+from t_digest_spark.core import TDigest, merge_blobs
 from t_digest_spark.operators.aggregate import (
-    _level1_codec, _partition_merge_gen, _scan_tasks, digest_codec,
-    merge_digests_df, tdigest_aggregate, tree_merge,
+    _level1_codec, _partition_merge_gen, _scan_tasks, merge_digests_df,
+    tdigest_aggregate, tree_merge,
 )
 from t_digest_spark.sources.tables import (
     latency_digests_clustered, synth_transcripts,
@@ -225,4 +225,4 @@ def test_level1_passes_single_blob_groups_through(fan_in):
            zip(out["k"], out["__salt"], out["digest"], out["rows"])}
     assert got[("b", 5)] == (blobs[2], POINTS)
     assert got[("a", 0)] == (
-        digest_codec(200.0, "K_2").merge_blobs(blobs[:2]), 2 * POINTS)
+        merge_blobs(blobs[:2], 200.0, "K_2").to_bytes(), 2 * POINTS)

@@ -916,10 +916,10 @@ def test_singleton_blob_mixed_signed_zeros():
 def test_groups_narrow_codes_match_lexicographic_order(cards):
     """_groups sorts on the narrowest code dtype (uint16 radix sort,
     uint32, int64, or renumbered codes past 2^62) and still returns
-    exactly the stable lexicographic order over (kept, key codes...) —
-    the order of the plain int64 combined code — with nulls and
-    filtered-out rows, for code spaces below 2^16 and past 2^16, 2^32
-    and int64."""
+    exactly the stable lexicographic order over the key codes — the
+    order of the plain int64 combined code — with nulls, and the group
+    bounds and key tuples of that order, for code spaces below 2^16
+    and past 2^16, 2^32 and int64."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -933,22 +933,231 @@ def test_groups_narrow_codes_match_lexicographic_order(cards):
         mask = rng.random(n) < 0.01
         cols.append(pa.array(v if i % 2 == 0 else v.astype(str).astype(object),
                              mask=mask))
-    ok = rng.random(n) > 0.05
-    order, groups = _groups(cols, ok)
+    order, bounds, keys = _groups(cols, n)
 
     encs = [pc.dictionary_encode(c) for c in cols]
     codes = [pc.fill_null(e.indices, -1).to_numpy(zero_copy_only=False)
              .astype(np.int64) + 1 for e in encs]
-    keys = [np.where(ok, c, 0) for c in codes]
-    want = np.lexsort(keys[::-1] + [ok])
+    want = np.lexsort(codes[::-1])
     assert np.array_equal(order, want)
-    combo = np.stack([ok] + keys, axis=1)[want]
+    combo = np.stack(codes, axis=1)[want]
     starts = np.flatnonzero(np.any(combo[1:] != combo[:-1], axis=1)) + 1
-    starts = np.concatenate(([0], starts))
-    ends = np.concatenate((starts[1:], [n]))
+    assert np.array_equal(bounds, np.concatenate(([0], starts, [n])))
     dicts = [e.dictionary.to_pylist() for e in encs]
-    want_groups = [
-        (tuple(dicts[j][codes[j][want[s]] - 1] if codes[j][want[s]] else None
-               for j in range(len(cols))), int(s), int(e))
-        for s, e in zip(starts, ends) if ok[want[s]]]
-    assert groups == want_groups
+    first = want[bounds[:-1]]
+    assert keys(first) == [
+        tuple(dicts[j][codes[j][r] - 1] if codes[j][r] else None
+              for j in range(len(cols))) for r in first]
+
+
+def test_groups_of_no_rows_and_no_keys():
+    """With no key columns every row is one group, even when there is
+    none; with key columns and no rows there is no group."""
+    import pyarrow as pa
+
+    from t_digest_spark.operators.aggregate import _groups
+
+    order, bounds, keys = _groups([], 5)
+    assert order.tolist() == [0, 1, 2, 3, 4] and bounds.tolist() == [0, 5]
+    assert keys(order[bounds[:-1]]) == [()]
+    order, bounds, keys = _groups([], 0)
+    assert order.size == 0 and bounds.tolist() == [0, 0]
+    order, bounds, keys = _groups([pa.array([], pa.string())], 0)
+    assert order.size == 0 and bounds.tolist() == [0]
+    assert keys(order[bounds[:-1]]) == []
+
+
+def _batch(keys: dict, v, w=None):
+    import pyarrow as pa
+
+    cols = {**{k: pa.array(c) for k, c in keys.items()},
+            "v": pa.array(v, pa.float64())}
+    if w is not None:
+        cols["w"] = pa.array(w, pa.float64())
+    return pa.RecordBatch.from_pydict(cols)
+
+
+def _digest_of(v, w=None) -> bytes:
+    from t_digest_spark.operators.aggregate import DEFAULT_BUFFER
+
+    d = TDigest(100.0, buffer_size=DEFAULT_BUFFER, scale="K_2")
+    d.add_batch(np.asarray(v, np.float64),
+                None if w is None else np.asarray(w, np.float64))
+    return d.to_bytes(compress=False)
+
+
+@pytest.mark.parametrize("keyed", [True, False], ids=["keyed", "global"])
+def test_zero_row_batch_changes_nothing(keyed):
+    """A zero-row batch fed to ``SketchAccumulator`` adds nothing: alone
+    it gives no partial, and between non-empty batches the partials are
+    unchanged.  (A zero-row keyed batch used to raise IndexError.)"""
+    import pyarrow as pa
+
+    from t_digest_spark.operators.aggregate import (
+        SketchAccumulator, digest_codec,
+    )
+
+    rng = np.random.default_rng(3)
+    names = ["g"] if keyed else []
+
+    def batch(n):
+        keys = {"g": rng.choice(["a", "b", "c"], n).tolist()} \
+            if keyed else {}
+        return _batch(keys, rng.normal(size=n))
+
+    empty = _batch({"g": pa.array([], pa.string())} if keyed else {}, [])
+    full = [batch(300), batch(200)]
+    codec = digest_codec(100.0, "K_2")
+
+    def run(batches):
+        acc = SketchAccumulator(codec, names)
+        for b in batches:
+            acc.update(b)
+        return acc.finish()
+
+    assert run([empty]) is None
+    assert run([empty, full[0], empty, full[1], empty]).equals(run(full))
+
+
+@pytest.mark.parametrize("keyed", [True, False], ids=["keyed", "global"])
+def test_zero_row_partials_merge_like_none(keyed):
+    """Stage 2 skips zero-row partial batches: among non-empty ones they
+    change no output row; alone, a keyed partition emits nothing and a
+    global one emits one empty sketch."""
+    import pyarrow as pa
+
+    from t_digest_spark.operators.aggregate import (
+        _partition_merge_gen, digest_codec,
+    )
+
+    names = ["g"] if keyed else []
+    blobs = [_digest_of(np.arange(i, i + 40.0)) for i in range(3)]
+
+    def part(keys, bl):
+        cols = ([pa.array(keys, pa.string())] if keyed else []) + [
+            pa.array(bl, pa.binary()), pa.array([40] * len(bl), pa.int64())]
+        return pa.RecordBatch.from_arrays(cols, names=names + ["digest",
+                                                               "rows"])
+
+    merge = _partition_merge_gen(digest_codec(100.0, "K_2"), names)
+    full = [part(["a", "b"], blobs[:2]), part(["a"], blobs[2:])]
+    empty = part([], [])
+    (want,) = merge(iter(full))
+    (got,) = merge(iter([empty, full[0], empty, full[1]]))
+    assert got.equals(want)
+    out = list(merge(iter([empty])))
+    if keyed:
+        assert out == []
+    else:
+        assert [r["rows"] for r in out[0].to_pylist()] == [0]
+
+
+@pytest.mark.parametrize("weighted", [False, True],
+                         ids=["values", "weights"])
+def test_filter_after_grouping(weighted):
+    """Rows are grouped first and filtered after, in one batch: a key
+    whose every row is dropped (value NaN or NULL; weight 0, negative,
+    NaN or NULL) emits no row, and a key with some dropped rows counts
+    and digests only its kept ones."""
+    from t_digest_spark.operators.aggregate import (
+        SketchAccumulator, digest_codec,
+    )
+
+    nan = float("nan")
+    rng = np.random.default_rng(11)
+    g, v, w = [], [], []
+    for key, n in (("gone", 30), ("part", 200), ("full", 60)):
+        vals = rng.normal(size=n).tolist()
+        wts = rng.integers(1, 5, n).astype(float).tolist()
+        if key == "gone":
+            if weighted:
+                wts = [(0.0, -1.0, nan, None)[i % 4] for i in range(n)]
+            else:
+                vals = [(nan, None)[i % 2] for i in range(n)]
+        elif key == "part":
+            for i in range(0, n, 3):
+                vals[i] = (nan, None)[i % 2]
+            if weighted:
+                for i in range(1, n, 5):
+                    wts[i] = (0.0, -2.0, nan, None)[i % 4]
+        g += [key] * n
+        v += vals
+        w += wts
+    # interleave the keys so that every group is spread over the batch
+    perm = rng.permutation(len(g))
+    g, v, w = ([x[i] for i in perm] for x in (g, v, w))
+    acc = SketchAccumulator(digest_codec(100.0, "K_2"), ["g"], weighted)
+    acc.update(_batch({"g": g}, v, w if weighted else None))
+    out = {r["g"]: r for r in acc.finish().to_pylist()}
+    assert sorted(out) == ["full", "part"]
+    for key, row in out.items():
+        kept = [(x, y) for k, x, y in zip(g, v, w) if k == key
+                and x is not None and x == x
+                and (not weighted or (y is not None and y > 0))]
+        assert row["rows"] == len(kept)
+        xs = [x for x, _ in kept]
+        assert row["digest"] == _digest_of(
+            xs, [y for _, y in kept] if weighted else None), key
+    assert out["part"]["rows"] < 200
+
+
+def test_global_group_updates_once_per_batch():
+    """The global group feeds its sketch every batch's kept values in
+    one update, as a direct per-batch update does: a KLL sketch
+    compacts on every update, so parking the global group's batches
+    together would change its bytes."""
+    from t_digest_spark.functions.kll import KLLSketch
+    from t_digest_spark.operators.aggregate import (
+        SketchAccumulator, object_codec,
+    )
+
+    rng = np.random.default_rng(5)
+    codec = object_codec("kll", lambda: KLLSketch(50, seed=9),
+                         lambda sk, v, w: sk.update(v),
+                         KLLSketch.from_bytes)
+    acc = SketchAccumulator(codec, [])
+    want = KLLSketch(50, seed=9)
+    for n in (700, 500, 900):
+        v = rng.normal(size=n)
+        v[rng.random(n) < 0.1] = np.nan
+        acc.update(_batch({}, v))
+        want.update(v[~np.isnan(v)])
+    (row,) = acc.finish().to_pylist()
+    assert row["rows"] == want.n
+    assert row["kll"] == want.to_bytes()
+
+
+def test_shared_grouping_matches_own_grouping():
+    """Two accumulators fed one ``_batch_groups`` result (the fused
+    transcript kernel's shape: NaN latencies at conversation starts,
+    text lengths everywhere) give the same partials as two that group
+    each batch on their own."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from t_digest_spark.operators.aggregate import (
+        SketchAccumulator, _batch_groups, digest_codec,
+    )
+
+    rng = np.random.default_rng(7)
+    codec = digest_codec(100.0, "K_2")
+    names = ["role", "ts_hour"]
+    shared = [SketchAccumulator(codec, names) for _ in range(2)]
+    own = [SketchAccumulator(codec, names) for _ in range(2)]
+    for n in (3000, 800, 5000):
+        role = pa.array(rng.choice(["user", "assistant", "tool"], n))
+        ts = pa.array((1_700_000_000 + rng.integers(0, 20 * 3600, n))
+                      * 1_000_000, pa.timestamp("us", tz="UTC"))
+        keys = [role, pc.floor_temporal(ts, unit="hour")]
+        lat = rng.exponential(size=n)
+        lat[rng.random(n) < 0.1] = np.nan  # conversation starts
+        text = rng.integers(1, 2000, n).astype(np.float64)
+        batches = [pa.RecordBatch.from_arrays(
+            keys + [pa.array(x)], names=names + ["__v"]) for x in (lat, text)]
+        grouped = _batch_groups(keys, n)
+        for acc, b in zip(shared, batches):
+            acc.update(b, grouped)
+        for acc, b in zip(own, batches):
+            acc.update(b)
+    for a, b in zip(shared, own):
+        assert a.finish().equals(b.finish())
